@@ -694,10 +694,11 @@ def mojibake_sql_expr(col_sql: str) -> str:
     """ANSI-SQL twin of :func:`fix_mojibake` for oracle cross-checks:
     the same repair chain, same order, rendered as nested REPLACE
     calls over ``col_sql``. (Repair sequences contain no ASCII, so no
-    quote escaping is ever needed — asserted anyway.)"""
+    quote escaping is ever needed — checked anyway.)"""
     expr = col_sql
     for seq, ch in _MOJIBAKE_REPAIRS:
-        assert "'" not in seq and "'" not in ch
+        if "'" in seq or "'" in ch:
+            raise ValueError(f"repair {seq!r} -> {ch!r} needs SQL quoting")
         expr = f"replace({expr}, '{seq}', '{ch}')"
     return expr
 
@@ -812,7 +813,8 @@ def _bpe_train_local(words: list, n_merges: int,
                         pair_words[p].discard(idx)
         # a full greedy pass removes every (a, b) adjacency, so the
         # merged pair's count must be exactly zero now (delta soundness)
-        assert (a, b) not in pair_counts
+        if (a, b) in pair_counts:
+            raise RuntimeError(f"merged pair {(a, b)} still counted")
         pair_words.pop((a, b), None)
         for p in changed:
             n2 = pair_counts.get(p, 0)

@@ -10,14 +10,15 @@ checkpointing is a coarse partition bucket (e.g. daily ``warc_bucket``,
 
 * validates as one Spark job filtered to that bucket (partition pruning
   when the input is written partitioned by the bucket column);
-* writes verdicts to ``<out>/bucket=<v>/`` — the parquet ``_SUCCESS``
-  marker doubles as the checkpoint (idempotent overwrite per bucket =
-  exactly-once on rerun);
+* writes verdicts to ``<out>/bucket=<v>/`` (idempotent overwrite per
+  bucket = exactly-once on rerun);
 * collects metrics through ``df.observe`` (no extra pass) and writes a
   ``_lineage.json`` beside the data: inputs, counts, keyword histogram,
   wall time, engine path (column plan vs UDF), app id.
 
-A killed run resumes by rerunning: finished buckets are skipped.
+The checkpoint is the parquet ``_SUCCESS`` marker AND the lineage file:
+a bucket missing either is re-run. A killed run resumes by rerunning:
+one scan lists the bucket values, and finished buckets are skipped.
 """
 
 from __future__ import annotations
@@ -65,6 +66,7 @@ class CheckpointedValidationRun:
         self.bucket_col = bucket_col
         self.doc_col = doc_col
         self.key_cols = list(key_cols)
+        self.bucket_values: list = []  # every bucket value, set by pending_buckets
 
     # -- checkpoint state -----------------------------------------------------
 
@@ -72,25 +74,33 @@ class CheckpointedValidationRun:
         return f"{self.output_dir}/bucket={value}"
 
     def is_done(self, value, spark: SparkSession = None) -> bool:
+        """A bucket is done once both its ``_SUCCESS`` marker and its
+        ``_lineage.json`` exist: the lineage is written after the data, so
+        a run killed between the two re-runs the bucket."""
         spark = spark or SparkSession.getActiveSession()
-        return _fs_exists(spark, f"{self._bucket_dir(value)}/_SUCCESS")
+        target = self._bucket_dir(value)
+        return (_fs_exists(spark, f"{target}/_SUCCESS")
+                and _fs_exists(spark, f"{target}/_lineage.json"))
 
     def pending_buckets(self, df: DataFrame) -> list:
-        values = [r[0] for r in
-                  df.select(self.bucket_col).distinct().orderBy(self.bucket_col)
-                    .collect()]
-        return [v for v in values if not self.is_done(v, df.sparkSession)]
+        """Bucket values of ``df`` not yet done, in ``orderBy`` order.
+
+        One Spark job: the distinct values are collected once and sorted
+        on the driver, nulls first. ``self.bucket_values`` keeps every
+        value of the scan for :meth:`run`."""
+        values = [r[0] for r in df.select(self.bucket_col).distinct().collect()]
+        self.bucket_values = sorted(values, key=lambda v: (v is not None, v))
+        return [v for v in self.bucket_values
+                if not self.is_done(v, df.sparkSession)]
 
     # -- execution --------------------------------------------------------------
 
     def run(self, df: DataFrame) -> dict:
         """Validate every pending bucket; returns a run summary."""
-        pending = self.pending_buckets(df)
-        summary = {"buckets_total": 0, "buckets_run": 0, "docs": 0,
-                   "valid": 0, "skipped": []}
-        all_values = [r[0] for r in df.select(self.bucket_col).distinct().collect()]
-        summary["buckets_total"] = len(all_values)
-        for value in all_values:
+        pending = set(self.pending_buckets(df))
+        summary = {"buckets_total": len(self.bucket_values), "buckets_run": 0,
+                   "docs": 0, "valid": 0, "skipped": []}
+        for value in self.bucket_values:
             if value not in pending:
                 summary["skipped"].append(str(value))
                 continue

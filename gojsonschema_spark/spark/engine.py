@@ -9,6 +9,10 @@ Compile once on the driver, validate set-at-a-time over DataFrames:
 * fallback: schemas outside the Column subset run entirely on the
   interpreter UDF (same verdicts, exact semantics).
 
+A validator builds its predicate Columns and UDFs once, on first use, and
+every later call reuses them: the Column DAG crosses py4j once per
+validator, not once per validated DataFrame.
+
 Typical use::
 
     v = SparkValidator({"type": "object", "required": ["url"], ...}, draft="draft7")
@@ -18,6 +22,9 @@ Typical use::
 
 from __future__ import annotations
 
+from functools import cached_property
+from typing import Callable, NamedTuple
+
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..core.compiler import Draft, SchemaCompiler
@@ -25,6 +32,21 @@ from .columns import ColumnPlanCompiler, UnsupportedSchema
 from .udf import make_verdict_udf, make_violations_udf
 
 __all__ = ["SparkValidator", "MultiSchemaValidator"]
+
+
+class _Expressions(NamedTuple):
+    """A validator's Spark expressions, shared by all of its calls.
+
+    ``valid`` (the column-plan bit, None on the interpreter path) and
+    ``deep`` (the frontier reach detector, hybrid plans only) read the
+    ``__gjs_v`` variant. ``verdict`` fills only the `valid` field;
+    ``verdict_full`` also fills `violations` and exists only on the
+    interpreter path; ``violations`` is the pass-2 elaboration UDF."""
+    valid: Column | None
+    deep: Column | None
+    verdict: Callable[..., Column]
+    verdict_full: Callable[..., Column] | None
+    violations: Callable[..., Column]
 
 
 def _barrier(df: DataFrame, name: str, expr: Column) -> DataFrame:
@@ -65,6 +87,20 @@ class SparkValidator:
     def uses_column_plan(self) -> bool:
         return self.column_plan is not None
 
+    @cached_property
+    def _exprs(self) -> _Expressions:
+        # built on first use, not in __init__: compile-only callers have
+        # no SparkSession, and F.col needs one
+        var = F.col("__gjs_v")
+        plan = self.column_plan is not None
+        return _Expressions(
+            valid=self.column_plan(var) if plan else None,
+            deep=(self.frontier_plan(var) if self.frontier_plan is not None
+                  else None),
+            verdict=make_verdict_udf(self.compiled, with_violations=False),
+            verdict_full=None if plan else make_verdict_udf(self.compiled),
+            violations=make_violations_udf(self.compiled))
+
     # -- public API -----------------------------------------------------------
 
     def valid_column(self, variant_col: Column) -> Column:
@@ -84,41 +120,38 @@ class SparkValidator:
                       violations_col: str | None = "violations") -> DataFrame:
         """Validate a JSON-string column; appends `valid` (+ `violations`)."""
         doc = F.col(doc_col)
-        if self.column_plan is not None:
+        x = self._exprs
+        if x.valid is not None:
             # explode(array(x)) is a Generate node: a deliberate projection
             # barrier so (a) the variant parse materializes once instead of
             # being re-inlined per keyword by CollapseProject, and (b) the
             # pass-2 UDF receives the `valid` ATTRIBUTE, not a re-evaluated
             # (interpreted, non-codegen) copy of the whole predicate.
             df = _barrier(df, "__gjs_v", F.try_parse_json(doc))
-            if self.frontier_plan is None:
-                df = df.withColumn(valid_col, self.column_plan(F.col("__gjs_v")))
+            if x.deep is None:
+                df = df.withColumn(valid_col, x.valid)
             else:
                 # hybrid: rows nesting past the compile-time $ref unroll are
                 # re-verdicted by the exact interpreter; the UDF input is
                 # masked to NULL for shallow rows so Arrow ships (and Python
                 # parses) only the deep tail
-                df = _barrier(df, "__gjs_deep",
-                              self.frontier_plan(F.col("__gjs_v")))
-                verdict = make_verdict_udf(self.compiled, with_violations=False)
+                df = _barrier(df, "__gjs_deep", x.deep)
                 deep_doc = F.when(F.col("__gjs_deep"), doc)
                 df = df.withColumn(
                     valid_col,
-                    F.when(F.col("__gjs_deep"), verdict(deep_doc)["valid"])
-                     .otherwise(self.column_plan(F.col("__gjs_v"))))
+                    F.when(F.col("__gjs_deep"), x.verdict(deep_doc)["valid"])
+                     .otherwise(x.valid))
                 df = df.drop("__gjs_deep")
             if violations_col:
                 df = _barrier(df, "__gjs_valid", F.col(valid_col))
-                elaborate = make_violations_udf(self.compiled)
                 # mask the payload for valid rows: Arrow then ships nulls
                 # instead of document bodies for the (majority) happy path
                 masked = F.when(~F.col("__gjs_valid"), doc)
                 df = df.withColumn(violations_col,
-                                   elaborate(masked, F.col("__gjs_valid")))
+                                   x.violations(masked, F.col("__gjs_valid")))
                 df = df.drop("__gjs_valid")
             return df.drop("__gjs_v")
-        verdict = make_verdict_udf(self.compiled,
-                                   with_violations=bool(violations_col))
+        verdict = x.verdict_full if violations_col else x.verdict
         tmp = "__verdict__"
         df = df.withColumn(tmp, verdict(doc))
         df = df.withColumn(valid_col, F.col(f"{tmp}.valid"))
@@ -150,7 +183,7 @@ class SparkValidator:
             # stays in the CSE'd Project and the filter tests one boolean
             # attribute.
             out = _barrier(out, "__gjs_vbit", F.col("valid"))
-            elaborate = make_violations_udf(self.compiled)
+            elaborate = self._exprs.violations
             bad = (out.filter(~F.col("__gjs_vbit")).drop("__gjs_vbit")
                       .withColumn("violations",
                                   elaborate(F.col(doc_col), F.lit(False))))
@@ -193,19 +226,17 @@ class MultiSchemaValidator:
                       valid_col: str = "valid") -> DataFrame:
         doc, kind = F.col(doc_col), F.col(kind_col)
         df = _barrier(df, "__gjs_v", F.try_parse_json(doc))
-        var = F.col("__gjs_v")
         expr = None
         for k, v in self.validators.items():
-            if v.column_plan is not None and v.frontier_plan is None:
-                branch = v.column_plan(var)
-            elif v.column_plan is not None:
-                verdict = make_verdict_udf(v.compiled, with_violations=False)
-                deep = v.frontier_plan(var)
-                branch = (F.when(deep, verdict(F.when(deep & (kind == k), doc))["valid"])
-                           .otherwise(v.column_plan(var)))
+            x = v._exprs
+            if x.valid is not None and x.deep is None:
+                branch = x.valid
+            elif x.valid is not None:
+                masked = F.when(x.deep & (kind == k), doc)
+                branch = (F.when(x.deep, x.verdict(masked)["valid"])
+                           .otherwise(x.valid))
             else:
-                verdict = make_verdict_udf(v.compiled, with_violations=False)
-                branch = verdict(F.when(kind == k, doc))["valid"]
+                branch = x.verdict(F.when(kind == k, doc))["valid"]
             expr = (F.when(kind == F.lit(k), branch) if expr is None
                     else expr.when(kind == F.lit(k), branch))
         if expr is None:
@@ -228,9 +259,8 @@ class MultiSchemaValidator:
                           & ~F.col("__gjs_vbit")).drop("__gjs_vbit"))
         doc, kind = F.col(doc_col), F.col(kind_col)
         expr = None
-        for k in self.validators:
-            elaborate = make_violations_udf(self.validators[k].compiled)
-            branch = elaborate(F.when(kind == k, doc), F.lit(False))
+        for k, v in self.validators.items():
+            branch = v._exprs.violations(F.when(kind == k, doc), F.lit(False))
             expr = (F.when(kind == F.lit(k), branch) if expr is None
                     else expr.when(kind == F.lit(k), branch))
         unknown_row = F.array(F.struct(

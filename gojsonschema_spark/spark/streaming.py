@@ -27,8 +27,7 @@ __all__ = ["validate_stream", "validate_stream_to_parquet",
            "windowed_invalid_rate", "sessionize_stream",
            "sessionize_stream_event_time", "sessionize_batch",
            "sessionize_skew_guarded", "dedup_stream",
-           "dedup_stream_incremental", "windowed_drift_kl",
-           "windowed_drift"]
+           "dedup_stream_incremental", "windowed_drift"]
 
 
 def validate_stream(stream_df: DataFrame, validator: SparkValidator,
@@ -429,41 +428,6 @@ def dedup_stream_incremental(df: DataFrame, store: DataFrame,
                  .drop("__fp"))
 
 
-def windowed_drift_kl(stream_df: DataFrame, ts_col: str, col: str,
-                      baseline: DataFrame, window: str = "10 minutes",
-                      watermark: str = "10 minutes") -> DataFrame:
-    """Streaming distribution-drift monitor: KL(window || baseline) per
-    event-time window of a categorical column, against a STATIC baseline
-    distribution (e.g. yesterday's lang mix) — the live twin of
-    ops/dataset_checks.py::categorical_drift_kl for crawl monitoring.
-
-    Shape: stage 1 aggregates (window, category) counts (bounded state:
-    categories x open windows); the static baseline reduces to
-    |categories| probability rows and broadcast-joins; stage 2 chains a
-    second windowed aggregation (supported since Spark 3.4's multiple
-    stateful operators) computing
-    KL = sum(c*(ln c - ln q))/N - ln N  with N = sum(c),
-    which equals sum_c p_c ln(p_c/q_c) without needing N inside the
-    per-category term. Categories unseen in the baseline drop via the
-    inner join (the batch op's smoothed-support convention)."""
-    total = baseline.count()
-    q = (baseline.groupBy(col)
-         .agg((F.count(F.lit(1)) / F.lit(float(total))).alias("__q")))
-    counts = (stream_df
-              .withWatermark(ts_col, watermark)
-              .groupBy(F.window(F.col(ts_col), window).alias("__w"),
-                       F.col(col))
-              .agg(F.count(F.lit(1)).alias("__c")))
-    joined = counts.join(F.broadcast(q), on=col, how="inner")
-    term = F.col("__c") * (F.log(F.col("__c")) - F.log(F.col("__q")))
-    return (joined.groupBy("__w")
-            .agg(F.round(
-                F.sum(term) / F.sum("__c") - F.log(F.sum("__c")), 6)
-                .alias("kl_divergence"),
-                F.sum("__c").alias("n_docs"))
-            .withColumnRenamed("__w", "window"))
-
-
 def windowed_drift(stream_df: DataFrame, ts_col: str, col: str,
                    baseline: DataFrame, metric: str = "js",
                    window: str = "10 minutes",
@@ -479,8 +443,10 @@ def windowed_drift(stream_df: DataFrame, ts_col: str, col: str,
     = baseline mass of window-present categories) — no stream-side
     full-outer join needed, which streaming could not express.
 
-    Shape: stage 1 is the same bounded windowed count as
-    :func:`windowed_drift_kl`; the per-window metric then folds a
+    Shape: stage 1 aggregates (window, category) counts (bounded state:
+    categories x open windows); the static baseline reduces to
+    |categories| probability rows and broadcast-joins; the per-window
+    metric then folds a
     collect_list of (count, q) pairs — |categories| entries, interpreted
     HOF over a tiny array — because p = c/N needs N inside each
     logarithm, which a second chained aggregation cannot see."""

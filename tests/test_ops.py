@@ -2159,3 +2159,29 @@ def test_compression_ratio(spark):
                 len(zlib.compress(raw, 6)) / len(raw))
     assert got[0] < 0.05 < got[1] < got[2]
     assert got[3] == 1.0 and got[4] == 1.0
+
+
+@pytest.mark.parametrize("code", [
+    # a multipleOf/const literal with no exact 18-digit decimal form
+    "from fractions import Fraction\n"
+    "from gojsonschema_spark.spark.columns import _frac_str\n"
+    "_frac_str(Fraction(1, 3))",
+    # a mojibake repair that would need SQL quote escaping
+    "from gojsonschema_spark.ops import text\n"
+    "text._MOJIBAKE_REPAIRS = [(\"'\", 'x')]\n"
+    "text.mojibake_sql_expr('c')",
+])
+def test_invariant_checks_survive_python_O(code):
+    """Invariant checks are explicit raises, so ``python -O`` (which
+    strips ``assert``) still trips them."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    r = subprocess.run(
+        [sys.executable, "-O", "-c", "assert False, 'asserts on'\n" + code],
+        cwd=repo, capture_output=True, text=True, timeout=120)
+    assert r.returncode != 0
+    assert "asserts on" not in r.stderr, r.stderr
+    assert "ValueError" in r.stderr, r.stderr

@@ -596,3 +596,93 @@ def test_negative_zero_residual(spark):
     # double-typed pair [0,-0e0] happens to agree
     assert got == {"[0, -0]": False, "[0.0, -0.0]": False,
                    "[0, -0e0]": True, "[-0e0, -0.0]": True}
+
+
+def _count_calls(v, attr):
+    """Wrap the plan callable ``v.<attr>``; returns the list of its calls."""
+    calls, plan = [], getattr(v, attr)
+
+    def counted(var):
+        calls.append(var)
+        return plan(var)
+
+    setattr(v, attr, counted)
+    return calls
+
+
+def test_expressions_built_once_per_validator(spark):
+    """A validator emits its Column DAG once, however many DataFrames it
+    validates: validate_json, violations_table and MultiSchemaValidator's
+    dispatch all reuse the same expressions."""
+    from gojsonschema_spark.spark.engine import MultiSchemaValidator
+
+    schema = {"type": "object", "required": ["url"]}
+    v = SparkValidator(schema)
+    calls = _count_calls(v, "column_plan")
+    df = spark.createDataFrame([('{"url": "x"}',), ("{}",)], ["doc"])
+    for _ in range(3):
+        assert [r.valid for r in v.validate_json(df, "doc").collect()] == [True, False]
+        assert [r.keyword for r in
+                v.violations_table(df, "doc", []).collect()] == ["required"]
+    assert len(calls) == 1
+
+    mv = MultiSchemaValidator({"a": schema, "u": {"uniqueItems": True}})
+    assert mv.validators["u"].frontier_plan is not None
+    spied = {(k, attr): _count_calls(m, attr)
+             for k, m in mv.validators.items()
+             for attr in ("column_plan", "frontier_plan")
+             if getattr(m, attr) is not None}
+    kdf = spark.createDataFrame(
+        [("a", "{}"), ("u", "[[1], [1]]"), ("u", "[1, 2]")], ["kind", "doc"])
+    for _ in range(2):
+        assert [r.valid for r in
+                mv.validate_json(kdf, "doc", "kind").collect()] == [False, False, True]
+        assert sorted(r.kind for r in
+                      mv.violations_table(kdf, "doc", "kind", []).collect()) == ["a", "u"]
+    assert {k: len(c) for k, c in spied.items()} == {
+        ("a", "column_plan"): 1, ("u", "column_plan"): 1,
+        ("u", "frontier_plan"): 1}
+
+
+@pytest.mark.parametrize("schema,force_udf,path", [
+    ({"type": "object", "required": ["url"],
+      "properties": {"url": {"type": "string", "format": "uri"},
+                     "n": {"type": "integer", "minimum": 0}}}, False, "plain"),
+    ({"type": "object",
+      "properties": {"tags": {"type": "array", "uniqueItems": True}}},
+     False, "hybrid"),
+    ({"type": "object", "required": ["url"],
+      "properties": {"n": {"type": "integer", "minimum": 0}}}, True, "udf"),
+])
+def test_validator_reuse_matches_fresh_validator(spark, schema, force_udf, path):
+    """One validator applied to two DataFrames (different rows, different
+    doc column names) gives the verdicts and violations of a fresh
+    validator on each: the shared expressions bind to no input."""
+    reused = SparkValidator(schema, force_udf=force_udf)
+    assert {"plain": reused.uses_column_plan and reused.frontier_plan is None,
+            "hybrid": reused.frontier_plan is not None,
+            "udf": not reused.uses_column_plan}[path]
+    frames = [
+        spark.createDataFrame([
+            ("a", '{"url": "http://x.com", "n": 1}'),
+            ("b", '{"n": -1, "tags": [{"k": 1}, {"k": 1.0}]}'),
+            ("c", "{broken")], ["id", "doc"]),
+        spark.createDataFrame([
+            ("d", '{"url": "not a uri", "tags": [[1], [2]]}'),
+            ("e", '{"url": "http://y.org", "n": "x", "tags": [1, 1]}'),
+            ("f", "[]")], ["id", "body"]),
+    ]
+
+    def results(v, df, col):
+        verdicts = sorted((r.id, r.valid, sorted((x.keyword, x.field)
+                                                 for x in r.violations))
+                          for r in v.validate_json(df, col).collect())
+        table = sorted(tuple(r) for r in
+                       v.violations_table(df, col, ["id"]).collect())
+        return verdicts, table
+
+    for df, col in zip(frames, ("doc", "body")):
+        fresh = SparkValidator(schema, force_udf=force_udf)
+        got, want = results(reused, df, col), results(fresh, df, col)
+        assert got == want
+        assert any(not valid for _, valid, _ in got[0])

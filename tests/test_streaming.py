@@ -247,17 +247,21 @@ def test_streaming_dedup_incremental_vs_store(spark, tmp_path):
 
 
 def test_streaming_windowed_drift_kl(spark, tmp_path):
-    """Windowed KL drift vs a static baseline: the emitted window's value
-    must equal the batch op's KL over the same slice (chained streaming
-    aggregations; append-mode finalization driven by the watermark)."""
+    """windowed_drift(metric="kl") vs a static baseline: the emitted
+    window's value equals the batch op's KL over the same slice, with a
+    category ('zz') seen only in the window. KL normalizes the window
+    over ALL its categories, so zz's mass stays in N (8 docs, not 7)
+    while its term drops from the sum (append-mode finalization driven
+    by the watermark)."""
     from gojsonschema_spark.ops.dataset_checks import categorical_drift_kl
-    from gojsonschema_spark.spark.streaming import windowed_drift_kl
+    from gojsonschema_spark.spark.streaming import windowed_drift
 
     src = tmp_path / "in"
     src.mkdir()
-    # window [10:00, 10:10): skewed toward en (baseline is uniform en/de)
-    w1 = ([{"lang": "en", "ts": "2026-01-01T10:00:05"}] * 6
-          + [{"lang": "de", "ts": "2026-01-01T10:01:00"}] * 2)
+    # window [10:00, 10:10): {en:5, de:2, zz:1}
+    w1 = ([{"lang": "en", "ts": "2026-01-01T10:00:05"}] * 5
+          + [{"lang": "de", "ts": "2026-01-01T10:01:00"}] * 2
+          + [{"lang": "zz", "ts": "2026-01-01T10:02:00"}])
     with open(src / "b1.json", "w") as f:
         for r in w1:
             f.write(json.dumps(r) + "\n")
@@ -266,15 +270,15 @@ def test_streaming_windowed_drift_kl(spark, tmp_path):
         f.write(json.dumps({"lang": "en", "ts": "2026-01-01T12:00:00"}) + "\n")
 
     baseline = spark.createDataFrame(
-        [("en",)] * 5 + [("de",)] * 5, ["lang"])
+        [("en",)] * 4 + [("de",)] * 4 + [("fr",)] * 2, ["lang"])
 
     stream = (spark.readStream
               .schema(StructType([StructField("lang", StringType()),
                                   StructField("ts", TimestampType())]))
               .option("maxFilesPerTrigger", 1)
               .json(str(src)))
-    out = windowed_drift_kl(stream, "ts", "lang", baseline,
-                            window="10 minutes", watermark="5 minutes")
+    out = windowed_drift(stream, "ts", "lang", baseline, metric="kl",
+                         window="10 minutes", watermark="5 minutes")
     q = (out.writeStream.format("memory").queryName("drift")
          .outputMode("append").start())
     try:
@@ -286,8 +290,9 @@ def test_streaming_windowed_drift_kl(spark, tmp_path):
         assert key in got, rows
         kl, n = got[key]
         assert n == 8
+        assert kl == pytest.approx(0.161429, abs=1e-6)
         w1_df = spark.createDataFrame(
-            [("en",)] * 6 + [("de",)] * 2, ["lang"])
+            [("en",)] * 5 + [("de",)] * 2 + [("zz",)], ["lang"])
         want = categorical_drift_kl(w1_df, baseline, "lang").collect()[0][0]
         assert abs(kl - want) < 1e-6, (kl, want)
     finally:
