@@ -44,6 +44,8 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (DoubleType, LongType, StructField,
                                StructType)
 
+from .text import tokenize
+
 __all__ = [
     "hashed_feature_ids",
     "train_quality_classifier",
@@ -77,10 +79,8 @@ def hashed_feature_ids(text_col: str, dim: int,
     (not NULL) — the Arrow consumers (training partials,
     margin_column) iterate the arrays and must never see None."""
     _check_dim(dim)
-    text = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
-    toks = F.array_remove(F.split(text, r"\s+"), "")
     fids = F.transform(
-        toks,
+        _tokens_for_fids(text_col, lowercase),
         lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10)
         .cast("long") % dim)
     return F.coalesce(fids, F.array().cast("array<bigint>"))
@@ -92,7 +92,7 @@ def _tokens_for_fids(text_col: str, lowercase: bool) -> Column:
     as a plain scalar expression (whole-stage codegen) instead of
     paying the interpreted per-element ``transform`` lambda."""
     text = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
-    return F.array_remove(F.split(text, r"\s+"), "")
+    return tokenize(text)
 
 
 def _fid_of(tok: Column, dim: int) -> Column:

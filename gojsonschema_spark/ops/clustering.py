@@ -39,16 +39,9 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (ArrayType, DoubleType, IntegerType, LongType,
                                StructField, StructType)
 
-from gojsonschema_spark.ops.dedup import _cosine
+from gojsonschema_spark.ops.similarity import _cosine, _sq_dist
 
 __all__ = ["kmeans_assign", "kmeans_fit", "semdedup"]
-
-
-def _sqdist(v: Column, c: Column) -> Column:
-    """Squared L2 distance as a single fold — the native/SQL-twin
-    formulation (sum((x-c)^2) in element order)."""
-    return F.aggregate(F.zip_with(v, c, lambda x, y: (x - y) * (x - y)),
-                       F.lit(0.0), lambda acc, d: acc + d)
 
 
 def kmeans_assign(df: DataFrame, centroids: Sequence[Sequence[float]],
@@ -77,7 +70,7 @@ def kmeans_assign(df: DataFrame, centroids: Sequence[Sequence[float]],
             "cid int, cvec array<double>")
         v = df.select(F.col(id_col),
                       F.col(vec_col).cast("array<double>").alias("v"))
-        d2 = _sqdist(F.col("v"), F.col("cvec"))
+        d2 = _sq_dist(F.col("v"), F.col("cvec"))
         best = F.min(F.struct(F.col("d2"), F.col("cid"))).alias("best")
         return (v.join(F.broadcast(cdf))
                 .select(id_col, "cid", d2.alias("d2"))

@@ -16,6 +16,8 @@ Scale notes (designed for ~10^12-row tables on 1000 executors):
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, functions as F
 
 __all__ = [
@@ -25,6 +27,7 @@ __all__ = [
     "duplicate_keys",
     "uniqueness_ratio",
     "referential_orphans",
+    "categorical_drift",
     "categorical_drift_kl",
     "categorical_drift_psi",
     "categorical_drift_js",
@@ -185,27 +188,61 @@ def _cat_dist(df: DataFrame, col: str, p_name: str) -> DataFrame:
     return hist.select(col, (F.col("__n") / total).alias(p_name))
 
 
-def categorical_drift_kl(df_p: DataFrame, df_q: DataFrame, col: str,
-                         round_to: int = 6) -> DataFrame:
-    """KL(P || Q) over a categorical column; inner-join on categories seen
-    in both (standard smoothed-support convention for drift monitoring).
+def categorical_drift(df_p: DataFrame, df_q: DataFrame, col: str,
+                      metric: str, round_to: int = 6) -> DataFrame:
+    """Drift of P against Q over a categorical column, by ``metric``:
 
-    Each side reduces to |categories| rows before the join — the join is
-    broadcastable and never scales with the data."""
-    p = _cat_dist(df_p, col, "p")
-    q = _cat_dist(df_q, col, "q")
-    joined = p.join(F.broadcast(q), on=col, how="inner")
-    return joined.agg(
-        F.round(F.sum(F.col("p") * F.log(F.col("p") / F.col("q"))), round_to)
-        .alias("kl_divergence"))
+    * ``"kl"`` — KL(P || Q);
+    * ``"psi"`` — Population Stability Index, the ML-ops/risk-monitoring
+      standard (PSI = sum (p-q) * ln(p/q), the SYMMETRIZED KL;
+      conventional alert bands: < 0.1 stable, 0.1-0.25 moderate shift,
+      > 0.25 major shift);
+    * ``"js"`` — Jensen-Shannon divergence (natural log): JS = (KL(P||M)
+      + KL(Q||M)) / 2 with M = (P+Q)/2. Bounded in [0, ln 2] and
+      symmetric — the drift score that stays finite when a category
+      exists on only one side.
+
+    KL and PSI inner-join on categories seen in both (the standard
+    smoothed-support convention for drift monitoring, shared so the two
+    monitors stay comparable); JS joins FULL OUTER with null-as-zero, so
+    new or vanished categories contribute rather than silently dropping
+    out. Each side reduces to |categories| rows in one scan before the
+    join — the join is broadcastable and never scales with the data.
+    :func:`streaming.windowed_drift` is the live twin."""
+    if metric not in ("kl", "psi", "js"):
+        raise ValueError("metric must be kl|psi|js")
+    dist_p = _cat_dist(df_p, col, "p")
+    dist_q = _cat_dist(df_q, col, "q")
+    p, q = F.col("p"), F.col("q")
+    if metric == "js":
+        joined = (dist_p.join(dist_q, on=col, how="full_outer")
+                  .select(F.coalesce(p, F.lit(0.0)).alias("p"),
+                          F.coalesce(q, F.lit(0.0)).alias("q")))
+        m = (p + q) / 2
+
+        def kl_term(x):
+            return F.when(x > 0, x * F.log(x / m)).otherwise(F.lit(0.0))
+
+        return joined.agg(F.round(F.sum(kl_term(p) + kl_term(q)) / 2,
+                                  round_to).alias("js_divergence"))
+    joined = dist_p.join(F.broadcast(dist_q), on=col, how="inner")
+    weight = p if metric == "kl" else p - q
+    return joined.agg(F.round(F.sum(weight * F.log(p / q)), round_to)
+                      .alias("kl_divergence" if metric == "kl" else "psi"))
+
+
+# per-metric names, called by __spark_entry__.py's queries and bench.py
+categorical_drift_kl = partial(categorical_drift, metric="kl")
+categorical_drift_psi = partial(categorical_drift, metric="psi")
+categorical_drift_js = partial(categorical_drift, metric="js")
 
 
 def histogram_drift_kl(df_p: DataFrame, df_q: DataFrame, col: str,
                        bucket_width: float, round_to: int = 6) -> DataFrame:
     """KL drift over a numeric column bucketed by fixed width."""
     b = (F.floor(F.col(col) / F.lit(bucket_width))).alias("bucket")
-    return categorical_drift_kl(df_p.select(b), df_q.select(b), "bucket",
-                                round_to=round_to)
+    return categorical_drift(df_p.select(b), df_q.select(b), "bucket", "kl",
+                             round_to)
 
 
 def histogram_drift_ks(df_p: DataFrame, df_q: DataFrame, col: str,
@@ -237,46 +274,6 @@ def histogram_drift_ks(df_p: DataFrame, df_q: DataFrame, col: str,
     diff = F.abs(F.sum("p").over(w) - F.sum("q").over(w))
     return (joined.select(diff.alias("d"))
             .agg(F.round(F.max("d"), round_to).alias("ks_statistic")))
-
-
-def categorical_drift_psi(df_p: DataFrame, df_q: DataFrame, col: str,
-                          round_to: int = 6) -> DataFrame:
-    """Population Stability Index over a categorical column — the
-    ML-ops/risk-monitoring standard (PSI = sum (p-q) * ln(p/q), the
-    SYMMETRIZED KL; conventional alert bands: < 0.1 stable, 0.1-0.25
-    moderate shift, > 0.25 major shift). Same one-scan-per-side
-    |categories|-row shape as :func:`categorical_drift_kl`; categories
-    seen on both sides (smoothed-support convention, shared with the
-    KL op so the two monitors stay comparable)."""
-    p = _cat_dist(df_p, col, "p")
-    q = _cat_dist(df_q, col, "q")
-    joined = p.join(F.broadcast(q), on=col, how="inner")
-    return joined.agg(
-        F.round(F.sum((F.col("p") - F.col("q"))
-                      * F.log(F.col("p") / F.col("q"))), round_to)
-        .alias("psi"))
-
-
-def categorical_drift_js(df_p: DataFrame, df_q: DataFrame, col: str,
-                         round_to: int = 6) -> DataFrame:
-    """Jensen-Shannon divergence (natural log) over a categorical
-    column: JS = (KL(P||M) + KL(Q||M)) / 2 with M = (P+Q)/2. Bounded in
-    [0, ln 2] and symmetric — the drift score that stays finite when a
-    category exists on only one side, so the join is FULL OUTER with
-    null-as-zero (unlike KL/PSI's both-sides convention) and new or
-    vanished categories contribute rather than silently dropping out."""
-    p = _cat_dist(df_p, col, "p")
-    q = _cat_dist(df_q, col, "q")
-    joined = (p.join(q, on=col, how="full_outer")
-              .select(F.coalesce("p", F.lit(0.0)).alias("p"),
-                      F.coalesce("q", F.lit(0.0)).alias("q")))
-    m = (F.col("p") + F.col("q")) / 2
-    term = (F.when(F.col("p") > 0,
-                   F.col("p") * F.log(F.col("p") / m)).otherwise(F.lit(0.0))
-            + F.when(F.col("q") > 0,
-                     F.col("q") * F.log(F.col("q") / m)).otherwise(F.lit(0.0)))
-    return joined.agg(
-        F.round(F.sum(term) / 2, round_to).alias("js_divergence"))
 
 
 def hash_split(df: DataFrame, id_col: str,

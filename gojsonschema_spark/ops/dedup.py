@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .similarity import _cosine
 from .text import normalize_text, tokenize
 
 __all__ = ["exact_duplicates", "exact_dedup_keep_canonical", "shingles",
@@ -259,15 +260,6 @@ def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame,
     jac = F.round(inter / F.greatest(union, F.lit(1)), round_to)
     return (joined.select("key_a", "key_b", jac.alias("jaccard"))
                   .filter(F.col("jaccard") >= threshold))
-
-
-def _cosine(va: Column, vb: Column) -> Column:
-    dot = F.aggregate(F.zip_with(va, vb, lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, v: acc + v)
-    norm = lambda a: F.sqrt(F.aggregate(a, F.lit(0.0),
-                                        lambda acc, v: acc + v * v))
-    return dot / (F.greatest(norm(va), F.lit(1e-12)) *
-                  F.greatest(norm(vb), F.lit(1e-12)))
 
 
 def embedding_near_dups(df: DataFrame, threshold: float = 0.99,

@@ -257,8 +257,7 @@ def embedding_dedup_incremental(new_df: DataFrame, store_df: DataFrame,
     multiples), so recall at the near-dup threshold is high and gated
     in tests; shuffles carry (key, sig) pairs plus the bucket-local
     vectors."""
-    from .dedup import _cosine
-    from .similarity import hyperplane_signature
+    from .similarity import _cosine, hyperplane_signature
 
     sig = hyperplane_signature(F.col(vec_col), planes)
     new_s = new_df.select(F.col(key_col).alias("k"),

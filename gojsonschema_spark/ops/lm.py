@@ -33,6 +33,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 
+from .text import tokenize
+
 __all__ = ["BackoffLM", "ngram_counts", "lm_train", "lm_score",
            "lm_save", "lm_load", "perplexity_buckets"]
 
@@ -44,9 +46,7 @@ _BROADCAST_ROWS = 3_000_000
 
 def _tokens(text_col: str, lowercase: bool) -> F.Column:
     text = F.col(text_col)
-    if lowercase:
-        text = F.lower(text)
-    return F.array_remove(F.split(text, r"\s+"), "")
+    return tokenize(F.lower(text) if lowercase else text)
 
 
 def ngram_counts(df: DataFrame, n: int, text_col: str = "text",

@@ -27,15 +27,18 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
+def _cosine(a: Column, b: Column) -> Column:
+    return _dot(a, b) / (F.greatest(_norm(a), F.lit(1e-12)) *
+                         F.greatest(_norm(b), F.lit(1e-12)))
+
+
 def cosine_to_query(df: DataFrame, query_vec: list[float],
                     vec_col: str = "embedding", round_to: int = 6) -> DataFrame:
     """Append cosine similarity to a fixed query vector (driver literal —
     broadcast with the plan, no join)."""
     q = F.lit(query_vec).cast("array<double>")
     v = F.col(vec_col).cast("array<double>")
-    cos = _dot(v, q) / (F.greatest(_norm(v), F.lit(1e-12)) *
-                        F.greatest(_norm(q), F.lit(1e-12)))
-    return df.withColumn("cosine", F.round(cos, round_to))
+    return df.withColumn("cosine", F.round(_cosine(v, q), round_to))
 
 
 def brute_force_topk(df: DataFrame, query_vec: list[float], k: int = 10,
@@ -93,6 +96,7 @@ def hyperplane_signature(vec: Column, planes: list[list[float]]) -> Column:
 # centroid matrix ever reaches the driver.
 
 def _sq_dist(a: Column, b: Column) -> Column:
+    """Squared L2 distance as one fold: sum((x-y)^2) in element order."""
     return F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
                        F.lit(0.0), lambda acc, v: acc + v)
 

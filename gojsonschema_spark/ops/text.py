@@ -36,7 +36,7 @@ _STOPWORDS = ("the", "a", "and", "of", "to", "in", "is", "it", "that", "for")
 
 def tokenize(text: Column) -> Column:
     """Whitespace tokenization (split on runs of whitespace)."""
-    return F.filter(F.split(text, r"\s+"), lambda t: t != "")
+    return F.array_remove(F.split(text, r"\s+"), "")
 
 
 def token_count(df: DataFrame, text_col: str = "text") -> Column:
@@ -62,7 +62,7 @@ def quality_score(df: DataFrame, text_col: str = "text",
     * ``mean_tok_len`` — avg token length
     """
     text = F.col(text_col)
-    toks = F.array_remove(F.split(text, r"\s+"), "")  # native tokenize
+    toks = tokenize(text)
     n_tok = F.size(toks)
     n_chars = F.length(text)
     punct = n_chars - F.length(F.regexp_replace(text, r"[^\w\s]", ""))
@@ -208,8 +208,8 @@ def repetition_metrics(df: DataFrame, text_col: str = "text",
     paras = F.filter(F.transform(F.split(text, r"\n{2,}"),
                                  lambda p: F.trim(p)),
                      lambda p: p != "")
-    # tokens: native only (array_remove drops the empty-string artifacts)
-    toks = F.array_remove(F.split(F.lower(text), r"\s+"), "")
+    # tokens: native only (tokenize is array_remove, no lambda)
+    toks = tokenize(F.lower(text))
 
     def _chars(arr):
         return F.length(F.array_join(arr, ""))
@@ -331,7 +331,7 @@ def gopher_quality_filter(df: DataFrame, text_col: str = "text",
                              ngram_dups=tuple(dups),
                              prunable_barrier=all_vacuous)
     text = F.col(text_col)
-    toks_lower = F.array_remove(F.split(F.lower(text), r"\s+"), "")
+    toks_lower = tokenize(F.lower(text))
     stop_hits = F.size(F.array_intersect(
         toks_lower, F.array(*[F.lit(w) for w in stopwords])))
     symbols = F.regexp_count(text, F.lit(r"#|\.\.\."))
@@ -579,7 +579,7 @@ def c4_quality_filter(df: DataFrame, text_col: str = "text",
 
     def _line_ok(line: Column) -> Column:
         t = F.trim(line)
-        words = F.size(F.array_remove(F.split(t, r"\s+"), ""))
+        words = F.size(tokenize(t))
         ends = reduce(or_, [t.endswith(F.lit(p)) for p in C4_TERMINAL_PUNCT])
         clean = reduce(and_, [~F.lower(t).contains(F.lit(term.lower()))
                               for term in line_drop_terms], F.lit(True))
@@ -594,7 +594,7 @@ def c4_quality_filter(df: DataFrame, text_col: str = "text",
         "n_lines_kept": F.size(kept),
         "n_sentences": n_sentences,
     })
-    toks_lower = F.array_remove(F.split(F.lower(text), r"\s+"), "")
+    toks_lower = tokenize(F.lower(text))
     rules = {
         "ok_sentences": F.col("n_sentences") >= min_sentences,
         "ok_no_lorem_ipsum": ~F.lower(text).contains("lorem ipsum"),
@@ -620,7 +620,7 @@ def token_vocab(df: DataFrame, text_col: str = "text",
     deterministic (count desc, token asc) tiebreak — Catalyst plans it
     as TakeOrderedAndProject, never a global sort."""
     text = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
-    toks = F.explode(F.array_remove(F.split(text, r"\s+"), ""))
+    toks = F.explode(tokenize(text))
     counts = (df.select(toks.alias("token"))
               .groupBy("token").agg(F.count(F.lit(1)).alias("n")))
     if min_count > 1:
@@ -733,8 +733,7 @@ def bpe_pair_counts(df: DataFrame, text_col: str = "text",
     interpreted fold pass per merge, per unique word). Pair extraction
     is native: arrays_zip of the two shifted slices, exploded, summed."""
     text = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
-    words = (df.select(F.explode(F.array_remove(F.split(text, r"\s+"), ""))
-                       .alias("word"))
+    words = (df.select(F.explode(tokenize(text)).alias("word"))
              .groupBy("word").agg(F.count(F.lit(1)).alias("freq")))
     syms = F.split(F.col("word"), "")
     for a, b in merges:
@@ -850,8 +849,7 @@ def bpe_train(df: DataFrame, n_merges: int, text_col: str = "text",
     stop early when the best pair drops below ``min_count`` and produce
     identical merge lists (equivalence pinned in tests)."""
     text = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
-    cur = (df.select(F.explode(F.array_remove(F.split(text, r"\s+"), ""))
-                     .alias("word"))
+    cur = (df.select(F.explode(tokenize(text)).alias("word"))
            .groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
            .withColumn("syms", F.split(F.col("word"), ""))
            .localCheckpoint(eager=True))
@@ -912,7 +910,7 @@ def _bpe_words(text_col: str, lowercase: bool) -> Column:
     byte-identical word arrays by construction (Python's ``\\s``/
     ``str.lower`` have Unicode edge cases Java's do not)."""
     text = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
-    return F.array_remove(F.split(text, r"\s+"), "")
+    return tokenize(text)
 
 
 def bpe_encode(df: DataFrame, merges, text_col: str = "text",

@@ -182,12 +182,7 @@ def _remove_dot_segments(path: Column) -> Column:
     """RFC 3986 §5.2.4 over an absolute path: fold segments left to
     right, ``..`` pops (clamped at root), ``.`` drops. One ``aggregate``
     pass (CodegenFallback, but O(segments) per link and only on the
-    relative-href branches) — guarded by a NATIVE dot-segment test:
-    when no segment equals ``.`` or ``..`` the fold appends every
-    segment unchanged, so its result is provably
-    ``regexp_replace('/' + path, '^//+', '/')`` (join(split(p)) == p;
-    the trailing-dot re-add branch cannot fire) and the interpreted
-    lambda is skipped for the overwhelmingly-common clean path."""
+    relative-href branches)."""
     segs = F.split(path, "/")
     folded = F.aggregate(
         segs, F.array().cast("array<string>"),
@@ -201,9 +196,7 @@ def _remove_dot_segments(path: Column) -> Column:
     out = F.when(path.rlike(r"(^|/)\.\.?$") & ~out.endswith("/"),
                  F.concat(out, F.lit("/"))).otherwise(out)
     # folding eats the leading empty segment's slash; normalize doubles
-    out = F.regexp_replace(out, "^//+", "/")
-    fast = F.regexp_replace(F.concat(F.lit("/"), path), "^//+", "/")
-    return F.when(path.rlike(r"(^|/)\.\.?(/|$)"), out).otherwise(fast)
+    return F.regexp_replace(out, "^//+", "/")
 
 
 def host_quality_rollup(df, host_col: str = "host",
@@ -236,9 +229,9 @@ def host_quality_rollup(df, host_col: str = "host",
     """
     from pyspark.sql import functions as F
 
-    from gojsonschema_spark.ops.text import fingerprint
+    from gojsonschema_spark.ops.text import fingerprint, tokenize
 
-    toks = F.array_remove(F.split(F.col(text_col), r"\s+"), "")
+    toks = tokenize(F.col(text_col))
     n_tok = F.size(toks)
     base = df.select(
         F.col(host_col).alias("host"),

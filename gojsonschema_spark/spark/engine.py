@@ -9,6 +9,11 @@ Compile once on the driver, validate set-at-a-time over DataFrames:
 * fallback: schemas outside the Column subset run entirely on the
   interpreter UDF (same verdicts, exact semantics).
 
+One dispatch (:func:`_dispatch`) serves every entry point: one branch for
+:class:`SparkValidator` and ``streaming.validate_stream``, one per kind for
+:class:`MultiSchemaValidator`. Each branch takes the column plan, the
+hybrid plan (the interpreter re-verdicts frontier rows) or the fallback.
+
 A validator builds its predicate Columns and UDFs once, on first use, and
 every later call reuses them: the Column DAG crosses py4j once per
 validator, not once per validated DataFrame.
@@ -53,6 +58,101 @@ def _barrier(df: DataFrame, name: str, expr: Column) -> DataFrame:
     """Materialize ``expr`` as column ``name`` behind a Generate node so
     CollapseProject cannot re-inline it into every consumer."""
     return df.select("*", F.explode(F.array(expr)).alias(name))
+
+
+def _case(pairs: list, otherwise: Column | None = None) -> Column:
+    """CASE WHEN cond THEN value ... ELSE otherwise END over ``(cond,
+    value)`` pairs; the single-schema branch (cond None) is its value."""
+    expr = None
+    for cond, value in pairs:
+        if cond is None:
+            return value
+        expr = F.when(cond, value) if expr is None else expr.when(cond, value)
+    if expr is None:
+        return F.lit(None).cast("boolean") if otherwise is None else otherwise
+    return expr if otherwise is None else expr.otherwise(otherwise)
+
+
+def _dispatch(df: DataFrame, doc_col: str, branches: list,
+              valid_col: str, violations_col: str | None = None,
+              otherwise: Column | None = None) -> DataFrame:
+    """Append ``valid_col`` (+ ``violations_col``) for the branch whose
+    condition holds on each row; ``otherwise`` decides the rest."""
+    doc = F.col(doc_col)
+    lone_cond, lone = branches[0] if len(branches) == 1 else (True, None)
+    if lone_cond is None and lone.valid is None:
+        # interpreter-only schema: one UDF pass fills both fields, so an
+        # invalid document is parsed once, not again by a pass 2
+        verdict = lone.verdict_full if violations_col else lone.verdict
+        df = df.withColumn("__verdict__", verdict(doc))
+        df = df.withColumn(valid_col, F.col("__verdict__.valid"))
+        if violations_col:
+            df = df.withColumn(violations_col, F.col("__verdict__.violations"))
+        return df.drop("__verdict__")
+    # explode(array(x)) is a Generate node: a deliberate projection
+    # barrier so (a) the variant parse materializes once instead of
+    # being re-inlined per keyword by CollapseProject, and (b) the
+    # pass-2 UDF receives the `valid` ATTRIBUTE, not a re-evaluated
+    # (interpreted, non-codegen) copy of the whole predicate.
+    df = _barrier(df, "__gjs_v", F.try_parse_json(doc))
+    hybrid = [(c, x.deep) for c, x in branches if x.deep is not None]
+    deep = F.col("__gjs_deep")
+    if hybrid:
+        # hybrid: rows nesting past the compile-time $ref unroll are
+        # re-verdicted by the exact interpreter; the UDF input is
+        # masked to NULL for shallow rows so Arrow ships (and Python
+        # parses) only the deep tail
+        df = _barrier(df, "__gjs_deep", _case(hybrid))
+
+    def valid(cond, x):
+        if x.valid is None:
+            return x.verdict(_case([(cond, doc)]))["valid"]
+        if x.deep is None:
+            return x.valid
+        deep_doc = F.when(deep, _case([(cond, doc)]))
+        return F.when(deep, x.verdict(deep_doc)["valid"]).otherwise(x.valid)
+
+    df = df.withColumn(valid_col,
+                       _case([(c, valid(c, x)) for c, x in branches],
+                             otherwise))
+    if hybrid:
+        df = df.drop("__gjs_deep")
+    if violations_col:
+        df = _barrier(df, "__gjs_valid", F.col(valid_col))
+        # mask the payload for valid rows: Arrow then ships nulls
+        # instead of document bodies for the (majority) happy path
+        bit = F.col("__gjs_valid")
+        df = df.withColumn(violations_col, _case(
+            [(c, x.violations(F.when(~bit, _case([(c, doc)])), bit))
+             for c, x in branches]))
+        df = df.drop("__gjs_valid")
+    return df.drop("__gjs_v")
+
+
+def _elaborate_invalid(out: DataFrame, doc_col: str, branches: list,
+                       otherwise: Column | None = None) -> DataFrame:
+    """The rows of ``out`` whose `valid` bit is False, with `violations`
+    from their branch's pass-2 UDF."""
+    # barrier the bit BEFORE filtering: a bare filter(~valid) lets
+    # PushPredicateThroughNonJoin substitute the whole predicate into a
+    # FilterExec, which (unlike ProjectExec) performs NO subexpression
+    # elimination — the variant->map conversion then re-evaluates once
+    # per keyword reference (measured 3x the pass-1 cost at 200k docs).
+    # Behind the Generate the predicate stays in the CSE'd Project and
+    # the filter tests one boolean attribute. A NULL bit (an unknown kind
+    # under on_unknown="null") fails it too.
+    out = _barrier(out, "__gjs_vbit", F.col("valid"))
+    bad = out.filter(~F.col("__gjs_vbit")).drop("__gjs_vbit")
+    doc = F.col(doc_col)
+    return bad.withColumn("violations", _case(
+        [(c, x.violations(_case([(c, doc)]), F.lit(False)))
+         for c, x in branches], otherwise))
+
+
+def _flatten_violations(bad: DataFrame, *keys: str | Column) -> DataFrame:
+    """Exploded violations: ``keys`` and the fields of one violation."""
+    out = bad.select(*keys, F.explode("violations").alias("v"))
+    return out.select(*out.columns[:-1], "v.*")
 
 
 class SparkValidator:
@@ -119,45 +219,8 @@ class SparkValidator:
                       valid_col: str = "valid",
                       violations_col: str | None = "violations") -> DataFrame:
         """Validate a JSON-string column; appends `valid` (+ `violations`)."""
-        doc = F.col(doc_col)
-        x = self._exprs
-        if x.valid is not None:
-            # explode(array(x)) is a Generate node: a deliberate projection
-            # barrier so (a) the variant parse materializes once instead of
-            # being re-inlined per keyword by CollapseProject, and (b) the
-            # pass-2 UDF receives the `valid` ATTRIBUTE, not a re-evaluated
-            # (interpreted, non-codegen) copy of the whole predicate.
-            df = _barrier(df, "__gjs_v", F.try_parse_json(doc))
-            if x.deep is None:
-                df = df.withColumn(valid_col, x.valid)
-            else:
-                # hybrid: rows nesting past the compile-time $ref unroll are
-                # re-verdicted by the exact interpreter; the UDF input is
-                # masked to NULL for shallow rows so Arrow ships (and Python
-                # parses) only the deep tail
-                df = _barrier(df, "__gjs_deep", x.deep)
-                deep_doc = F.when(F.col("__gjs_deep"), doc)
-                df = df.withColumn(
-                    valid_col,
-                    F.when(F.col("__gjs_deep"), x.verdict(deep_doc)["valid"])
-                     .otherwise(x.valid))
-                df = df.drop("__gjs_deep")
-            if violations_col:
-                df = _barrier(df, "__gjs_valid", F.col(valid_col))
-                # mask the payload for valid rows: Arrow then ships nulls
-                # instead of document bodies for the (majority) happy path
-                masked = F.when(~F.col("__gjs_valid"), doc)
-                df = df.withColumn(violations_col,
-                                   x.violations(masked, F.col("__gjs_valid")))
-                df = df.drop("__gjs_valid")
-            return df.drop("__gjs_v")
-        verdict = x.verdict_full if violations_col else x.verdict
-        tmp = "__verdict__"
-        df = df.withColumn(tmp, verdict(doc))
-        df = df.withColumn(valid_col, F.col(f"{tmp}.valid"))
-        if violations_col:
-            df = df.withColumn(violations_col, F.col(f"{tmp}.violations"))
-        return df.drop(tmp)
+        return _dispatch(df, doc_col, [(None, self._exprs)], valid_col,
+                         violations_col)
 
     def validate_variant(self, df: DataFrame, variant_col: str,
                          valid_col: str = "valid") -> DataFrame:
@@ -172,30 +235,13 @@ class SparkValidator:
         rows BEFORE the interpreter UDF node, so Arrow ships and Python
         parses only the invalid subset — guaranteed by plan structure, not
         by hoping the filter pushes through the Python-eval node."""
-        if self.column_plan is not None:
-            out = self.validate_json(df, doc_col, violations_col=None)
-            # barrier the bit BEFORE filtering: a bare filter(~valid) lets
-            # PushPredicateThroughNonJoin substitute the whole predicate
-            # into a FilterExec, which (unlike ProjectExec) performs NO
-            # subexpression elimination — the variant->map conversion then
-            # re-evaluates once per keyword reference (measured 3x the
-            # pass-1 cost at 200k docs). Behind the Generate the predicate
-            # stays in the CSE'd Project and the filter tests one boolean
-            # attribute.
-            out = _barrier(out, "__gjs_vbit", F.col("valid"))
-            elaborate = self._exprs.violations
-            bad = (out.filter(~F.col("__gjs_vbit")).drop("__gjs_vbit")
-                      .withColumn("violations",
-                                  elaborate(F.col(doc_col), F.lit(False))))
-        else:
+        if self.column_plan is None:
             bad = self.validate_json(df, doc_col).filter(~F.col("valid"))
-        return (bad.select(*key_cols, F.explode("violations").alias("v"))
-                   .select(*key_cols,
-                           F.col("v.field").alias("field"),
-                           F.col("v.keyword").alias("keyword"),
-                           F.col("v.message").alias("message"),
-                           F.col("v.value").alias("value"),
-                           F.col("v.details").alias("details")))
+        else:
+            bad = _elaborate_invalid(
+                self.validate_json(df, doc_col, violations_col=None),
+                doc_col, [(None, self._exprs)])
+        return _flatten_violations(bad, *key_cols)
 
 
 class MultiSchemaValidator:
@@ -222,47 +268,24 @@ class MultiSchemaValidator:
         self.validators = {k: SparkValidator(s, **kw) for k, s in schemas.items()}
         self.on_unknown = on_unknown
 
+    def _branches(self, kind: Column) -> list:
+        return [(kind == F.lit(k), v._exprs) for k, v in self.validators.items()]
+
     def validate_json(self, df: DataFrame, doc_col: str, kind_col: str,
                       valid_col: str = "valid") -> DataFrame:
-        doc, kind = F.col(doc_col), F.col(kind_col)
-        df = _barrier(df, "__gjs_v", F.try_parse_json(doc))
-        expr = None
-        for k, v in self.validators.items():
-            x = v._exprs
-            if x.valid is not None and x.deep is None:
-                branch = x.valid
-            elif x.valid is not None:
-                masked = F.when(x.deep & (kind == k), doc)
-                branch = (F.when(x.deep, x.verdict(masked)["valid"])
-                           .otherwise(x.valid))
-            else:
-                branch = x.verdict(F.when(kind == k, doc))["valid"]
-            expr = (F.when(kind == F.lit(k), branch) if expr is None
-                    else expr.when(kind == F.lit(k), branch))
-        if expr is None:
-            expr = F.lit(None).cast("boolean")
-        if self.on_unknown != "null":
-            expr = expr.otherwise(F.lit(self.on_unknown == "valid"))
-        return df.withColumn(valid_col, expr).drop("__gjs_v")
+        unknown = (None if self.on_unknown == "null"
+                   else F.lit(self.on_unknown == "valid"))
+        return _dispatch(df, doc_col, self._branches(F.col(kind_col)),
+                         valid_col, otherwise=unknown)
 
     def violations_table(self, df: DataFrame, doc_col: str, kind_col: str,
                          key_cols: list[str]) -> DataFrame:
         """Exploded violations for the dispatched corpus, in ONE scan:
-        the dispatch valid bit prunes valid rows first (same barrier
-        discipline as SparkValidator.violations_table), then a CASE
+        the dispatch valid bit prunes valid rows first, then a CASE
         chain of per-kind elaboration UDFs runs over the invalid tail
-        with kind-masked payloads. A per-kind filter+union would rescan
-        the corpus once per kind."""
-        out = self.validate_json(df, doc_col, kind_col)
-        out = _barrier(out, "__gjs_vbit", F.col("valid"))
-        bad = (out.filter(F.col("__gjs_vbit").isNotNull()
-                          & ~F.col("__gjs_vbit")).drop("__gjs_vbit"))
-        doc, kind = F.col(doc_col), F.col(kind_col)
-        expr = None
-        for k, v in self.validators.items():
-            branch = v._exprs.violations(F.when(kind == k, doc), F.lit(False))
-            expr = (F.when(kind == F.lit(k), branch) if expr is None
-                    else expr.when(kind == F.lit(k), branch))
+        with kind-masked payloads (:func:`_elaborate_invalid`). A
+        per-kind filter+union would rescan the corpus once per kind."""
+        kind = F.col(kind_col)
         unknown_row = F.array(F.struct(
             F.lit("(root)").alias("field"),
             F.lit("unknown_kind").alias("keyword"),
@@ -271,13 +294,6 @@ class MultiSchemaValidator:
                      F.lit("'")).alias("message"),
             kind.alias("value"),
             F.create_map().cast("map<string,string>").alias("details")))
-        expr = (unknown_row if expr is None else expr.otherwise(unknown_row))
-        bad = bad.withColumn("violations", expr)
-        return (bad.select(*key_cols, kind.alias("kind"),
-                           F.explode("violations").alias("v"))
-                   .select(*key_cols, "kind",
-                           F.col("v.field").alias("field"),
-                           F.col("v.keyword").alias("keyword"),
-                           F.col("v.message").alias("message"),
-                           F.col("v.value").alias("value"),
-                           F.col("v.details").alias("details")))
+        bad = _elaborate_invalid(self.validate_json(df, doc_col, kind_col),
+                                 doc_col, self._branches(kind), unknown_row)
+        return _flatten_violations(bad, *key_cols, kind.alias("kind"))

@@ -34,19 +34,14 @@ def validate_stream(stream_df: DataFrame, validator: SparkValidator,
                     doc_col: str, valid_col: str = "valid") -> DataFrame:
     """Append the `valid` bit to a streaming DataFrame (stateless).
 
-    Hybrid plans (``frontier_plan`` set: cyclic $ref unroll, composite
-    uniqueItems, UDF formats in HOF positions) compile to an optimistic
-    SQL plan whose exactness depends on the interpreter re-verdicting
-    frontier rows — validate_json's masking logic is stateless and
-    stream-safe, so those validators route through it rather than
-    applying the optimistic column plan alone (which would silently mark
-    frontier rows valid)."""
-    if validator.column_plan is None or validator.frontier_plan is not None:
-        # interpreter / hybrid masking paths are stateless projections too
-        return validator.validate_json(stream_df, doc_col, valid_col,
-                                       violations_col=None)
-    v = F.try_parse_json(F.col(doc_col))
-    return stream_df.withColumn(valid_col, validator.column_plan(v))
+    This is ``validator.validate_json(..., violations_col=None)``: the
+    engine's one dispatch, whose Generate barriers and frontier masking
+    are stateless projections and so legal on streams. Hybrid plans
+    (cyclic $ref unroll, composite uniqueItems, UDF formats in HOF
+    positions) thereby re-verdict their frontier rows with the
+    interpreter instead of trusting the optimistic column plan."""
+    return validator.validate_json(stream_df, doc_col, valid_col,
+                                   violations_col=None)
 
 
 def validate_stream_to_parquet(stream_df: DataFrame,
@@ -434,7 +429,7 @@ def windowed_drift(stream_df: DataFrame, ts_col: str, col: str,
                    watermark: str = "10 minutes") -> DataFrame:
     """Generalized windowed drift vs a static baseline: ``metric`` is
     ``"kl"``, ``"psi"`` or ``"js"``, each the EXACT live twin of its
-    batch op (ops/dataset_checks.py categorical_drift_*) including the
+    batch op (ops/dataset_checks.py categorical_drift) including the
     support conventions — KL/PSI normalize the window distribution over
     ALL its categories and drop baseline-unseen ones from the sum
     (inner-support), while JS counts one-sided categories: a

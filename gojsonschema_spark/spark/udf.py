@@ -41,13 +41,13 @@ VERDICT_SCHEMA = StructType([
     StructField("violations", VIOLATION_SCHEMA),
 ])
 
-_PARSE_FAILED = [{
-    "field": "(root)",
-    "keyword": "invalid_document",
-    "message": "Document is not valid JSON",
-    "value": None,
-    "details": {},
-}]
+
+def _root_violation(keyword: str, message: str) -> list[dict]:
+    return [{"field": "(root)", "keyword": keyword, "message": message,
+             "value": None, "details": {}}]
+
+
+_PARSE_FAILED = _root_violation("invalid_document", "Document is not valid JSON")
 
 # Controlled verdict for documents whose validation exceeds the Python
 # recursion limit (instances nested thousands of levels deep). The Go
@@ -56,13 +56,8 @@ _PARSE_FAILED = [{
 # is a documented deviation (README "Differences from gojsonschema").
 # No-progress $ref cycles never reach this: the interpreter resolves them
 # to the greatest fixed point (core/interpreter.py _REF_PATH).
-_RECURSION_LIMIT = [{
-    "field": "(root)",
-    "keyword": "recursion_limit",
-    "message": "Document nesting exceeds the validation recursion limit",
-    "value": None,
-    "details": {},
-}]
+_RECURSION_LIMIT = _root_violation(
+    "recursion_limit", "Document nesting exceeds the validation recursion limit")
 
 _WORKER_RECURSION_LIMIT = 20000
 
@@ -122,33 +117,34 @@ def _violation_rows(result) -> list[dict]:
     return rows
 
 
+def _check(compiled: CompiledSchema, doc: str | None,
+           with_violations: bool = True) -> tuple[bool, list[dict]]:
+    """One document through the interpreter -> (valid, violation rows);
+    ``with_violations=False`` renders no rows for schema failures."""
+    if doc is None:
+        return False, _PARSE_FAILED
+    try:
+        instance = _loads(doc)
+    except (ValueError, RecursionError):
+        return False, _PARSE_FAILED
+    try:
+        result = validate_document(compiled, instance)
+    except RecursionError:
+        return False, _RECURSION_LIMIT
+    if result.valid():
+        return True, []
+    return False, _violation_rows(result) if with_violations else []
+
+
 def make_verdict_udf(compiled: CompiledSchema, with_violations: bool = True):
     """pandas UDF: json string -> struct(valid, violations)."""
-
-    def run(doc: str):
-        if doc is None:
-            return False, _PARSE_FAILED
-        try:
-            instance = _loads(doc)
-        except (ValueError, RecursionError):
-            return False, _PARSE_FAILED
-        try:
-            result = validate_document(compiled, instance)
-        except RecursionError:
-            return False, _RECURSION_LIMIT
-        if result.valid():
-            return True, []
-        return False, _violation_rows(result) if with_violations else []
 
     @pandas_udf(VERDICT_SCHEMA)
     def verdict(docs: pd.Series) -> pd.DataFrame:
         _raise_limit()
-        out_valid, out_viol = [], []
-        for doc in docs:
-            ok, viol = run(doc)
-            out_valid.append(ok)
-            out_viol.append(viol)
-        return pd.DataFrame({"valid": out_valid, "violations": out_viol})
+        checked = [_check(compiled, doc, with_violations) for doc in docs]
+        return pd.DataFrame({"valid": [ok for ok, _ in checked],
+                             "violations": [rows for _, rows in checked]})
 
     # semantically deterministic, but marked otherwise so Catalyst never
     # DUPLICATES the eval: filters derived from downstream operators
@@ -165,25 +161,11 @@ def make_violations_udf(compiled: CompiledSchema):
     this pass is proportional to the invalid subset.
     """
 
-    def run(doc: str, valid) -> list[dict]:
-        if valid:
-            return []
-        if doc is None:
-            return _PARSE_FAILED
-        try:
-            instance = _loads(doc)
-        except (ValueError, RecursionError):
-            return _PARSE_FAILED
-        try:
-            result = validate_document(compiled, instance)
-        except RecursionError:
-            return _RECURSION_LIMIT
-        return _violation_rows(result)
-
     @pandas_udf(VIOLATION_SCHEMA)
     def violations(docs: pd.Series, valid: pd.Series) -> pd.Series:
         _raise_limit()
-        return pd.Series([run(d, v) for d, v in zip(docs, valid)])
+        return pd.Series([[] if v else _check(compiled, d)[1]
+                          for d, v in zip(docs, valid)])
 
     # see make_verdict_udf: prevents Catalyst from cloning the eval node
     return violations.asNondeterministic()

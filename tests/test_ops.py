@@ -42,6 +42,54 @@ def test_dataset_checks(spark):
     assert kl2.kl_divergence > 0
 
 
+def test_tokenize_matches_filter_form(spark):
+    """tokenize (native array_remove) equals the interpreted filter form
+    it replaced on leading, trailing and repeated whitespace, on "" and
+    on NULL."""
+    texts = ["  lead", "trail \t", "a  \t\n b", "", "   ", None, "one"]
+    df = spark.createDataFrame([(t,) for t in texts], "t string")
+    old = F.filter(F.split(F.col("t"), r"\s+"), lambda x: x != "")
+    rows = df.select("t", tx.tokenize(F.col("t")).alias("new"),
+                     old.alias("old")).collect()
+    assert all(r.new == r.old for r in rows), rows
+    got = {r.t: r.new for r in rows}
+    assert got["a  \t\n b"] == ["a", "b"] and got["  lead"] == ["lead"]
+    assert got[""] == [] and got["   "] == [] and got[None] is None
+
+
+def test_categorical_drift_matches_per_metric_bodies(spark):
+    """categorical_drift(metric=...) equals the per-metric bodies it
+    merged when a category appears on one side only ('c' only in P, 'd'
+    only in Q): KL and PSI drop it, JS counts it."""
+    p_df = spark.createDataFrame([("a",)] * 3 + [("b",)] + [("c",)] * 2, ["g"])
+    q_df = spark.createDataFrame([("a",)] + [("b",)] * 3 + [("d",)] * 2, ["g"])
+    p = dc._cat_dist(p_df, "g", "p")
+    q = dc._cat_dist(q_df, "g", "q")
+    pc, qc = F.col("p"), F.col("q")
+    inner = p.join(q, on="g", how="inner")
+    outer = (p.join(q, on="g", how="full_outer")
+             .select(F.coalesce("p", F.lit(0.0)).alias("p"),
+                     F.coalesce("q", F.lit(0.0)).alias("q")))
+    m = (pc + qc) / 2
+    js_term = (F.when(pc > 0, pc * F.log(pc / m)).otherwise(F.lit(0.0))
+               + F.when(qc > 0, qc * F.log(qc / m)).otherwise(F.lit(0.0)))
+    old = {
+        "kl": inner.agg(F.round(F.sum(pc * F.log(pc / qc)), 6)),
+        "psi": inner.agg(F.round(F.sum((pc - qc) * F.log(pc / qc)), 6)),
+        "js": outer.agg(F.round(F.sum(js_term) / 2, 6)),
+    }
+    aliases = {"kl": dc.categorical_drift_kl, "psi": dc.categorical_drift_psi,
+               "js": dc.categorical_drift_js}
+    for metric, body in old.items():
+        want = body.collect()[0][0]
+        got = dc.categorical_drift(p_df, q_df, "g", metric).collect()[0][0]
+        assert got == want, (metric, got, want)
+        assert aliases[metric](p_df, q_df, "g").collect()[0][0] == want
+        assert want > 0
+    with pytest.raises(ValueError):
+        dc.categorical_drift(p_df, q_df, "g", "hellinger")
+
+
 def test_dedup_exact_and_minhash(spark):
     base = "the quick brown fox jumps over the lazy dog again and again"
     near = base + " extra"

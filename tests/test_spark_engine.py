@@ -410,8 +410,10 @@ def test_recursion_limit_verdict_not_job_crash(spark):
 
 
 def test_multi_schema_dispatch_verdicts(spark):
-    """MultiSchemaValidator: per-kind verdicts equal the single-schema
-    engine's, one shared parse, unknown kinds per on_unknown."""
+    """MultiSchemaValidator: per-kind verdicts and violations equal the
+    single-schema engine's on every path (column plan, hybrid with deep
+    rows, interpreter only), one shared parse, unknown kinds per
+    on_unknown."""
     from gojsonschema_spark.spark.engine import MultiSchemaValidator
 
     schemas = {
@@ -419,8 +421,12 @@ def test_multi_schema_dispatch_verdicts(spark):
                     "properties": {"title": {"type": "string", "minLength": 1}}},
         "product": {"type": "object",
                     "properties": {"price": {"type": "number", "minimum": 0}}},
-        # bignum multipleOf forces this kind off the column plan (udf branch)
+        # bignum multipleOf: overflowed values go to the frontier (hybrid)
         "metric": {"multipleOf": 0.0001},
+        # composite duplicates are decided by the interpreter (hybrid)
+        "tags": {"type": "array", "uniqueItems": True},
+        # a bound beyond double range has no column plan (interpreter only)
+        "huge": '{"maximum": 1e400}',
     }
     rows = [
         ("a1", "article", '{"title": "hello"}'),
@@ -430,24 +436,49 @@ def test_multi_schema_dispatch_verdicts(spark):
         ("p2", "product", '{"price": -1}'),
         ("m1", "metric", "19.9999999999999"),
         ("m2", "metric", "0.0002"),
+        ("t1", "tags", "[[1], [1]]"),
+        ("t2", "tags", "[[1], [2]]"),
+        ("t3", "tags", None),
+        ("h1", "huge", "1e500"),
+        ("h2", "huge", "5"),
+        ("h3", "huge", "{bad"),
         ("x1", "video", '{"anything": 1}'),
     ]
-    df = spark.createDataFrame(rows, ["id", "kind", "doc"])
+    df = spark.createDataFrame(rows, "id string, kind string, doc string")
 
     mv = MultiSchemaValidator(schemas)
+    paths = {k: (v.uses_column_plan, v.frontier_plan is not None)
+             for k, v in mv.validators.items()}
+    assert paths == {"article": (True, False), "product": (True, False),
+                     "metric": (True, True), "tags": (True, True),
+                     "huge": (False, False)}
     got = {r.id: r.valid for r in mv.validate_json(df, "doc", "kind").collect()}
 
+    def key(r):  # details is a map: make violation rows sortable
+        return tuple(sorted(x.items()) if isinstance(x, dict) else x
+                     for x in r)
+
     # expected: each kind through the single-schema engine
+    want_table = []
     for k, schema in schemas.items():
         v = SparkValidator(schema)
         sub = df.filter(F.col("kind") == k)
         for r in v.validate_json(sub, "doc", violations_col=None).collect():
             assert got[r.id] == r.valid, (r.id, got[r.id], r.valid)
+        want_table += [key((r.id, k, *r[1:])) for r in
+                       v.violations_table(sub, "doc", ["id"]).collect()]
+    assert [got[i] for i in ("t1", "t2", "t3", "h1", "h2", "h3")] == [
+        False, True, False, False, True, False]
     assert got["x1"] is None  # default on_unknown="null"
 
     strict = MultiSchemaValidator(schemas, on_unknown="invalid")
     got2 = {r.id: r.valid for r in strict.validate_json(df, "doc", "kind").collect()}
     assert got2["x1"] is False and got2["a1"] is True
+    table = sorted(key(r) for r in
+                   strict.violations_table(df, "doc", "kind", ["id"]).collect())
+    assert [t for t in table if t[0] != "x1"] == sorted(want_table)
+    assert [t[1:4] for t in table if t[0] == "x1"] == [
+        ("video", "(root)", "unknown_kind")]
 
     lax = MultiSchemaValidator(schemas, on_unknown="valid")
     got3 = {r.id: r.valid for r in lax.validate_json(df, "doc", "kind").collect()}

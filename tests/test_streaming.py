@@ -94,6 +94,50 @@ def test_streaming_hybrid_frontier(spark, tmp_path):
     assert got[rows[1]] is True
 
 
+@pytest.mark.parametrize("schema,force_udf,path", [
+    (SCHEMA, False, "plain"),
+    ({"uniqueItems": True}, False, "hybrid"),
+    (SCHEMA, True, "udf"),
+])
+def test_validate_stream_equals_validate_json(spark, tmp_path, schema,
+                                              force_udf, path):
+    """validate_stream is validate_json(violations_col=None) applied to a
+    stream: on each engine path the streamed verdicts equal the batch
+    verdicts of the same rows, malformed and NULL documents included."""
+    v = SparkValidator(schema, force_udf=force_udf)
+    assert {"plain": v.uses_column_plan and v.frontier_plan is None,
+            "hybrid": v.frontier_plan is not None,
+            "udf": not v.uses_column_plan}[path]
+    docs = [json.dumps({"url": "https://a.com"}), json.dumps({"url": "ftp://b"}),
+            "[[1], [1]]", "[[1], [2]]", "[1, 1]", "{broken", None]
+    src = tmp_path / "in"
+    src.mkdir()
+    with open(src / "b1.json", "w") as f:
+        for i, d in enumerate(docs):
+            f.write(json.dumps({"id": i, "doc": d}) + "\n")
+    row_schema = StructType([StructField("id", LongType()),
+                             StructField("doc", StringType())])
+    stream = spark.readStream.schema(row_schema).json(str(src))
+    q = (validate_stream(stream, v, "doc").writeStream.format("memory")
+         .queryName(f"stream_eq_{path}").outputMode("append").start())
+    try:
+        q.processAllAvailable()
+        got = sorted(tuple(r) for r in spark.sql(
+            f"select id, doc, valid from stream_eq_{path}").collect())
+    finally:
+        q.stop()
+    batch = spark.read.schema(row_schema).json(str(src))
+    want = sorted(tuple(r) for r in
+                  v.validate_json(batch, "doc", violations_col=None)
+                  .select("id", "doc", "valid").collect())
+    assert got == want
+    verdicts = {i: ok for i, _, ok in got}
+    assert len(verdicts) == len(docs)
+    assert verdicts[5] is False and verdicts[6] is False  # malformed, NULL
+    if path == "hybrid":
+        assert verdicts[2] is False and verdicts[3] is True  # deep rows
+
+
 def test_windowed_invalid_rate_builds(spark):
     # plan-construction check for the watermark + window rollup
     stream = (spark.readStream.format("rate").option("rowsPerSecond", "1").load()
