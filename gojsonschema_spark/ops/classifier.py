@@ -44,7 +44,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (DoubleType, LongType, StructField,
                                StructType)
 
-from .text import tokenize
+from .text import word_tokens
 
 __all__ = [
     "hashed_feature_ids",
@@ -80,19 +80,10 @@ def hashed_feature_ids(text_col: str, dim: int,
     margin_column) iterate the arrays and must never see None."""
     _check_dim(dim)
     fids = F.transform(
-        _tokens_for_fids(text_col, lowercase),
+        word_tokens(text_col, lowercase),
         lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10)
         .cast("long") % dim)
     return F.coalesce(fids, F.array().cast("array<bigint>"))
-
-
-def _tokens_for_fids(text_col: str, lowercase: bool) -> Column:
-    """The token array :func:`hashed_feature_ids` hashes — exposed so
-    row-wise consumers can explode the TOKENS and apply :func:`_fid_of`
-    as a plain scalar expression (whole-stage codegen) instead of
-    paying the interpreted per-element ``transform`` lambda."""
-    text = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
-    return tokenize(text)
 
 
 def _fid_of(tok: Column, dim: int) -> Column:
@@ -271,7 +262,7 @@ def score_quality_native(df: DataFrame, weights: DataFrame, dim: int,
     # element; explode_outer of an empty/NULL token array and of the
     # empty/NULL fid array both yield one NULL row)
     occ = (df.select(F.col(key_col).alias("key"),
-                     F.explode_outer(_tokens_for_fids(text_col, lowercase))
+                     F.explode_outer(word_tokens(text_col, lowercase))
                      .alias("t0"))
            .select("key", _fid_of(F.col("t0"), dim).alias("fid")))
     scored = (occ.join(F.broadcast(weights), "fid", "left")
@@ -592,7 +583,7 @@ def hashed_tfidf_sparse(df: DataFrame, dim: int, key_col: str,
     # interpreted transform lambda (see score_quality_native); plain
     # explode drops empty/NULL arrays on both formulations
     occ = (df.select(F.col(key_col).alias("key"),
-                     F.explode(_tokens_for_fids(text_col, lowercase))
+                     F.explode(word_tokens(text_col, lowercase))
                      .alias("t0"))
            .select("key", _fid_of(F.col("t0"), dim).alias("fid")))
     tf = occ.groupBy("key", "fid").agg(F.count(F.lit(1)).alias("tf"))

@@ -33,7 +33,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 
-from .text import tokenize
+from .text import word_tokens
 
 __all__ = ["BackoffLM", "ngram_counts", "lm_train", "lm_score",
            "lm_save", "lm_load", "perplexity_buckets"]
@@ -44,11 +44,6 @@ __all__ = ["BackoffLM", "ngram_counts", "lm_train", "lm_score",
 _BROADCAST_ROWS = 3_000_000
 
 
-def _tokens(text_col: str, lowercase: bool) -> F.Column:
-    text = F.col(text_col)
-    return tokenize(F.lower(text) if lowercase else text)
-
-
 def ngram_counts(df: DataFrame, n: int, text_col: str = "text",
                  lowercase: bool = True, min_count: int = 1) -> DataFrame:
     """Word n-gram counts ``(gram, n)`` with the gram rendered as a
@@ -57,7 +52,7 @@ def ngram_counts(df: DataFrame, n: int, text_col: str = "text",
     map-side combine keeps the shuffle vocabulary-sized."""
     if n < 1:
         raise ValueError("n must be >= 1")
-    toks = _tokens(text_col, lowercase)
+    toks = word_tokens(text_col, lowercase)
     if n == 1:
         gram = F.explode(toks)
     else:
@@ -125,7 +120,7 @@ def lm_train(df: DataFrame, text_col: str = "text",
     pruning bounds them), so executor-local storage is safe; pass
     False to keep the model fully lazy (e.g. when the caller persists
     it to parquet immediately via :func:`lm_save`)."""
-    toks = _tokens(text_col, lowercase)
+    toks = word_tokens(text_col, lowercase)
     size = F.size(toks)
     words = df.select(toks.alias("toks"), size.alias("sz"))
     uni = (words.select(F.explode("toks").alias("word"))
@@ -193,7 +188,7 @@ def lm_score(df: DataFrame, model: BackoffLM, text_col: str = "text",
     is carried only long enough to extract (prev, word) pairs.
     """
     floor = 1.0 / float(model.total_tokens) if model.total_tokens else 1.0
-    toks = _tokens(text_col, model.lowercase)
+    toks = word_tokens(text_col, model.lowercase)
     base = df.select(F.col(id_col), toks.alias("toks"))
     # i is 0-based from posexplode, element_at is 1-based, so
     # element_at(toks, i) IS the previous token; the array is dropped

@@ -39,6 +39,16 @@ def tokenize(text: Column) -> Column:
     return F.array_remove(F.split(text, r"\s+"), "")
 
 
+def word_tokens(text_col: str, lowercase: bool) -> Column:
+    """:func:`tokenize` of ``text_col``, lowercased first if ``lowercase``.
+    Lower + split run in the engine, so every consumer (BPE train and
+    both encode paths, the LM, the classifier) sees byte-identical word
+    arrays (Python's ``\\s``/``str.lower`` have Unicode edge cases
+    Java's do not)."""
+    text = F.col(text_col)
+    return tokenize(F.lower(text) if lowercase else text)
+
+
 def token_count(df: DataFrame, text_col: str = "text") -> Column:
     return F.size(tokenize(F.col(text_col))).alias("n_tokens")
 
@@ -828,11 +838,11 @@ def bpe_train(df: DataFrame, n_merges: int, text_col: str = "text",
               driver_vocab_cap: int = 5_000_000) -> list[tuple[str, str]]:
     """Learn a BPE merge list from the corpus. The corpus is scanned
     exactly once (word count, map-side partial agg); everything after is
-    vocabulary-sized. When the unique-word table fits under
-    ``driver_vocab_cap`` rows (~10^6-10^7 distinct words at web scale —
-    it fits by construction for any corpus whose tokenizer you would
-    train), the pruned ``(syms, freq)`` table is collected ONCE and the
-    merges are learned by the driver-local heap trainer
+    vocabulary-sized. When the unique-word table holds at most
+    ``driver_vocab_cap`` SYMBOLS in total (``sum(size(syms))``: the
+    driver memory of the collect and of the trainer's pair index grows
+    with the symbols, not the word count), the pruned ``(syms, freq)``
+    table is collected ONCE and the merges are learned by the driver-local heap trainer
     (:func:`_bpe_train_local`): zero per-merge Spark jobs, so a real
     32k-merge vocabulary is minutes of driver CPU instead of 32k
     sequential vocabulary-sized jobs. The symbol split is computed by
@@ -848,12 +858,12 @@ def bpe_train(df: DataFrame, n_merges: int, text_col: str = "text",
     iterative-loop rule from ops/dedup.duplicate_clusters). Both paths
     stop early when the best pair drops below ``min_count`` and produce
     identical merge lists (equivalence pinned in tests)."""
-    text = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
-    cur = (df.select(F.explode(tokenize(text)).alias("word"))
+    cur = (df.select(F.explode(word_tokens(text_col, lowercase)).alias("word"))
            .groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
            .withColumn("syms", F.split(F.col("word"), ""))
            .localCheckpoint(eager=True))
-    if cur.count() <= driver_vocab_cap:
+    n_syms = cur.agg(F.sum(F.size("syms"))).first()[0] or 0
+    if n_syms <= driver_vocab_cap:
         rows = cur.select("syms", "freq").collect()
         return _bpe_train_local([[list(r.syms), r.freq] for r in rows],
                                 n_merges, min_count)
@@ -902,15 +912,6 @@ def normalize_unicode(df: DataFrame, text_col: str = "text",
 
     udf = pandas_udf(_norm, "string").asNondeterministic()
     return df.withColumn(out_col or text_col, udf(F.col(text_col)))
-
-
-def _bpe_words(text_col: str, lowercase: bool) -> Column:
-    """JVM-side tokenization shared by BOTH encode paths: lower + split
-    happen in the engine, so the Arrow path and the native twin see
-    byte-identical word arrays by construction (Python's ``\\s``/
-    ``str.lower`` have Unicode edge cases Java's do not)."""
-    text = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
-    return tokenize(text)
 
 
 def bpe_encode(df: DataFrame, merges, text_col: str = "text",
@@ -977,7 +978,7 @@ def bpe_encode(df: DataFrame, merges, text_col: str = "text",
             for words in words_s])
 
     enc = _enc.asNondeterministic()  # optimizer-clone trap
-    return df.withColumn(out_col, enc(_bpe_words(text_col, lowercase)))
+    return df.withColumn(out_col, enc(word_tokens(text_col, lowercase)))
 
 
 def bpe_encode_expr(text_col: str, merges,
@@ -993,7 +994,7 @@ def bpe_encode_expr(text_col: str, merges,
             syms = _apply_merge(syms, a, b)
         return syms
 
-    return F.flatten(F.transform(_bpe_words(text_col, lowercase),
+    return F.flatten(F.transform(word_tokens(text_col, lowercase),
                                  enc_word))
 
 

@@ -8,6 +8,16 @@ preserved: a JSON null is a non-SQL-null VOID variant), numeric comparisons
 on lexical-preserving DECIMAL casts with a DOUBLE fallback, regex via
 ``rlike`` with an RE2->Java anchor fix ($ -> \\z).
 
+One recursive walk lowers each node to a pair ``(pred, det)``: the
+verdict predicate and its reach detector. Where a site cannot be decided
+exactly in SQL (a cyclic ``$ref`` past the unroll, composite
+``uniqueItems``, ``multipleOf`` on an overflowed number, a UDF format
+inside a higher-order-function lambda) the predicate is an optimistic
+TRUE and the site emits a detector; every recursion site lifts its
+children's detectors to its own value where it composes their
+predicates. Rows the root detector flags are re-verdicted by the exact
+interpreter (engine.py hybrid).
+
 Schemas outside the expressible subset raise :class:`UnsupportedSchema`
 and route to the Arrow-batched pandas-UDF interpreter instead (engine.py).
 Known, documented divergences of the column path vs the exact interpreter:
@@ -28,7 +38,7 @@ from pyspark.sql import Column, functions as F
 
 from ..core.compiler import CompiledSchema, SubSchema
 from ..core.goregex import JavaRegexDivergence, translate_re2_java
-from ..core.jsonvalue import go_float_str
+from .format_columns import format_column_pred
 
 __all__ = ["ColumnPlanCompiler", "UnsupportedSchema"]
 
@@ -136,13 +146,6 @@ def _is_number(v: Column) -> Column:
                     "-", "0", "1", "2", "3", "4", "5", "6", "7", "8", "9")))
 
 
-def _is_overflow_number(v: Column) -> Column:
-    """Value parsed from a literal beyond double range (variant stores
-    +-Infinity; the original lexical is unrecoverable)."""
-    return _nn(F.to_json(v).isin('"Infinity"', '"-Infinity"')
-               & (F.schema_of_variant(v) == F.lit("DOUBLE")))
-
-
 def _num_dec(v: Column) -> Column:
     """Exact decimal(38,18) value, or NULL when the cast would be lossy.
 
@@ -231,14 +234,63 @@ def _is_integer(v: Column) -> Column:
 _MAX_DEC = Fraction(10) ** 20  # decimal(38,18) integral range bound
 
 
+# --- reach detectors ------------------------------------------------------------
+#
+# det(v) answers "could validating v reach a site the plan compiled
+# optimistically?" Over-approximation is safe (extra rows just take the
+# exact interpreter); None means no such site below.
+
+def _det_any(dets: list):
+    if len(dets) < 2:
+        return dets[0] if dets else None
+
+    def det(v: Column) -> Column:
+        out = None
+        for d in dets:
+            c = _nn(d(v))
+            out = c if out is None else (out | c)
+        return out
+
+    return det
+
+
+def _det_at(pos, d):
+    """``d`` at the value ``pos(v)`` selects (a property, a tuple slot)."""
+    def det(v: Column) -> Column:
+        x = pos(v)
+        return x.isNotNull() & _nn(d(x))
+
+    return det
+
+
+def _det_exists(seq, d):
+    """Some element of the array ``seq(v)`` reaches ``d``."""
+    def det(v: Column) -> Column:
+        s = seq(v)
+        return s.isNotNull() & _nn(F.exists(s, lambda x: _nn(d(x))))
+
+    return det
+
+
+def _det_keys(match, d):
+    """Some key ``k`` with ``match(k)`` reaches ``d`` at its value."""
+    def det(v: Column) -> Column:
+        mp = _mp(v)
+        return mp.isNotNull() & _nn(F.exists(
+            F.map_keys(mp), lambda k: match(k) & _nn(d(F.element_at(mp, k)))))
+
+    return det
+
+
 class ColumnPlanCompiler:
-    """Lowers a compiled schema to a pure-SQL predicate.
+    """Lowers a compiled schema to a pure-SQL predicate and its reach
+    detector, both built by one walk (:meth:`_node`).
 
     Cyclic ``$ref`` chains are unrolled ``max_ref_depth`` times at compile
     time (reference walks them dynamically, schema.go:975-977 +
     schemaReferencePool.go:32-68); past the unroll the plan emits an
-    optimistic TRUE *frontier* plus a parallel reach-DETECTOR predicate.
-    Rows whose documents actually nest deep enough to touch a frontier are
+    optimistic TRUE *frontier* whose detector fires there. Rows whose
+    documents actually nest deep enough to touch a frontier are
     re-verdicted by the exact interpreter UDF (engine.py hybrid) — at web
     scale the overwhelmingly common shallow documents stay on codegen SQL
     and only the deep tail pays for Python."""
@@ -251,27 +303,16 @@ class ColumnPlanCompiler:
         self._stack: list[int] = []  # $ref occurrence counting (unroll)
         self._hof_depth = 0  # >0: pred will run inside a HOF lambda -> SQL-only
         self._nodes = 0
-        self._frontier_hit = False
-        self._ui_frontier_nodes: set[int] = set()  # composite-uniqueItems sites
-        self._ui_inf_nodes: set[int] = set()  # uniqueItems overflow-element sites
-        self._num_overflow_nodes: set[int] = set()  # multipleOf-on-overflow sites
-        self._fmt_frontier_nodes: dict[int, str] = {}  # UDF-format-in-HOF sites
-        self._pn_frontier_nodes: set[int] = set()  # UDF-format propertyNames
         self.frontier_plan = None  # set by compile() when a frontier exists
 
     def compile(self):
         """Return pred(v: variant Column) -> boolean Column ('valid' bit).
 
-        Side effect: ``self.frontier_plan`` becomes a reach-detector
-        callable (variant Column -> boolean Column) when the schema needed
-        depth-bounded $ref unrolling, else stays None."""
-        root = self.compiled.root
-        pred = self._node(root)
-        if self._frontier_hit:
-            det = self._det_node(root)
-            if det is None:
-                raise RuntimeError("frontier emitted but detector is empty")
-
+        Side effect: ``self.frontier_plan`` becomes the reach-detector
+        callable (variant Column -> boolean Column) when some site was
+        compiled optimistically, else stays None."""
+        pred, det = self._node(self.compiled.root)
+        if det is not None:
             def frontier(v: Column) -> Column:
                 return v.isNotNull() & _nn(det(v))
 
@@ -284,18 +325,25 @@ class ColumnPlanCompiler:
 
         return plan
 
-    def _hof_node(self, node: SubSchema):
-        """Compile a child whose predicate runs inside a HOF lambda —
-        Python-UDF-backed pieces (parser formats) are not allowed there."""
-        self._hof_depth += 1
+    def _sub(self, node: SubSchema, dets: list, lift=None, hof: bool = False):
+        """Compile a child; return its predicate. Its detector, lifted to
+        this node's value by ``lift``, joins ``dets``. ``hof``: the
+        predicate runs inside a HOF lambda, where Python-UDF-backed pieces
+        (parser formats) are not allowed."""
+        self._hof_depth += hof
         try:
-            return self._node(node)
+            pred, det = self._node(node)
         finally:
-            self._hof_depth -= 1
+            self._hof_depth -= hof
+        if det is not None:
+            dets.append(det if lift is None else lift(det))
+        return pred
 
     # -- node compilation ----------------------------------------------------
 
     def _node(self, node: SubSchema):
+        """``(pred, det)``: the node's predicate and its reach detector
+        (None when no site below was compiled optimistically)."""
         self._nodes += 1
         if self._nodes > self.max_nodes:
             raise UnsupportedSchema(
@@ -303,213 +351,39 @@ class ColumnPlanCompiler:
                 "(route to interpreter)")
         if node.pass_ is not None:
             val = bool(node.pass_)
-            return lambda v: F.lit(val)
+            return (lambda v: F.lit(val)), None
 
         if node.ref_schema is not None:
             rid = id(node.ref_schema)
             if self._stack.count(rid) >= self.max_ref_depth:
-                # unroll frontier: optimistically TRUE here; the reach
-                # detector routes rows that actually get this deep to the
-                # exact interpreter (engine.py hybrid)
-                self._frontier_hit = True
-                return lambda v: F.lit(True)
+                # unroll frontier: optimistically TRUE here; its detector
+                # routes rows that actually get this deep to the exact
+                # interpreter (engine.py hybrid)
+                return (lambda v: F.lit(True)), (lambda v: F.lit(True))
             self._stack.append(rid)
             try:
                 return self._node(node.ref_schema)
             finally:
                 self._stack.pop()
 
-        parts = []  # list of fn(v, t) -> Column
+        parts = []  # list of fn(v) -> Column
+        dets = []  # list of fn(v) -> Column
 
         if node.types:
             parts.append(self._type_check(node.types))
-        parts.extend(self._combinators(node))
+        parts.extend(self._combinators(node, dets))
         parts.extend(self._const_enum(node))
-        parts.extend(self._number_keywords(node))
+        parts.extend(self._number_keywords(node, dets))
         parts.extend(self._string_keywords(node))
-        parts.extend(self._array_keywords(node))
-        parts.extend(self._object_keywords(node))
+        parts.extend(self._array_keywords(node, dets))
+        parts.extend(self._object_keywords(node, dets))
         if node.format:
-            parts.append(self._format_check(node))
+            parts.append(self._format_check(node, dets))
 
         def pred(v: Column) -> Column:
             return _all([p(v) for p in parts])
 
-        return pred
-
-    # -- frontier reach detector ----------------------------------------------
-    #
-    # Mirrors _node's recursion structure but answers a different question:
-    # "could validateRecursive, applied to this value, reach an unroll
-    # frontier?" Conservative over-approximation is safe (extra rows just
-    # take the exact interpreter); missing a reach would be a wrong verdict,
-    # so every recursion site _node compiles is mirrored here.
-
-    def _det_node(self, node: SubSchema):
-        if node.pass_ is not None:
-            return None
-        if node.ref_schema is not None:
-            rid = id(node.ref_schema)
-            if self._stack.count(rid) >= self.max_ref_depth:
-                return lambda v: F.lit(True)  # the frontier site itself
-            self._stack.append(rid)
-            try:
-                return self._det_node(node.ref_schema)
-            finally:
-                self._stack.pop()
-
-        dets = []
-
-        def add(d):
-            if d is not None:
-                dets.append(d)
-
-        if id(node) in self._ui_inf_nodes:
-            def ui_inf_det(v):
-                arr = _arr(v)
-                return arr.isNotNull() & _nn(F.exists(
-                    arr, lambda x: F.to_json(x).isin(
-                        '"Infinity"', '"-Infinity"')))
-
-            add(ui_inf_det)
-
-        if id(node) in self._num_overflow_nodes:
-            # conservative: the STRING "Infinity" also matches (such rows
-            # just take the exact interpreter)
-            add(lambda v: _nn(F.to_json(v).isin('"Infinity"', '"-Infinity"')))
-
-        if id(node) in self._ui_frontier_nodes:
-            def ui_det(v):
-                arr = _arr(v)
-                return arr.isNotNull() & _nn(F.exists(
-                    arr, lambda x: _mp(x).isNotNull() | _arr(x).isNotNull()))
-
-            add(ui_det)
-
-        fmt_kind = self._fmt_frontier_nodes.get(id(node))
-        if fmt_kind == "string":
-            add(lambda v: _is_string(v))
-        elif fmt_kind == "any":
-            add(lambda v: F.lit(True))
-
-        if id(node) in self._pn_frontier_nodes:
-            add(lambda v: _mp(v).isNotNull() & _nn(F.size(_mp(v)) > 0))
-
-        for sub in list(node.any_of) + list(node.all_of) + list(node.one_of):
-            add(self._det_node(sub))
-        for sub in (node.not_, node.if_, node.then_, node.else_):
-            if sub is not None:
-                add(self._det_node(sub))
-        for key, dep in node.dependencies.items():
-            if not isinstance(dep, list):
-                d = self._det_node(dep)
-                if d is not None:
-                    def dep_det(v, key=key, d=d):
-                        mp = _mp(v)
-                        present = F.element_at(mp, F.lit(key)).isNotNull()
-                        return mp.isNotNull() & _nn(present) & _nn(d(v))
-
-                    add(dep_det)
-
-        for child in node.properties_children:
-            d = self._det_node(child)
-            if d is not None:
-                def prop_det(v, key=child.property, d=d):
-                    val = F.element_at(_mp(v), F.lit(key))
-                    return val.isNotNull() & _nn(d(val))
-
-                add(prop_det)
-
-        for pat, (rx, child) in node.pattern_properties.items():
-            d = self._det_node(child)
-            if d is not None:
-                jp = _java_pattern(pat)
-
-                def pat_det(v, jp=jp, d=d):
-                    mp = _mp(v)
-                    return mp.isNotNull() & _nn(F.exists(
-                        F.map_keys(mp),
-                        lambda k: k.rlike(jp) & _nn(d(F.element_at(mp, k)))))
-
-                add(pat_det)
-
-        if isinstance(node.additional_properties, SubSchema):
-            d = self._det_node(node.additional_properties)
-            if d is not None:
-                declared = tuple(c.property for c in node.properties_children)
-                jps = tuple(_java_pattern(p) for p in node.pattern_properties)
-
-                def ap_det(v, declared=declared, jps=jps, d=d):
-                    mp = _mp(v)
-
-                    def uncovered(k):
-                        c = F.lit(True)
-                        if declared:
-                            c = c & ~k.isin(*declared)
-                        for jp in jps:
-                            c = c & ~k.rlike(jp)
-                        return c
-
-                    return mp.isNotNull() & _nn(F.exists(
-                        F.map_keys(mp),
-                        lambda k: uncovered(k) & _nn(d(F.element_at(mp, k)))))
-
-                add(ap_det)
-
-        def arr_exists_det(d):
-            def det(v, d=d):
-                arr = _arr(v)
-                return arr.isNotNull() & _nn(
-                    F.exists(arr, lambda x: _nn(d(x))))
-
-            return det
-
-        if node.items_single and node.items_children:
-            d = self._det_node(node.items_children[0])
-            if d is not None:
-                add(arr_exists_det(d))
-        elif node.items_children:
-            for i, sub in enumerate(node.items_children):
-                d = self._det_node(sub)
-                if d is not None:
-                    def tup_det(v, i=i, d=d):
-                        arr = _arr(v)
-                        return (arr.isNotNull() & _nn(F.size(arr) > i)
-                                & _nn(d(F.try_element_at(arr, F.lit(i + 1)))))
-
-                    add(tup_det)
-            if isinstance(node.additional_items, SubSchema):
-                d = self._det_node(node.additional_items)
-                if d is not None:
-                    n = len(node.items_children)
-
-                    def ai_det(v, n=n, d=d):
-                        arr = _arr(v)
-                        tail = F.slice(arr, n + 1,
-                                       F.greatest(F.size(arr) - n, F.lit(0)))
-                        return arr.isNotNull() & _nn(
-                            F.exists(tail, lambda x: _nn(d(x))))
-
-                    add(ai_det)
-
-        if node.contains is not None:
-            d = self._det_node(node.contains)
-            if d is not None:
-                add(arr_exists_det(d))
-
-        # propertyNames instances are strings: no structural recursion
-
-        if not dets:
-            return None
-
-        def det(v: Column) -> Column:
-            out = None
-            for d in dets:
-                c = _nn(d(v))
-                out = c if out is None else (out | c)
-            return out
-
-        return det
+        return pred, _det_any(dets)
 
     def _type_check(self, types: list[str]):
         def check(v: Column) -> Column:
@@ -538,17 +412,17 @@ class ColumnPlanCompiler:
 
     # -- combinators ----------------------------------------------------------
 
-    def _combinators(self, node: SubSchema):
+    def _combinators(self, node: SubSchema, dets: list):
         parts = []
         if node.any_of:
-            subs = [self._node(s) for s in node.any_of]
+            subs = [self._sub(s, dets) for s in node.any_of]
             parts.append(lambda v, subs=subs: F.greatest(*[s(v) for s in subs])
                          if len(subs) > 1 else subs[0](v))
         if node.all_of:
-            subs = [self._node(s) for s in node.all_of]
+            subs = [self._sub(s, dets) for s in node.all_of]
             parts.append(lambda v, subs=subs: _all([s(v) for s in subs]))
         if node.one_of:
-            subs = [self._node(s) for s in node.one_of]
+            subs = [self._sub(s, dets) for s in node.one_of]
 
             def one_of(v, subs=subs):
                 total = None
@@ -559,12 +433,14 @@ class ColumnPlanCompiler:
 
             parts.append(one_of)
         if node.not_ is not None:
-            sub = self._node(node.not_)
+            sub = self._sub(node.not_, dets)
             parts.append(lambda v, sub=sub: ~sub(v))
         if node.if_ is not None:
-            p_if = self._node(node.if_)
-            p_then = self._node(node.then_) if node.then_ is not None else None
-            p_else = self._node(node.else_) if node.else_ is not None else None
+            p_if = self._sub(node.if_, dets)
+            p_then = (self._sub(node.then_, dets)
+                      if node.then_ is not None else None)
+            p_else = (self._sub(node.else_, dets)
+                      if node.else_ is not None else None)
 
             def ite(v, p_if=p_if, p_then=p_then, p_else=p_else):
                 then_c = p_then(v) if p_then is not None else _true()
@@ -584,7 +460,11 @@ class ColumnPlanCompiler:
 
                     parts.append(dep_list)
                 else:
-                    sub = self._node(dep)
+                    def present_det(d, key=key):
+                        return lambda v: F.element_at(
+                            _mp(v), F.lit(key)).isNotNull() & _nn(d(v))
+
+                    sub = self._sub(dep, dets, present_det)
 
                     def dep_schema(v, key=key, sub=sub):
                         mp = _mp(v)
@@ -706,7 +586,7 @@ class ColumnPlanCompiler:
 
     # -- numbers -----------------------------------------------------------------
 
-    def _number_keywords(self, node: SubSchema):
+    def _number_keywords(self, node: SubSchema, dets: list):
         parts = []
 
         def guard(v, cond):
@@ -746,9 +626,9 @@ class ColumnPlanCompiler:
             fm = _to_double(m)
             # divisibility of an overflowed value (stored +-Infinity, the
             # lexical gone) is undecidable in SQL: route such rows to the
-            # exact interpreter via the reach detector
-            self._frontier_hit = True
-            self._num_overflow_nodes.add(id(node))
+            # exact interpreter via the reach detector (the STRING
+            # "Infinity" matches too; such rows just take the interpreter)
+            dets.append(lambda v: F.to_json(v).isin('"Infinity"', '"-Infinity"'))
 
             def multiple(v, dec=dec, fm=fm):
                 d = _num_dec(v)
@@ -782,7 +662,7 @@ class ColumnPlanCompiler:
 
     # -- arrays ------------------------------------------------------------------
 
-    def _array_keywords(self, node: SubSchema):
+    def _array_keywords(self, node: SubSchema, dets: list):
         parts = []
         has_items = bool(node.items_children) or node.additional_items is not None
         if not (has_items or node.min_items is not None or node.max_items is not None
@@ -799,12 +679,17 @@ class ColumnPlanCompiler:
             n = node.max_items
             parts.append(lambda v, n=n: guard(v, _nn(F.size(_arr(v)) <= n)))
 
+        def each(d):
+            return _det_exists(_arr, d)
+
         if node.items_single and node.items_children:
-            sub = self._hof_node(node.items_children[0])
+            sub = self._sub(node.items_children[0], dets, each, hof=True)
             parts.append(lambda v, sub=sub: guard(
                 v, _nn(F.forall(_arr(v), lambda x: sub(x)))))
         elif node.items_children:
-            subs = [self._node(s) for s in node.items_children]
+            subs = [self._sub(s, dets, lambda d, i=i: _det_at(
+                        lambda v: F.try_element_at(_arr(v), F.lit(i + 1)), d))
+                    for i, s in enumerate(node.items_children)]
             n = len(subs)
 
             def tuple_items(v, subs=subs, n=n):
@@ -819,18 +704,21 @@ class ColumnPlanCompiler:
             if node.additional_items is False:
                 parts.append(lambda v, n=n: guard(v, _nn(F.size(_arr(v)) <= n)))
             elif isinstance(node.additional_items, SubSchema):
-                sub = self._hof_node(node.additional_items)
+                def tail(v, n=n):
+                    arr = _arr(v)
+                    return F.slice(arr, n + 1, F.greatest(F.size(arr) - n, F.lit(0)))
+
+                sub = self._sub(node.additional_items, dets,
+                                lambda d: _det_exists(tail, d), hof=True)
 
                 def extra_items(v, sub=sub, n=n):
-                    arr = _arr(v)
-                    sz = F.size(arr)
-                    tail = F.slice(arr, n + 1, F.greatest(sz - n, F.lit(0)))
-                    return guard(v, (sz <= n) | _nn(F.forall(tail, lambda x: sub(x))))
+                    return guard(v, (F.size(_arr(v)) <= n)
+                                 | _nn(F.forall(tail(v), lambda x: sub(x))))
 
                 parts.append(extra_items)
 
         if node.contains is not None:
-            sub = self._hof_node(node.contains)
+            sub = self._sub(node.contains, dets, each, hof=True)
             parts.append(lambda v, sub=sub: guard(
                 v, _nn(F.exists(_arr(v), lambda x: sub(x)))))
 
@@ -843,19 +731,23 @@ class ColumnPlanCompiler:
             tuple_ok = (not node.items_single and node.items_children
                         and all(_guarantees_scalar(c) for c in node.items_children)
                         and node.additional_items is False)
-            if not (single_ok or tuple_ok):
-                # composite elements possible: the scalar-key compare below
-                # stays exact for scalar-only arrays; rows whose array holds
-                # an object/array element route to the exact interpreter via
-                # the reach detector (canonical equality on composites is
-                # key-order-insensitive — not SQL-expressible)
-                self._frontier_hit = True
-                self._ui_frontier_nodes.add(id(node))
-            # two DIFFERENT overflowed literals (1e999, 2e999) share the
-            # canon key "dInfinity" -> false duplicate; route arrays with
-            # overflow-rendering elements to the interpreter
-            self._frontier_hit = True
-            self._ui_inf_nodes.add(id(node))
+            composite = not (single_ok or tuple_ok)
+
+            def deep_elem(x):
+                # two DIFFERENT overflowed literals (1e999, 2e999) share the
+                # canon key "dInfinity" -> false duplicate; route arrays with
+                # overflow-rendering elements to the interpreter
+                c = F.to_json(x).isin('"Infinity"', '"-Infinity"')
+                if composite:
+                    # composite elements possible: the scalar-key compare
+                    # below stays exact for scalar-only arrays; arrays
+                    # holding an object/array element go to the interpreter
+                    # (canonical equality on composites is
+                    # key-order-insensitive — not SQL-expressible)
+                    c = c | _mp(x).isNotNull() | _arr(x).isNotNull()
+                return c
+
+            dets.append(each(deep_elem))
 
             def unique(v):
                 arr = _arr(v)
@@ -867,7 +759,7 @@ class ColumnPlanCompiler:
 
     # -- objects -----------------------------------------------------------------
 
-    def _object_keywords(self, node: SubSchema):
+    def _object_keywords(self, node: SubSchema, dets: list):
         parts = []
         needs_map = (node.required or node.properties_children
                      or node.pattern_properties
@@ -897,19 +789,23 @@ class ColumnPlanCompiler:
                 v, F.element_at(_mp(v), F.lit(req)).isNotNull()))
 
         for child in node.properties_children:
-            sub = self._node(child)
+            def at(v, key=child.property):
+                return F.element_at(_mp(v), F.lit(key))
 
-            def prop(v, key=child.property, sub=sub):
-                val = F.element_at(_mp(v), F.lit(key))
+            sub = self._sub(child, dets, lambda d, at=at: _det_at(at, d))
+
+            def prop(v, at=at, sub=sub):
+                val = at(v)
                 return guard(v, val.isNull() | _nn(sub(val)))
 
             parts.append(prop)
 
-        pattern_pairs = []
+        jps = []
         for pat, (rx, child) in node.pattern_properties.items():
             jp = _java_pattern(pat)
-            sub = self._hof_node(child)
-            pattern_pairs.append((jp, sub))
+            jps.append(jp)
+            sub = self._sub(child, dets, lambda d, jp=jp: _det_keys(
+                lambda k: k.rlike(jp), d), hof=True)
 
             def pat_props(v, jp=jp, sub=sub):
                 mp = _mp(v)
@@ -920,27 +816,28 @@ class ColumnPlanCompiler:
             parts.append(pat_props)
 
         if node.additional_properties is not None:
-            declared = [c.property for c in node.properties_children]
-            jps = [jp for jp, _ in pattern_pairs]
+            declared = tuple(c.property for c in node.properties_children)
+
+            def covered(k, jps=tuple(jps)):
+                c = F.lit(False)
+                if declared:
+                    c = c | k.isin(*declared)
+                for jp in jps:
+                    c = c | k.rlike(jp)
+                return c
+
             if node.additional_properties is False:
                 ap_sub = None
             elif node.additional_properties is True:
                 ap_sub = "any"
             else:
-                ap_sub = self._hof_node(node.additional_properties)
+                ap_sub = self._sub(node.additional_properties, dets,
+                                   lambda d: _det_keys(lambda k: ~covered(k), d),
+                                   hof=True)
 
             if ap_sub != "any":
-                def addl(v, declared=tuple(declared), jps=tuple(jps), ap_sub=ap_sub):
+                def addl(v, ap_sub=ap_sub):
                     mp = _mp(v)
-
-                    def covered(k):
-                        c = F.lit(False)
-                        if declared:
-                            c = c | k.isin(*declared)
-                        for jp in jps:
-                            c = c | k.rlike(jp)
-                        return c
-
                     if ap_sub is None:
                         body = lambda k: covered(k)
                     else:
@@ -950,113 +847,27 @@ class ColumnPlanCompiler:
                 parts.append(addl)
 
         if node.property_names is not None:
+            # a key is validated as a string instance: the key cast to
+            # variant, inside the forall over the keys
+            def keys(v):
+                return F.map_keys(_mp(v))
+
             try:
-                sub = self._string_instance_pred(node.property_names)
-            except UnsupportedSchema:
-                # UDF/custom format inside propertyNames: hybrid — any
-                # object carrying at least one key routes to the exact
-                # interpreter via the reach detector
-                self._frontier_hit = True
-                self._pn_frontier_nodes.add(id(node))
-                sub = None
-            if sub is not None:
-                parts.append(lambda v, sub=sub: guard(
-                    v, _nn(F.forall(F.map_keys(_mp(v)), lambda k: sub(k)))))
+                sub = self._sub(node.property_names, dets, lambda d: _det_exists(
+                    keys, lambda k: d(k.cast("variant"))), hof=True)
+            except UnsupportedSchema as e:
+                if "exceeds" in str(e):
+                    raise  # node cap: the caller retries at a shallower unroll
+                # e.g. a Java-divergent regex: hybrid — any object carrying
+                # at least one key routes to the exact interpreter
+                dets.append(lambda v: _nn(F.size(_mp(v)) > 0))
+            else:
+                parts.append(lambda v, sub=sub: guard(v, _nn(F.forall(
+                    keys(v), lambda k: sub(k.cast("variant"))))))
 
         return parts
 
-    def _string_instance_pred(self, node: SubSchema):
-        """Predicate over a plain STRING column (for propertyNames)."""
-        if node.pass_ is not None:
-            val = bool(node.pass_)
-            return lambda s: F.lit(val)
-        if node.ref_schema is not None:
-            rid = id(node.ref_schema)
-            if rid in self._stack:
-                raise UnsupportedSchema(
-                    "cyclic $ref in propertyNames (route to interpreter)")
-            self._stack.append(rid)
-            try:
-                return self._string_instance_pred(node.ref_schema)
-            finally:
-                self._stack.pop()
-        conds = []
-        # the instance is always a STRING (a property name): object/array/
-        # number keywords are vacuous on it, so only string-applicable
-        # keywords and combinators constrain the verdict
-        if node.types and "string" not in node.types:
-            return lambda s: F.lit(False)
-        if node.const_ is not None:
-            if node.const_.startswith('"'):
-                import json as _json
-                val = _json.loads(node.const_)
-                conds.append(lambda s, val=val: s == F.lit(val))
-            else:
-                return lambda s: F.lit(False)  # non-string const never matches
-        if node.enum:
-            import json as _json
-            strs = [_json.loads(c) for c in node.enum if c.startswith('"')]
-            if not strs:
-                return lambda s: F.lit(False)
-            conds.append(lambda s, strs=tuple(strs): s.isin(*strs))
-        if node.any_of:
-            subs = [self._string_instance_pred(x) for x in node.any_of]
-            conds.append(lambda s, subs=subs:
-                         F.greatest(*[p(s) for p in subs])
-                         if len(subs) > 1 else subs[0](s))
-        if node.all_of:
-            subs = [self._string_instance_pred(x) for x in node.all_of]
-            conds.append(lambda s, subs=subs: _all([p(s) for p in subs]))
-        if node.one_of:
-            subs = [self._string_instance_pred(x) for x in node.one_of]
-
-            def one(s, subs=subs):
-                total = None
-                for p in subs:
-                    c = _nn(p(s)).cast("int")
-                    total = c if total is None else total + c
-                return total == 1
-
-            conds.append(one)
-        if node.not_ is not None:
-            sub = self._string_instance_pred(node.not_)
-            conds.append(lambda s, sub=sub: ~_nn(sub(s)))
-        if node.if_ is not None:
-            p_if = self._string_instance_pred(node.if_)
-            p_then = (self._string_instance_pred(node.then_)
-                      if node.then_ is not None else None)
-            p_else = (self._string_instance_pred(node.else_)
-                      if node.else_ is not None else None)
-
-            def ite(s, p_if=p_if, p_then=p_then, p_else=p_else):
-                t = p_then(s) if p_then is not None else _true()
-                e = p_else(s) if p_else is not None else _true()
-                return F.when(_nn(p_if(s)), t).otherwise(e)
-
-            conds.append(ite)
-        if node.format:
-            from .format_columns import format_column_pred
-
-            pred, is_sql, is_custom = format_column_pred(
-                node.format, self.compiled.formats)
-            if is_custom or not is_sql:
-                raise UnsupportedSchema(
-                    "UDF/custom format in propertyNames (route to interpreter)")
-            conds.append(lambda s, pred=pred: pred(s))
-        if node.min_length is not None:
-            n = node.min_length
-            conds.append(lambda s, n=n: F.length(s) >= n)
-        if node.max_length is not None:
-            n = node.max_length
-            conds.append(lambda s, n=n: F.length(s) <= n)
-        if node.pattern is not None:
-            jp = _java_pattern(node.pattern_src)
-            conds.append(lambda s, jp=jp: s.rlike(jp))
-        return lambda s: _all([c(s) for c in conds])
-
-    def _format_check(self, node: SubSchema):
-        from .format_columns import format_column_pred
-
+    def _format_check(self, node: SubSchema, dets: list):
         name = node.format
         pred, is_sql, is_custom = format_column_pred(name, self.compiled.formats)
         if self._hof_depth > 0 and not is_sql:
@@ -1064,8 +875,7 @@ class ColumnPlanCompiler:
             # whose value actually occupies this position (a string for
             # builtin parser formats, any value for custom checkers) are
             # re-verdicted by the exact interpreter via the reach detector
-            self._frontier_hit = True
-            self._fmt_frontier_nodes[id(node)] = "any" if is_custom else "string"
+            dets.append((lambda v: F.lit(True)) if is_custom else _is_string)
             return lambda v: F.lit(True)
 
         if is_custom:

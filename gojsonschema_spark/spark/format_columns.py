@@ -19,6 +19,7 @@ from pyspark.sql import Column, functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..core import formats as core_formats
+from ..core.jsonvalue import parse_json
 
 __all__ = ["format_column_pred"]
 
@@ -71,44 +72,20 @@ _UDF_CACHE: dict = {}
 _BUILTINS = dict(core_formats.FormatRegistry()._checkers)
 
 
-def _udf_for(name: str, checker):
-    """Deferred Arrow-batched checker UDF over the raw string value:
-    created (and cached) on first application, so plan compilation needs
-    no SparkSession."""
+def _checker_udf(key, fn):
+    """Deferred Arrow-batched boolean UDF mapping ``fn`` over the non-null
+    values (NULL passes): created on first application and cached under
+    ``key``, so plan compilation needs no SparkSession."""
 
-    def pred(s: Column) -> Column:
-        udf = _UDF_CACHE.get(name)
-        if udf is None:
-            @pandas_udf("boolean")
-            def check(col: pd.Series) -> pd.Series:
-                return col.map(lambda x: True if x is None else checker(x))
-
-            udf = _UDF_CACHE[name] = check
-        return udf(s)
-
-    return pred
-
-
-def custom_format_pred(name: str, checker):
-    """Column predicate for a user-registered checker: the UDF receives the
-    JSON rendering of the whole variant value and decodes it with the same
-    lexical-number parser the interpreter uses, so checker(value) sees
-    identical inputs on both engine paths (reference format_checkers.go:147-158
-    passes the decoded Go value, not just strings)."""
-    from ..core.jsonvalue import parse_json
-
-    key = ("custom", name, id(checker))
-
-    def pred(vjson: Column) -> Column:
+    def pred(c: Column) -> Column:
         udf = _UDF_CACHE.get(key)
         if udf is None:
             @pandas_udf("boolean")
             def check(col: pd.Series) -> pd.Series:
-                return col.map(
-                    lambda x: True if x is None else bool(checker(parse_json(x))))
+                return col.map(lambda x: True if x is None else fn(x))
 
             udf = _UDF_CACHE[key] = check
-        return udf(vjson)
+        return udf(c)
 
     return pred
 
@@ -207,5 +184,13 @@ def format_column_pred(name: str, registry=None):
     if checker is _BUILTINS.get(name):
         if name in _SQL_PREDS:
             return _SQL_PREDS[name], True, False
-        return _udf_for(name, checker), False, False
-    return custom_format_pred(name, checker), False, True
+        # builtin parser checker over the raw string value
+        return _checker_udf(name, checker), False, False
+    # user-registered checker: the UDF receives the JSON rendering of the
+    # whole variant value and decodes it with the same lexical-number
+    # parser the interpreter uses, so checker(value) sees identical inputs
+    # on both engine paths (reference format_checkers.go:147-158 passes
+    # the decoded Go value, not just strings)
+    return (_checker_udf(("custom", name, id(checker)),
+                         lambda x: bool(checker(parse_json(x)))),
+            False, True)

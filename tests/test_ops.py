@@ -2043,6 +2043,31 @@ def test_bpe_train_local_matches_distributed(spark):
     assert len(local) >= 5
 
 
+def test_bpe_train_driver_cap_counts_symbols(spark, monkeypatch):
+    """``driver_vocab_cap`` bounds the collected SYMBOLS, not the words:
+    5 distinct words (23 symbols) under a cap of 10 take the distributed
+    loop, and still learn the reference merges."""
+    from gojsonschema_spark.ops import text
+
+    words = {"low": 5, "lower": 2, "newest": 6, "widest": 3, "aaa": 4}
+    rows = [(" ".join([w] * f),) for w, f in words.items()]
+    df = spark.createDataFrame(rows, ["text"])
+    local_calls = []
+    real_local = text._bpe_train_local
+
+    def spy(*args):
+        local_calls.append(args)
+        return real_local(*args)
+
+    monkeypatch.setattr(text, "_bpe_train_local", spy)
+    assert len(words) <= 10 < sum(map(len, words))
+    merges = text.bpe_train(df, 10, checkpoint_every=3, driver_vocab_cap=10)
+    assert local_calls == []
+    assert merges == _ref_bpe(words, 10)
+    assert text.bpe_train(df, 10, driver_vocab_cap=23) == merges
+    assert len(local_calls) == 1
+
+
 def test_bpe_encode_matches_native_and_reference(spark):
     """The Arrow encoder (production path), the catalyst fold twin, and
     the pure-Python greedy reference must all agree — including the

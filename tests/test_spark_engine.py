@@ -717,3 +717,93 @@ def test_validator_reuse_matches_fresh_validator(spark, schema, force_udf, path)
         got, want = results(reused, df, col), results(fresh, df, col)
         assert got == want
         assert any(not valid for _, valid, _ in got[0])
+
+
+_PN_DOCS = ['{}', '{"Infinity": 1}', '{"über": 1}', '{"ab": 1, "abcde": 2}',
+            '{"a": {"nested": 1}, "I": 2}', '["ab"]', '"abc"']
+
+
+@pytest.mark.parametrize("sub,path", [
+    ({"type": ["integer", "object"]}, "plain"),
+    ({"const": 1}, "plain"),
+    ({"enum": ["ab", 1, "Infinity", None]}, "plain"),
+    ({"anyOf": [{"maxLength": 1}, {"pattern": "^I"}]}, "plain"),
+    ({"oneOf": [{"minLength": 2}, {"pattern": "b$"}]}, "plain"),
+    ({"not": {"const": "ab"}}, "plain"),
+    ({"if": {"minLength": 3}, "then": {"pattern": "^[IÜü]"},
+      "else": {"maxLength": 1}}, "plain"),
+    ({"minLength": 2, "maxLength": 4}, "plain"),
+    ({"format": "hostname"}, "plain"),
+    ({"format": "email"}, "hybrid"),
+    ({"format": "short"}, "hybrid"),
+    # no Java twin for the regex: any object with a key goes to the interpreter
+    ({"pattern": "(?m)^a"}, "hybrid"),
+    # a cycle can only close through object/array keywords, which never
+    # apply to a key: its unroll frontier is unreachable from a key
+    ({"$ref": "#/definitions/k"}, None),
+], ids=["type", "const", "enum", "anyOf", "oneOf", "not", "if", "length",
+        "hostname", "email", "custom", "java_divergent_regex", "cyclic_ref"])
+def test_property_names_lowering_matches_interpreter(spark, sub, path):
+    """propertyNames lowers each key, cast to a string variant, through
+    the same walk as any other subschema: verdicts equal the interpreter's
+    on keys that render like overflowed numbers ("Infinity"), non-ASCII
+    keys, empty objects and non-objects; UDF and custom formats and
+    regexes without a Java twin go hybrid."""
+    from gojsonschema_spark.core.compiler import SchemaCompiler
+    from gojsonschema_spark.core.formats import FormatRegistry
+
+    reg = FormatRegistry().add(
+        "short", lambda v: not isinstance(v, str) or len(v) < 3)
+    schema = {"$schema": "http://json-schema.org/draft-07/schema#",
+              "definitions": {"k": {"anyOf": [
+                  {"maxLength": 2},
+                  {"pattern": "^I", "propertyNames": {"$ref": "#/definitions/k"}}]}},
+              "propertyNames": sub}
+    v = SparkValidator(schema, compiler=SchemaCompiler(formats=reg))
+    assert v.uses_column_plan, v.unsupported_reason
+    if path is not None:
+        assert (v.frontier_plan is not None) == (path == "hybrid")
+    u = SparkValidator(schema, compiler=SchemaCompiler(formats=reg),
+                       force_udf=True)
+    df = spark.createDataFrame([(d,) for d in _PN_DOCS], ["doc"])
+    got = [r.valid for r in v.validate_json(df, "doc").collect()]
+    want = [r.valid for r in u.validate_json(df, "doc").collect()]
+    assert got == want
+    assert not all(want)
+
+
+def test_shared_subschema_detector_fires_only_where_optimistic(spark):
+    """A subschema shared by an exact position (property ``a``, where the
+    email UDF runs) and an optimistic one (``items``, inside a HOF lambda)
+    flags only the optimistic position: the detector is built where each
+    predicate is, not keyed by the shared node."""
+    schema = {"definitions": {"e": {"format": "email"}},
+              "properties": {"a": {"$ref": "#/definitions/e"}},
+              "items": {"$ref": "#/definitions/e"}}
+    v = SparkValidator(schema)
+    assert v.uses_column_plan and v.frontier_plan is not None
+    docs = ['{"a":"x@y.z"}', '{"a":"nope"}', '["x@y.z"]', '["nope"]', '[1]',
+            '{"b":1}']
+    df = spark.createDataFrame([(d,) for d in docs], ["doc"])
+    deep = [r.d for r in df.select(
+        v.frontier_plan(F.try_parse_json("doc")).alias("d")).collect()]
+    assert deep == [False, False, True, True, False, False]
+    got = [r.valid for r in v.validate_json(df, "doc").collect()]
+    u = SparkValidator(schema, force_udf=True)
+    assert got == [r.valid for r in u.validate_json(df, "doc").collect()]
+    assert got == [True, False, True, False, True, True]
+
+
+def test_property_names_node_cap_propagates():
+    """The node cap inside propertyNames is not the interpreter routing of
+    an inexpressible key schema: it reaches SparkValidator, which retries
+    at a shallower unroll."""
+    from gojsonschema_spark.core.compiler import SchemaCompiler
+    from gojsonschema_spark.spark.columns import (ColumnPlanCompiler,
+                                                  UnsupportedSchema)
+
+    compiled = SchemaCompiler().compile(
+        {"propertyNames": {"allOf": [{"maxLength": n} for n in range(10)]}})
+    with pytest.raises(UnsupportedSchema, match="exceeds"):
+        ColumnPlanCompiler(compiled, max_nodes=5).compile()
+    assert ColumnPlanCompiler(compiled).compile() is not None
