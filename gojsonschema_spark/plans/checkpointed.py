@@ -9,7 +9,8 @@ checkpointing is a coarse partition bucket (e.g. daily ``warc_bucket``,
 30-3000 buckets at crawl scale — NOT per-Spark-partition). Each bucket:
 
 * validates as one Spark job filtered to that bucket (partition pruning
-  when the input is written partitioned by the bucket column);
+  when the input is written partitioned by the bucket column; the NULL
+  bucket is filtered with ``IS NULL``);
 * writes verdicts to ``<out>/bucket=<v>/`` (idempotent overwrite per
   bucket = exactly-once on rerun);
 * collects metrics through ``df.observe`` (no extra pass) and writes a
@@ -19,19 +20,38 @@ checkpointing is a coarse partition bucket (e.g. daily ``warc_bucket``,
 The checkpoint is the parquet ``_SUCCESS`` marker AND the lineage file:
 a bucket missing either is re-run. A killed run resumes by rerunning:
 one scan lists the bucket values, and finished buckets are skipped.
+
+:meth:`CheckpointedValidationRun.run` runs one Spark job per bucket, at
+most two in flight. A bucket job is mostly fixed cost (driver-side
+DataFrame build and planning, then a short task whose Python worker adds
+a mostly fixed per-task cost), so one job at a time leaves the executors
+idle most of a run. Two jobs in flight hide one bucket's driver work
+behind the other's execution; every further one holds another Python
+worker and more JVM memory (see ``_IN_FLIGHT``). Buckets start in
+``bucket_values`` order; after a failure no further bucket starts, the
+one in flight finishes, and the first error propagates.
 """
 
 from __future__ import annotations
 
 import json
 import time
+from collections import deque
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.observation import Observation
+from pyspark.util import inheritable_thread_target
 
 from ..spark.engine import SparkValidator
 
 __all__ = ["CheckpointedValidationRun"]
+
+# Bucket jobs in flight. Two are enough to overlap one bucket's driver
+# work with another's execution; each further job holds one more Python
+# worker (~120 MB) and more JVM working set. On a 4-core host two gave
+# 1.35x the docs/s of one at +10% peak RSS; three gave 1.85x at +28%.
+_IN_FLIGHT = 2
 
 
 def _fs_and_path(spark: SparkSession, path_str: str):
@@ -96,24 +116,40 @@ class CheckpointedValidationRun:
     # -- execution --------------------------------------------------------------
 
     def run(self, df: DataFrame) -> dict:
-        """Validate every pending bucket; returns a run summary."""
-        pending = set(self.pending_buckets(df))
+        """Validate every pending bucket, at most ``_IN_FLIGHT`` at a
+        time; returns a run summary."""
+        queue = deque(self.pending_buckets(df))
+        pending = set(queue)
         summary = {"buckets_total": len(self.bucket_values), "buckets_run": 0,
-                   "docs": 0, "valid": 0, "skipped": []}
-        for value in self.bucket_values:
-            if value not in pending:
-                summary["skipped"].append(str(value))
-                continue
-            m = self.run_bucket(df, value)
-            summary["buckets_run"] += 1
-            summary["docs"] += m["n_docs"]
-            summary["valid"] += m["n_valid"]
+                   "docs": 0, "valid": 0,
+                   "skipped": [str(v) for v in self.bucket_values
+                               if v not in pending]}
+        self.validator._exprs  # built here once, not raced by two threads
+        with ThreadPoolExecutor(_IN_FLIGHT) as pool:
+            running = set()
+            while queue or running:
+                while queue and len(running) < _IN_FLIGHT:
+                    # wrapped per job: each job gets its own copy of the
+                    # caller's local properties (job group, description,
+                    # tags), so one job's SQL execution id never leaks
+                    # into the other's jobs
+                    job = inheritable_thread_target(df.sparkSession)(self.run_bucket)
+                    running.add(pool.submit(job, df, queue.popleft()))
+                done, running = wait(running, return_when=FIRST_COMPLETED)
+                for future in done:
+                    # a failure starts no further bucket; leaving the
+                    # pool waits for the one in flight, then it raises
+                    m = future.result()
+                    summary["buckets_run"] += 1
+                    summary["docs"] += m["n_docs"]
+                    summary["valid"] += m["n_valid"]
         return summary
 
     def run_bucket(self, df: DataFrame, value) -> dict:
         """Validate one bucket; idempotent (overwrites its directory)."""
         t0 = time.time()
-        bucket = df.filter(F.col(self.bucket_col) == F.lit(value))
+        col = F.col(self.bucket_col)
+        bucket = df.filter(col.isNull() if value is None else col == F.lit(value))
         out = self.validator.validate_json(bucket, self.doc_col)
         obs = Observation(f"validate-{value}")
         out = out.observe(obs,

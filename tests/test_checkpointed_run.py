@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -58,11 +59,11 @@ def test_checkpoint_resume_and_lineage(spark, tmp_path):
     assert 0 < n_valid < 300  # generator plants malformed urls/empty texts
 
 
-def _three_buckets(spark, n=150):
+def _buckets(spark, n=150, k=3):
     pages = generate_webpages(spark, n, partitions=2)
     df = pages.select("url", "warc_bucket", webpage_doc_column().alias("doc"))
     return df.withColumn("warc_bucket",
-                         (F.dayofmonth(F.col("warc_bucket")) % 3).cast("string"))
+                         (F.dayofmonth(F.col("warc_bucket")) % k).cast("string"))
 
 
 def test_resume_over_done_output_is_one_job(spark, tmp_path):
@@ -70,7 +71,7 @@ def test_resume_over_done_output_is_one_job(spark, tmp_path):
     Spark job, no orderBy sampling job, no second distinct. AQE is off
     for the resume because it runs each shuffle map stage as a job of
     its own, which would split the one scan into two jobs."""
-    df = _three_buckets(spark)
+    df = _buckets(spark)
     run = CheckpointedValidationRun(SparkValidator(FLAGSHIP_SCHEMA),
                                     str(tmp_path / "verdicts"))
     assert run.run(df)["buckets_run"] == 3
@@ -91,7 +92,7 @@ def test_resume_over_done_output_is_one_job(spark, tmp_path):
 def test_missing_lineage_reruns_bucket(spark, tmp_path):
     """A bucket whose _lineage.json is missing (run killed after the
     data commit) is not done: the resume re-runs exactly that bucket."""
-    df = _three_buckets(spark)
+    df = _buckets(spark)
     out = str(tmp_path / "verdicts")
     run = CheckpointedValidationRun(SparkValidator(FLAGSHIP_SCHEMA), out)
     assert run.run(df)["buckets_run"] == 3
@@ -104,3 +105,147 @@ def test_missing_lineage_reruns_bucket(spark, tmp_path):
     assert s["buckets_run"] == 1 and s["skipped"] == ["0", "2"]
     assert os.path.exists(lineage)
     assert spark.read.parquet(out).count() == 150
+
+
+def test_null_bucket_is_validated(spark, tmp_path):
+    """Rows with a NULL bucket form their own bucket and are validated:
+    ``col == NULL`` matches no row, so the NULL bucket filters with
+    ``IS NULL``."""
+    rows = [(f"https://x.com/{i}", None if i % 10 else "a", '{"url": 1}')
+            for i in range(120)]
+    df = spark.createDataFrame(rows, "url string, warc_bucket string, doc string")
+    out = str(tmp_path / "verdicts")
+    run = CheckpointedValidationRun(SparkValidator(FLAGSHIP_SCHEMA), out)
+    s = run.run(df)
+    assert s["buckets_total"] == 2 and s["buckets_run"] == 2
+    assert s["docs"] == 120
+    lineage = json.load(open(os.path.join(out, "bucket=None", "_lineage.json")))
+    assert lineage["n_docs"] == 108 and lineage["n_invalid"] == 108
+    assert spark.read.parquet(os.path.join(out, "bucket=None")).count() == 108
+    assert run.run(df)["skipped"] == ["None", "a"]
+
+
+def test_two_buckets_in_flight(spark, tmp_path):
+    """Two bucket jobs run at once, never more: each call waits on a
+    two-party barrier, which a run of one bucket at a time never passes."""
+    df = _buckets(spark, k=4)
+    run = CheckpointedValidationRun(SparkValidator(FLAGSHIP_SCHEMA),
+                                    str(tmp_path / "verdicts"))
+    barrier = threading.Barrier(2, timeout=60)
+    lock = threading.Lock()
+    live, peak = [0], [0]
+    run_bucket = run.run_bucket
+
+    def paired(df, value):
+        with lock:
+            live[0] += 1
+            peak[0] = max(peak[0], live[0])
+        try:
+            barrier.wait()
+            return run_bucket(df, value)
+        finally:
+            with lock:
+                live[0] -= 1
+
+    run.run_bucket = paired
+    s = run.run(df)
+    assert s["buckets_run"] == 4 and s["docs"] == 150
+    assert peak[0] == 2
+
+
+def test_failed_bucket_starts_no_further_bucket(spark, tmp_path):
+    """The first bucket error propagates once the bucket in flight with
+    it has finished; no later bucket starts, the failed bucket has no
+    lineage, and the resume runs the failed and unstarted buckets."""
+    df = _buckets(spark, k=4)
+    out = str(tmp_path / "verdicts")
+    run = CheckpointedValidationRun(SparkValidator(FLAGSHIP_SCHEMA), out)
+    started = []
+    run_bucket = run.run_bucket
+
+    def failing(df, value):
+        started.append(value)
+        if value == "1":
+            raise RuntimeError("bucket 1 failed")
+        return run_bucket(df, value)
+
+    run.run_bucket = failing
+    with pytest.raises(RuntimeError, match="bucket 1 failed"):
+        run.run(df)
+    assert sorted(started) == ["0", "1"]
+    for name in ("_SUCCESS", "_lineage.json"):
+        assert os.path.exists(os.path.join(out, "bucket=0", name))
+    assert not os.path.exists(os.path.join(out, "bucket=1", "_lineage.json"))
+
+    run.run_bucket = run_bucket
+    s = run.run(df)
+    assert s["buckets_run"] == 3 and s["skipped"] == ["0"]
+    assert spark.read.parquet(out).count() == 150
+
+
+def test_bucket_jobs_carry_caller_properties(spark, tmp_path):
+    """Every bucket job carries the caller's job group, description and
+    session tag, and lands in its own bucket's SQL execution; over an
+    input partitioned by the bucket, each bucket's scan reads one
+    partition and only that bucket's rows."""
+    src = str(tmp_path / "pages")
+    _buckets(spark).write.partitionBy("warc_bucket").parquet(src)
+    df = spark.read.parquet(src)
+    run = CheckpointedValidationRun(SparkValidator(FLAGSHIP_SCHEMA),
+                                    str(tmp_path / "verdicts"))
+    sc = spark.sparkContext
+    sc.setJobGroup("g", "bucket jobs of g")
+    spark.addTag("t")
+    try:
+        assert run.run(df)["buckets_run"] == 3
+    finally:
+        spark.removeTag("t")
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = set(sc.statusTracker().getJobIdsForGroup("g"))
+    store = jsc.statusStore()
+    for j in jobs:
+        job = store.job(j)
+        assert job.description().get() == "bucket jobs of g"
+        assert job.jobTags().mkString(",").endswith("-t")
+
+    sql = spark._jsparkSession.sharedState().statusStore()
+    executions = sql.executionsList()
+    scans = []
+    for i in range(executions.size()):
+        e = executions.apply(i)
+        ejobs = {int(k) for k in e.jobs().keys().mkString(",").split(",") if k}
+        nodes = sql.planGraph(e.executionId()).allNodes()
+        names = [nodes.apply(k).name() for k in range(nodes.size())]
+        if not ejobs & jobs or not any("EvalPython" in n for n in names):
+            continue
+        assert ejobs <= jobs
+        values = sql.executionMetrics(e.executionId())
+        scan = next(nodes.apply(k) for k, n in enumerate(names)
+                    if n.startswith("Scan"))
+        metrics = {m.name(): m.accumulatorId() for m in
+                   (scan.metrics().apply(k) for k in range(scan.metrics().size()))}
+        scans.append(tuple(
+            int(values.get(metrics[name]).get().replace(",", ""))
+            for name in ("number of partitions read", "number of output rows")))
+    assert len(scans) == 3  # one SQL execution per bucket, each with its jobs
+    assert [p for p, _ in scans] == [1, 1, 1]
+    assert sum(r for _, r in scans) == 150
+
+
+def test_expressions_built_once_across_buckets(spark, tmp_path):
+    """The validator's Column DAG is built once for a run whose first two
+    buckets start together."""
+    v = SparkValidator(FLAGSHIP_SCHEMA)
+    calls, plan = [], v.column_plan
+
+    def counted(var):
+        calls.append(var)
+        return plan(var)
+
+    v.column_plan = counted
+    run = CheckpointedValidationRun(v, str(tmp_path / "verdicts"))
+    assert run.run(_buckets(spark))["buckets_run"] == 3
+    assert len(calls) == 1

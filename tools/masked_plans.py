@@ -8,7 +8,10 @@ Plan parity of a change: run this file from a copy of the parent commit
 and from the change (copy the file into the parent's ``tools/`` if it is
 not there yet), then ``diff`` the two JSON files. Each call site is built
 on a small generated web-pages corpus on ``local[2]``; plans are taken
-before execution, so nothing but the driver-side planning runs.
+before execution, so nothing but the driver-side planning runs. The one
+exception is the ``CheckpointedValidationRun.run_bucket`` site: its input
+is the corpus written to a temporary directory partitioned by
+``warc_bucket``, so its plan shows the bucket's partition filter.
 """
 
 from __future__ import annotations
@@ -17,6 +20,7 @@ import json
 import os
 import re
 import sys
+import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -26,6 +30,7 @@ _MASKS = (
     (re.compile(r"#\d+L?"), "#N"),                       # expression ids
     (re.compile(r"\b([A-Za-z]+)_\d+\b"), r"\1_N"),         # lambda variables
     (re.compile(r"@[0-9a-f]{6,}\b"), "@H"),              # object hashes
+    (re.compile(r"file:[^,\]\s]+"), "file:P"),            # input paths
 )
 
 # hybrid single-schema plans: composite uniqueItems, multipleOf on an
@@ -53,8 +58,9 @@ def _plan(df) -> str:
     return _mask(df._jdf.queryExecution().executedPlan().toString())
 
 
-def call_sites(spark) -> dict:
+def call_sites(spark, tmp: str) -> dict:
     from pyspark.sql import functions as F
+    from pyspark.sql.observation import Observation
 
     from gojsonschema_spark.ops.pipeline import PipelineConfig, preprocess_corpus
     from gojsonschema_spark.ops.webpages import (FLAGSHIP_SCHEMA,
@@ -78,6 +84,20 @@ def call_sites(spark) -> dict:
                              ((F.xxhash64("doc") % 3 + 3) % 3 + 1).cast("int")))
     staged = (pages.withColumn("host", url_host(F.col("url")))
               .withColumn("doc_id", F.xxhash64("url", "warc_ts")))
+    pages.write.partitionBy("warc_bucket").parquet(f"{tmp}/pages")
+    bucketed = spark.read.parquet(f"{tmp}/pages").select(
+        "url", "warc_bucket", webpage_doc_column().alias("doc"))
+    day = min(r[0] for r in bucketed.select("warc_bucket").distinct().collect())
+
+    def run_bucket_query():
+        # CheckpointedValidationRun.run_bucket's query over one non-null bucket
+        one = bucketed.filter(F.col("warc_bucket") == F.lit(day))
+        return (v.validate_json(one, "doc")
+                .observe(Observation(f"validate-{day}"),
+                         F.count(F.lit(1)).alias("n_docs"),
+                         F.sum(F.col("valid").cast("long")).alias("n_valid"))
+                .select("url", "valid", "violations"))
+
     sites = {
         "flagship_validate_json": lambda: v.validate_json(docs, "doc"),
         "flagship_validate_json_no_violations":
@@ -87,6 +107,7 @@ def call_sites(spark) -> dict:
         "multischema_dispatch": lambda: mv.validate_json(kinds, "doc", "kind"),
         "preprocess_corpus": lambda: preprocess_corpus(
             staged, PipelineConfig(**_PIPELINE)),
+        "checkpointed_run_bucket": run_bucket_query,
     }
     for name, schema in HYBRID_SCHEMAS.items():
         hv = SparkValidator(schema)
@@ -110,7 +131,8 @@ def main(out_path: str) -> None:
              .config("spark.sql.session.timeZone", "UTC")
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
-    plans = call_sites(spark)
+    with tempfile.TemporaryDirectory() as tmp:
+        plans = call_sites(spark, tmp)
     with open(out_path, "w") as f:
         json.dump(plans, f, indent=1, sort_keys=True)
     print(f"{len(plans)} plans -> {out_path}")
