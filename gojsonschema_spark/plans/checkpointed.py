@@ -12,10 +12,26 @@ checkpointing is a coarse partition bucket (e.g. daily ``warc_bucket``,
   when the input is written partitioned by the bucket column; the NULL
   bucket is filtered with ``IS NULL``);
 * writes verdicts to ``<out>/bucket=<v>/`` (idempotent overwrite per
-  bucket = exactly-once on rerun);
-* collects metrics through ``df.observe`` (no extra pass) and writes a
-  ``_lineage.json`` beside the data: inputs, counts, keyword histogram,
-  wall time, engine path (column plan vs UDF), app id.
+  bucket = exactly-once on rerun; the NULL bucket writes
+  ``bucket=__HIVE_DEFAULT_PARTITION__``, as Hive names a NULL partition,
+  so it never shares a directory with the string bucket ``"None"``);
+* collects its counts through ``df.observe`` (no extra pass) and writes
+  a ``_lineage.json`` beside the data: ``bucket`` (null for the NULL
+  bucket), ``n_docs``, ``n_valid``, ``n_invalid``, ``wall_sec``,
+  ``engine_path`` (``column_plan`` or ``interpreter_udf``: how `valid`
+  was computed), ``violations_path``, ``n_inexact``, ``app_id`` and
+  ``finished_at``.
+
+Violation rows are built in SQL where that is exact
+(``violations_path`` ``"sql"``): for a column-plan schema without a
+frontier whose every site emits its rows (``columns.py``), while the
+message templates are those the rows were rendered from. The job then
+has no Python node. Its observation also counts the invalid rows whose
+SQL rows may differ from the interpreter's (``n_inexact``, see
+``columns.violations_inexact``); if there is any, the bucket is written
+again, overwriting, with the interpreter UDF (``"udf_rerun"``) before
+its lineage is written. Other schemas use the UDF (``"udf"``,
+``n_inexact`` null).
 
 The checkpoint is the parquet ``_SUCCESS`` marker AND the lineage file:
 a bucket missing either is re-run. A killed run resumes by rerunning:
@@ -23,11 +39,12 @@ one scan lists the bucket values, and finished buckets are skipped.
 
 :meth:`CheckpointedValidationRun.run` runs one Spark job per bucket, at
 most two in flight. A bucket job is mostly fixed cost (driver-side
-DataFrame build and planning, then a short task whose Python worker adds
-a mostly fixed per-task cost), so one job at a time leaves the executors
-idle most of a run. Two jobs in flight hide one bucket's driver work
-behind the other's execution; every further one holds another Python
-worker and more JVM memory (see ``_IN_FLIGHT``). Buckets start in
+DataFrame build and planning, then a short task, whose Python worker on
+the UDF path adds a mostly fixed per-task cost), so one job at a time
+leaves the executors idle most of a run. Two jobs in flight hide one
+bucket's driver work behind the other's execution; every further one
+holds more JVM memory, and on the UDF path another Python worker (see
+``_IN_FLIGHT``). Buckets start in
 ``bucket_values`` order; after a failure no further bucket starts, the
 one in flight finishes, and the first error propagates.
 """
@@ -48,8 +65,9 @@ from ..spark.engine import SparkValidator
 __all__ = ["CheckpointedValidationRun"]
 
 # Bucket jobs in flight. Two are enough to overlap one bucket's driver
-# work with another's execution; each further job holds one more Python
-# worker (~120 MB) and more JVM working set. On a 4-core host two gave
+# work with another's execution; each further job holds more JVM working
+# set, and on the UDF path one more Python worker (~120 MB; a bucket on
+# the SQL path holds none). On a 4-core host, with the UDF, two gave
 # 1.35x the docs/s of one at +10% peak RSS; three gave 1.85x at +28%.
 _IN_FLIGHT = 2
 
@@ -91,7 +109,8 @@ class CheckpointedValidationRun:
     # -- checkpoint state -----------------------------------------------------
 
     def _bucket_dir(self, value) -> str:
-        return f"{self.output_dir}/bucket={value}"
+        name = "__HIVE_DEFAULT_PARTITION__" if value is None else value
+        return f"{self.output_dir}/bucket={name}"
 
     def is_done(self, value, spark: SparkSession = None) -> bool:
         """A bucket is done once both its ``_SUCCESS`` marker and its
@@ -124,7 +143,9 @@ class CheckpointedValidationRun:
                    "docs": 0, "valid": 0,
                    "skipped": [str(v) for v in self.bucket_values
                                if v not in pending]}
-        self.validator._exprs  # built here once, not raced by two threads
+        # built here once, not raced by two threads
+        if self.validator._sql_violations_ready():
+            self.validator._validate_json_sql(df, self.doc_col)
         with ThreadPoolExecutor(_IN_FLIGHT) as pool:
             running = set()
             while queue or running:
@@ -145,30 +166,62 @@ class CheckpointedValidationRun:
                     summary["valid"] += m["n_valid"]
         return summary
 
+    def bucket_query(self, df: DataFrame, value, sql: bool):
+        """The query that writes one bucket, and its ``Observation``
+        (``n_docs``, ``n_valid``; with ``sql``, also ``n_inexact``).
+
+        ``sql``: `violations` built in SQL
+        (``SparkValidator._validate_json_sql``), else by the interpreter
+        UDF (``validate_json``)."""
+        col = F.col(self.bucket_col)
+        keep = col.isNull() if value is None else col == F.lit(value)
+        metrics = [F.count(F.lit(1)).alias("n_docs"),
+                   F.sum(F.col("valid").cast("long")).alias("n_valid")]
+        if sql:
+            # the validator's frame for the whole input, filtered to the
+            # bucket: the filter is pushed down to the scan, and the
+            # Column DAG is resolved once, not once per bucket (the UDF
+            # path cannot share a frame: no filter passes its
+            # nondeterministic UDF node)
+            validated, inexact = self.validator._validate_json_sql(df, self.doc_col)
+            out = validated.filter(keep)
+            metrics.append(F.sum(F.when(~F.col("valid"), inexact).cast("long"))
+                           .alias("n_inexact"))
+        else:
+            out = self.validator.validate_json(df.filter(keep), self.doc_col)
+        obs = Observation(f"validate-{value}")
+        out = out.observe(obs, *metrics)
+        return out.select(*self.key_cols, "valid", "violations"), obs
+
     def run_bucket(self, df: DataFrame, value) -> dict:
         """Validate one bucket; idempotent (overwrites its directory)."""
         t0 = time.time()
-        col = F.col(self.bucket_col)
-        bucket = df.filter(col.isNull() if value is None else col == F.lit(value))
-        out = self.validator.validate_json(bucket, self.doc_col)
-        obs = Observation(f"validate-{value}")
-        out = out.observe(obs,
-                          F.count(F.lit(1)).alias("n_docs"),
-                          F.sum(F.col("valid").cast("long")).alias("n_valid"))
-        result = out.select(*self.key_cols, "valid", "violations")
         target = self._bucket_dir(value)
+        sql = self.validator._sql_violations_ready()
+        result, obs = self.bucket_query(df, value, sql)
         result.write.mode("overwrite").parquet(target)
+        n_inexact, path = None, "udf"
+        if sql:
+            n_inexact, path = obs.get["n_inexact"] or 0, "sql"
+            if n_inexact:
+                # some rows' SQL violations may differ from the
+                # interpreter's: write the bucket again with the UDF
+                result, obs = self.bucket_query(df, value, sql=False)
+                result.write.mode("overwrite").parquet(target)
+                path = "udf_rerun"
         n_docs = obs.get["n_docs"]
         n_valid = obs.get["n_valid"] or 0
         spark = df.sparkSession
         lineage = {
-            "bucket": str(value),
+            "bucket": None if value is None else str(value),
             "n_docs": n_docs,
             "n_valid": int(n_valid),
             "n_invalid": n_docs - int(n_valid),
             "wall_sec": round(time.time() - t0, 3),
             "engine_path": ("column_plan" if self.validator.uses_column_plan
                             else "interpreter_udf"),
+            "violations_path": path,
+            "n_inexact": n_inexact,
             "app_id": spark.sparkContext.applicationId,
             "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }

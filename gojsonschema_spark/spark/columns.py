@@ -18,6 +18,12 @@ children's detectors to its own value where it composes their
 predicates. Rows the root detector flags are re-verdicted by the exact
 interpreter (engine.py hybrid).
 
+The same walk gives each site a violation emitter (``rows``): the
+interpreter's violation rows for the site, built in SQL from the site's
+own predicate (see "violation rows" below). A site without one (a
+combinator, an array keyword, a ``$ref``, a UDF format, ...) leaves the
+whole schema without SQL violation rows.
+
 Schemas outside the expressible subset raise :class:`UnsupportedSchema`
 and route to the Arrow-batched pandas-UDF interpreter instead (engine.py).
 Known, documented divergences of the column path vs the exact interpreter:
@@ -31,16 +37,22 @@ differential gate).
 
 from __future__ import annotations
 
+import functools
+import json
 import math
+import threading
+from contextlib import contextmanager
 from fractions import Fraction
 
 from pyspark.sql import Column, functions as F
 
 from ..core.compiler import CompiledSchema, SubSchema
+from ..core.errors import ROOT_CONTEXT, Violation, field_of
 from ..core.goregex import JavaRegexDivergence, translate_re2_java
 from .format_columns import format_column_pred
 
-__all__ = ["ColumnPlanCompiler", "UnsupportedSchema"]
+__all__ = ["ColumnPlanCompiler", "UnsupportedSchema", "shared_predicates",
+           "violations_inexact"]
 
 _SIMPLE_KEY = __import__("re").compile(r"^[^\x00-\x1f]*$")
 
@@ -87,7 +99,50 @@ def _nn(c: Column) -> Column:
     leaf in coalesce() disables CSE and the variant parse re-evaluates per
     keyword (measured 30x+ slowdown). EqualNullSafe keeps the tree
     unconditional -> parse_json/map-cast evaluate once per row."""
-    return c.eqNullSafe(F.lit(True))
+    return c.eqNullSafe(True)
+
+
+# --- shared applications ------------------------------------------------------------
+#
+# Building a Column costs py4j round trips per expression node. The
+# valid bit probes one value many times (its map, its string form), and
+# the violation rows test the same site predicates, on the same values;
+# inside shared_predicates() a predicate or probe applied again to the
+# same Column returns the Column it built the first time. The expression
+# trees are the same either way.
+
+_SHARED = threading.local()
+
+
+@contextmanager
+def shared_predicates():
+    """Within the block, plans applied to one variant Column share their
+    predicate Columns (the valid bit, then its violation rows)."""
+    _SHARED.memo = {}
+    try:
+        yield
+    finally:
+        _SHARED.memo = None
+
+
+def _applied(fn, v: Column) -> Column:
+    """``fn(v)``, shared inside :func:`shared_predicates`."""
+    memo = getattr(_SHARED, "memo", None)
+    if memo is None:
+        return fn(v)
+    key = (id(fn), id(v))
+    if key not in memo:
+        memo[key] = (fn, v, fn(v))  # fn and v held: their ids stay unique
+    return memo[key][2]
+
+
+def _shared(fn):
+    """``fn(v)`` through :func:`_applied`."""
+    @functools.wraps(fn)
+    def apply(v: Column) -> Column:
+        return _applied(fn, v)
+
+    return apply
 
 
 # --- variant type classification ---------------------------------------------
@@ -99,32 +154,38 @@ def _nn(c: Column) -> Column:
 # number). All probes are plain deterministic expressions -> runtime CSE
 # shares them across keywords.
 
+@_shared
 def _mp(v: Column) -> Column:
     return F.try_variant_get(v, "$", "map<string,variant>")
 
 
+@_shared
 def _arr(v: Column) -> Column:
     return F.try_variant_get(v, "$", "array<variant>")
 
 
+@_shared
 def _fc(v: Column) -> Column:
     """First char of the JSON rendering (scalar kind discriminator)."""
-    return F.substring(F.to_json(v), 1, 1)
+    return F.substring(_applied(F.to_json, v), 1, 1)
 
 
+@_shared
 def _is_null(v: Column) -> Column:
     return _nn(F.is_variant_null(v))
 
 
+@_shared
 def _is_string(v: Column) -> Column:
     # '"Infinity"' is also the rendering of an overflowed DOUBLE — see
     # _INF_RENDERINGS below; only such rows pay the schema_of_variant call
-    txt = F.to_json(v)
+    txt = _applied(F.to_json, v)
     return _nn(F.when(txt.isin(*_INF_RENDERINGS),
                       F.schema_of_variant(v) == F.lit("STRING"))
                 .otherwise(F.substring(txt, 1, 1) == '"'))
 
 
+@_shared
 def _is_boolean(v: Column) -> Column:
     return _nn(_fc(v).isin("t", "f"))
 
@@ -138,14 +199,16 @@ def _is_boolean(v: Column) -> Column:
 _INF_RENDERINGS = ('"Infinity"', '"-Infinity"', '"NaN"')
 
 
+@_shared
 def _is_number(v: Column) -> Column:
-    txt = F.to_json(v)
+    txt = _applied(F.to_json, v)
     return _nn(F.when(txt.isin(*_INF_RENDERINGS),
                       F.schema_of_variant(v) == F.lit("DOUBLE"))
                 .otherwise(F.substring(txt, 1, 1).isin(
                     "-", "0", "1", "2", "3", "4", "5", "6", "7", "8", "9")))
 
 
+@_shared
 def _num_dec(v: Column) -> Column:
     """Exact decimal(38,18) value, or NULL when the cast would be lossy.
 
@@ -160,7 +223,7 @@ def _num_dec(v: Column) -> Column:
     in _scalar_canon_key uniqueItems keys). The digits at fraction
     positions 19..S (S = frac_digits - exp, the effective scale) are the
     last S-18 significand digits."""
-    txt = F.to_json(v)
+    txt = _applied(F.to_json, v)
     mant_int = F.regexp_extract(txt, r"^-?([0-9]+)", 1)
     frac = F.regexp_extract(txt, r"\.([0-9]+)", 1)
     exp = F.coalesce(
@@ -174,6 +237,7 @@ def _num_dec(v: Column) -> Column:
     return F.when(~lossy, F.try_variant_get(v, "$", "decimal(38,18)"))
 
 
+@_shared
 def _num_dbl(v: Column) -> Column:
     return F.try_variant_get(v, "$", "double")
 
@@ -282,6 +346,180 @@ def _det_keys(match, d):
     return det
 
 
+# --- violation rows ---------------------------------------------------------------
+#
+# rows(v, ctx) -> array of rows gives the rows the interpreter reports
+# for the value v at context ctx (core/interpreter.py), in its order. A
+# site emits when(pred, NULL) else its rows. A node concatenates its
+# sites' rows in the interpreter's order, and a failed type check is its
+# only row. Messages render through errors.Violation with the templates
+# as they stand when the Columns are built; a detail known only at run
+# time (an extra key) is spliced in where the template puts it.
+#
+# While the plan builds, a row is struct(col1 = its known fields, col2 =
+# its value); the known fields are one literal, and _finished assembles
+# the violation structs once, at the root (a per-row withField costs
+# more analysis than the rest of the row).
+
+_KNOWN_TYPE = ("struct<field:string,keyword:string,message:string,"
+               "details:map<string,string>>")
+_ROWS_TYPE = f"array<struct<col1:{_KNOWN_TYPE},col2:string>>"
+_ARG = "\x00gjs-arg\x00"  # the run-time detail, while the message renders
+
+# order of a node's sites: the interpreter checks number bounds, then the
+# object's own keywords, then const/enum/format, then string keywords,
+# then the properties; a value reaches only its own type's families
+_NUMBER, _OBJECT, _COMMON, _STRING, _CHILD = range(5)
+_NO_SITE = (None, None)  # a site without SQL rows
+
+
+def _no_rows() -> Column:
+    return F.array().cast(_ROWS_TYPE)
+
+
+def _literal(value, ddl: str) -> Column:
+    """A constant of type ``ddl`` as one Column: one JSON literal instead
+    of one Column per field (each Column costs py4j round trips)."""
+    return F.from_json(F.lit(json.dumps(value)), ddl)
+
+
+def _known(keyword: str, ctx: tuple, details: dict) -> dict:
+    """The fields of a row known now, as ``udf._violation_rows`` renders
+    them."""
+    return {"field": field_of(ctx), "keyword": keyword,
+            "message": Violation(keyword, ctx, None, details).description(),
+            "details": {k: str(x) for k, x in details.items()}}
+
+
+def _violation(keyword: str, ctx: tuple, value: Column, details: dict) -> Column:
+    """One row; at most one detail is a Column, the others are known now."""
+    args = [x for x in details.values() if isinstance(x, Column)]
+    if len(args) > 1:
+        raise ValueError(f"{keyword}: more than one run-time detail")
+    if not args:
+        known = _literal(_known(keyword, ctx, details), _KNOWN_TYPE)
+    else:
+        static = {k: _ARG if isinstance(x, Column) else x for k, x in details.items()}
+        pieces = _known(keyword, ctx, static)["message"].split(_ARG)
+        parts = [F.lit(pieces[0])]
+        for piece in pieces[1:]:
+            parts += [args[0], F.lit(piece)]
+        kv = []
+        for k, x in details.items():
+            kv += [F.lit(k), x if isinstance(x, Column) else F.lit(str(x))]
+        known = F.struct(F.lit(field_of(ctx)).alias("field"),
+                         F.lit(keyword).alias("keyword"),
+                         F.concat(*parts).alias("message"),
+                         F.create_map(*kv).alias("details"))
+    return F.struct(known, _applied(F.to_json, value))
+
+
+def _finished(rows: Column) -> Column:
+    """Violation structs (``udf.VIOLATION_SCHEMA``'s fields) from rows."""
+    return F.transform(rows, lambda r: F.struct(
+        r["col1"]["field"].alias("field"), r["col1"]["keyword"].alias("keyword"),
+        r["col1"]["message"].alias("message"), r["col2"].alias("value"),
+        r["col1"]["details"].alias("details")))
+
+
+def _site(pred, keyword: str, details: dict):
+    """The emitter of a site: its one row where ``pred`` fails (is false
+    or NULL)."""
+    def rows(v: Column, ctx: tuple) -> Column:
+        return F.when(_applied(pred, v), None).otherwise(
+            F.array(_violation(keyword, ctx, v, details)))
+
+    return rows
+
+
+# the instance type invalid_type reports as "given", by the first
+# character of the value's rendering; every number reports "number": its
+# row is inexact whatever it says (the value renders digits, see
+# violations_inexact), so integers need not be told apart here
+_KIND_OF = {'"': "string", "{": "object", "[": "array", "n": "null",
+            "t": "boolean", "f": "boolean", "-": "number",
+            **{d: "number" for d in "0123456789"}}
+
+
+def _node_rows(node: SubSchema, type_pred, sites: list):
+    """A node's emitter from its ``(order, emit)`` sites; None when some
+    site has no SQL rows."""
+    if any(emit is None for _, emit in sites):
+        return None
+    emits = [emit for _, emit in sorted(sites, key=lambda s: s[0])]
+
+    def rows(v: Column, ctx: tuple) -> Column:
+        out = (F.flatten(F.array_compact(F.array(*[e(v, ctx) for e in emits])))
+               if emits else _no_rows())
+        if type_pred is None:
+            return out
+        # the invalid_type row for each first character of the value
+        expected = node.types_string()
+        by_char = {c: _known("invalid_type", ctx, {"expected": expected, "given": kind})
+                   for c, kind in _KIND_OF.items()}
+        txt = _applied(F.to_json, v)
+        bad = F.element_at(_literal(by_char, f"map<string,{_KNOWN_TYPE}>"),
+                           F.substring(txt, 1, 1))
+        return F.when(_applied(type_pred, v), out).otherwise(
+            F.array(F.struct(bad, txt)))
+
+    return rows
+
+
+# Where the SQL rows of an invalid row may differ from the interpreter's
+# (measured: ROADMAP "How to_json(variant) differs from render_value").
+# One SQL expression, not ~100 Columns (each costs py4j round trips); its
+# regexes are raw literals, read the same whatever the parser's escaping.
+_STRING_RX = r'"[^"\\]*+(?:\\.[^"\\]*+)*+"'
+# JSON text with each string as s, each number as 0 and no whitespace:
+# equal lengths mean the same tokens
+_SHAPE = (r"regexp_replace(regexp_replace(regexp_replace({}, r'" + _STRING_RX
+          + r"', 's'), r'[ \t\n\r]+', ''), r'-?[0-9][0-9.eE+-]*', '0')")
+_INEXACT = r"""
+  coalesce(exists({violations}, x -> coalesce(
+      regexp_replace(x.value, r'""" + _STRING_RX + r"""', '') rlike r'[0-9]'
+      or x.value rlike r'"-?Infinity"|"NaN"|\\u00[01][A-F]', false)), false)
+  or coalesce(size(filter({violations},
+        x -> x.keyword = 'additional_property_not_allowed'))
+      > size(array_distinct(transform(filter({violations},
+        x -> x.keyword = 'additional_property_not_allowed'), x -> x.field))), false)
+  or coalesce(CASE WHEN try_parse_json({doc}) IS NULL
+      THEN {doc} rlike r'NaN|Infinity'
+      ELSE {doc} rlike r'\\u[dD][89a-fA-F]'
+        or regexp_replace({doc}, r'""" + _STRING_RX + r"""', 's')
+           rlike r'[0-9]{{19}}|[0-9][eE]'
+        or length(""" + _SHAPE.format("{doc}") + r""")
+           != length(""" + _SHAPE.format("to_json(try_parse_json({doc}))") + r""")
+      END, false)"""
+
+
+def _quoted(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def violations_inexact(violations: str, doc: str) -> Column:
+    """True where the SQL violation rows of an invalid row may differ from
+    the interpreter's, so the row must be elaborated by the interpreter:
+
+    * a failing value renders a number (Spark prints ``1.5``, ``0``,
+      ``100.0`` and exact integers where the interpreter keeps ``1.50``,
+      ``-0``, ``1e2`` or prints Go float64), an overflowed double
+      (``"Infinity"``) or a control character (Spark's ``\\u001F``, not
+      ``\\u001f``);
+    * one object has two or more extra properties (a variant sorts its
+      keys, the interpreter reports them in document order);
+    * the document holds a number the decimal(38,18) path cannot hold (a
+      digit run of 19 or more, an exponent), where the SQL verdict of a
+      numeric site may differ, or an escaped UTF-16 surrogate (Spark
+      reads a lone one as ``?``);
+    * Spark and Python parse the document differently: Spark reads the
+      first value and ignores what follows it, Python rejects trailing
+      content; Python reads ``NaN`` and ``Infinity``, Spark does not.
+
+    ``violations`` and ``doc`` name the columns."""
+    return F.expr(_INEXACT.format(violations=_quoted(violations), doc=_quoted(doc)))
+
+
 class ColumnPlanCompiler:
     """Lowers a compiled schema to a pure-SQL predicate and its reach
     detector, both built by one walk (:meth:`_node`).
@@ -304,19 +542,33 @@ class ColumnPlanCompiler:
         self._hof_depth = 0  # >0: pred will run inside a HOF lambda -> SQL-only
         self._nodes = 0
         self.frontier_plan = None  # set by compile() when a frontier exists
+        self.violations_plan = None  # set by compile() when every site has rows
 
     def compile(self):
         """Return pred(v: variant Column) -> boolean Column ('valid' bit).
 
-        Side effect: ``self.frontier_plan`` becomes the reach-detector
+        Side effects: ``self.frontier_plan`` becomes the reach-detector
         callable (variant Column -> boolean Column) when some site was
-        compiled optimistically, else stays None."""
-        pred, det = self._node(self.compiled.root)
+        compiled optimistically, else stays None; ``self.violations_plan``
+        becomes the violation-rows callable (non-NULL variant Column ->
+        array of violation structs) when every site emits its rows in
+        SQL, else stays None."""
+        pred, det, rows = self._node(self.compiled.root)
         if det is not None:
+            if rows is not None:
+                raise RuntimeError(
+                    "violation rows for a schema with a frontier: an "
+                    "optimistic site must not emit rows")
+
             def frontier(v: Column) -> Column:
                 return v.isNotNull() & _nn(det(v))
 
             self.frontier_plan = frontier
+        if rows is not None:
+            def violations(v: Column) -> Column:
+                return _finished(rows(v, ROOT_CONTEXT))
+
+            self.violations_plan = violations
 
         def plan(v: Column) -> Column:
             # malformed / SQL-null documents are invalid on this path.
@@ -326,24 +578,25 @@ class ColumnPlanCompiler:
         return plan
 
     def _sub(self, node: SubSchema, dets: list, lift=None, hof: bool = False):
-        """Compile a child; return its predicate. Its detector, lifted to
-        this node's value by ``lift``, joins ``dets``. ``hof``: the
-        predicate runs inside a HOF lambda, where Python-UDF-backed pieces
-        (parser formats) are not allowed."""
+        """Compile a child; return its predicate and its rows emitter. Its
+        detector, lifted to this node's value by ``lift``, joins ``dets``.
+        ``hof``: the predicate runs inside a HOF lambda, where
+        Python-UDF-backed pieces (parser formats) are not allowed."""
         self._hof_depth += hof
         try:
-            pred, det = self._node(node)
+            pred, det, rows = self._node(node)
         finally:
             self._hof_depth -= hof
         if det is not None:
             dets.append(det if lift is None else lift(det))
-        return pred
+        return pred, rows
 
     # -- node compilation ----------------------------------------------------
 
     def _node(self, node: SubSchema):
-        """``(pred, det)``: the node's predicate and its reach detector
-        (None when no site below was compiled optimistically)."""
+        """``(pred, det, rows)``: the node's predicate, its reach detector
+        (None when no site below was compiled optimistically) and its
+        violation-rows emitter (None when some site below has none)."""
         self._nodes += 1
         if self._nodes > self.max_nodes:
             raise UnsupportedSchema(
@@ -351,7 +604,11 @@ class ColumnPlanCompiler:
                 "(route to interpreter)")
         if node.pass_ is not None:
             val = bool(node.pass_)
-            return (lambda v: F.lit(val)), None
+            if val:
+                rows = lambda v, ctx: _no_rows()
+            else:
+                rows = lambda v, ctx: F.array(_violation("false", ctx, v, {}))
+            return (lambda v: F.lit(val)), None, rows
 
         if node.ref_schema is not None:
             rid = id(node.ref_schema)
@@ -359,31 +616,35 @@ class ColumnPlanCompiler:
                 # unroll frontier: optimistically TRUE here; its detector
                 # routes rows that actually get this deep to the exact
                 # interpreter (engine.py hybrid)
-                return (lambda v: F.lit(True)), (lambda v: F.lit(True))
+                return (lambda v: F.lit(True)), (lambda v: F.lit(True)), None
             self._stack.append(rid)
             try:
-                return self._node(node.ref_schema)
+                pred, det, _ = self._node(node.ref_schema)
+                return pred, det, None
             finally:
                 self._stack.pop()
 
         parts = []  # list of fn(v) -> Column
         dets = []  # list of fn(v) -> Column
+        sites = []  # (order, emit) pairs; emit(v, ctx) -> array or NULL
 
+        type_pred = None
         if node.types:
-            parts.append(self._type_check(node.types))
-        parts.extend(self._combinators(node, dets))
-        parts.extend(self._const_enum(node))
-        parts.extend(self._number_keywords(node, dets))
-        parts.extend(self._string_keywords(node))
-        parts.extend(self._array_keywords(node, dets))
-        parts.extend(self._object_keywords(node, dets))
+            type_pred = self._type_check(node.types)
+            parts.append(type_pred)
+        parts.extend(self._combinators(node, dets, sites))
+        parts.extend(self._const_enum(node, sites))
+        parts.extend(self._number_keywords(node, dets, sites))
+        parts.extend(self._string_keywords(node, sites))
+        parts.extend(self._array_keywords(node, dets, sites))
+        parts.extend(self._object_keywords(node, dets, sites))
         if node.format:
-            parts.append(self._format_check(node, dets))
+            parts.append(self._format_check(node, dets, sites))
 
         def pred(v: Column) -> Column:
-            return _all([p(v) for p in parts])
+            return _all([_applied(p, v) for p in parts])
 
-        return pred, _det_any(dets)
+        return pred, _det_any(dets), _node_rows(node, type_pred, sites)
 
     def _type_check(self, types: list[str]):
         def check(v: Column) -> Column:
@@ -412,17 +673,17 @@ class ColumnPlanCompiler:
 
     # -- combinators ----------------------------------------------------------
 
-    def _combinators(self, node: SubSchema, dets: list):
+    def _combinators(self, node: SubSchema, dets: list, sites: list):
         parts = []
         if node.any_of:
-            subs = [self._sub(s, dets) for s in node.any_of]
+            subs = [self._sub(s, dets)[0] for s in node.any_of]
             parts.append(lambda v, subs=subs: F.greatest(*[s(v) for s in subs])
                          if len(subs) > 1 else subs[0](v))
         if node.all_of:
-            subs = [self._sub(s, dets) for s in node.all_of]
+            subs = [self._sub(s, dets)[0] for s in node.all_of]
             parts.append(lambda v, subs=subs: _all([s(v) for s in subs]))
         if node.one_of:
-            subs = [self._sub(s, dets) for s in node.one_of]
+            subs = [self._sub(s, dets)[0] for s in node.one_of]
 
             def one_of(v, subs=subs):
                 total = None
@@ -433,13 +694,13 @@ class ColumnPlanCompiler:
 
             parts.append(one_of)
         if node.not_ is not None:
-            sub = self._sub(node.not_, dets)
+            sub, _ = self._sub(node.not_, dets)
             parts.append(lambda v, sub=sub: ~sub(v))
         if node.if_ is not None:
-            p_if = self._sub(node.if_, dets)
-            p_then = (self._sub(node.then_, dets)
+            p_if, _ = self._sub(node.if_, dets)
+            p_then = (self._sub(node.then_, dets)[0]
                       if node.then_ is not None else None)
-            p_else = (self._sub(node.else_, dets)
+            p_else = (self._sub(node.else_, dets)[0]
                       if node.else_ is not None else None)
 
             def ite(v, p_if=p_if, p_then=p_then, p_else=p_else):
@@ -464,7 +725,7 @@ class ColumnPlanCompiler:
                         return lambda v: F.element_at(
                             _mp(v), F.lit(key)).isNotNull() & _nn(d(v))
 
-                    sub = self._sub(dep, dets, present_det)
+                    sub, _ = self._sub(dep, dets, present_det)
 
                     def dep_schema(v, key=key, sub=sub):
                         mp = _mp(v)
@@ -472,6 +733,8 @@ class ColumnPlanCompiler:
                         return mp.isNull() | ~_nn(present) | sub(v)
 
                     parts.append(dep_schema)
+        if parts:
+            sites.append(_NO_SITE)
         return parts
 
     # -- const / enum ----------------------------------------------------------
@@ -567,10 +830,13 @@ class ColumnPlanCompiler:
         sql = f"cast({_frac_str(frac)} as decimal(38,18))"
         return lambda: F.expr(sql)
 
-    def _const_enum(self, node: SubSchema):
+    def _const_enum(self, node: SubSchema, sites: list):
         parts = []
         if node.const_ is not None:
-            parts.append(self._scalar_literal_pred(node.const_))
+            const = self._scalar_literal_pred(node.const_)
+            parts.append(const)
+            sites.append(((_COMMON, 0), _site(const, "const",
+                                              {"allowed": node.const_})))
         if node.enum:
             alt_preds = [self._scalar_literal_pred(c) for c in node.enum]
 
@@ -582,12 +848,17 @@ class ColumnPlanCompiler:
                 return out
 
             parts.append(enum_pred)
+            sites.append(((_COMMON, 1), _site(
+                enum_pred, "enum", {"allowed": ", ".join(node.enum)})))
         return parts
 
     # -- numbers -----------------------------------------------------------------
 
-    def _number_keywords(self, node: SubSchema, dets: list):
+    def _number_keywords(self, node: SubSchema, dets: list, sites: list):
         parts = []
+        # (order, keyword, detail) of each bound's violation
+        bound_rows = {"<=": (0, "number_lte", "max"), "<": (1, "number_lt", "max"),
+                      ">=": (2, "number_gte", "min"), ">": (3, "number_gt", "min")}
 
         def guard(v, cond):
             return ~_is_number(v) | cond
@@ -617,6 +888,8 @@ class ColumnPlanCompiler:
                 return guard(v, _nn(c))
 
             parts.append(cmp)
+            order, keyword, detail = bound_rows[op]
+            sites.append(((_NUMBER, order), _site(cmp, keyword, {detail: bound})))
 
         if node.multiple_of is not None:
             m = node.multiple_of
@@ -637,11 +910,12 @@ class ColumnPlanCompiler:
                 return guard(v, _nn(c))
 
             parts.append(multiple)
+            sites.append(_NO_SITE)
         return parts
 
     # -- strings -----------------------------------------------------------------
 
-    def _string_keywords(self, node: SubSchema):
+    def _string_keywords(self, node: SubSchema, sites: list):
         parts = []
         if node.min_length is None and node.max_length is None and node.pattern is None:
             return parts
@@ -652,22 +926,27 @@ class ColumnPlanCompiler:
         if node.min_length is not None:
             n = node.min_length
             parts.append(lambda v, n=n: ~_is_string(v) | _nn(F.length(s_of(v)) >= n))
+            sites.append(((_STRING, 0), _site(parts[-1], "string_gte", {"min": n})))
         if node.max_length is not None:
             n = node.max_length
             parts.append(lambda v, n=n: ~_is_string(v) | _nn(F.length(s_of(v)) <= n))
+            sites.append(((_STRING, 1), _site(parts[-1], "string_lte", {"max": n})))
         if node.pattern is not None:
             jp = _java_pattern(node.pattern_src)
             parts.append(lambda v, jp=jp: ~_is_string(v) | _nn(s_of(v).rlike(jp)))
+            sites.append(((_STRING, 2), _site(parts[-1], "pattern",
+                                              {"pattern": node.pattern_src})))
         return parts
 
     # -- arrays ------------------------------------------------------------------
 
-    def _array_keywords(self, node: SubSchema, dets: list):
+    def _array_keywords(self, node: SubSchema, dets: list, sites: list):
         parts = []
         has_items = bool(node.items_children) or node.additional_items is not None
         if not (has_items or node.min_items is not None or node.max_items is not None
                 or node.contains is not None or node.unique_items):
             return parts
+        sites.append(_NO_SITE)
 
         def guard(v, cond):
             return _arr(v).isNull() | cond
@@ -683,12 +962,12 @@ class ColumnPlanCompiler:
             return _det_exists(_arr, d)
 
         if node.items_single and node.items_children:
-            sub = self._sub(node.items_children[0], dets, each, hof=True)
+            sub, _ = self._sub(node.items_children[0], dets, each, hof=True)
             parts.append(lambda v, sub=sub: guard(
                 v, _nn(F.forall(_arr(v), lambda x: sub(x)))))
         elif node.items_children:
             subs = [self._sub(s, dets, lambda d, i=i: _det_at(
-                        lambda v: F.try_element_at(_arr(v), F.lit(i + 1)), d))
+                        lambda v: F.try_element_at(_arr(v), F.lit(i + 1)), d))[0]
                     for i, s in enumerate(node.items_children)]
             n = len(subs)
 
@@ -708,8 +987,8 @@ class ColumnPlanCompiler:
                     arr = _arr(v)
                     return F.slice(arr, n + 1, F.greatest(F.size(arr) - n, F.lit(0)))
 
-                sub = self._sub(node.additional_items, dets,
-                                lambda d: _det_exists(tail, d), hof=True)
+                sub, _ = self._sub(node.additional_items, dets,
+                                   lambda d: _det_exists(tail, d), hof=True)
 
                 def extra_items(v, sub=sub, n=n):
                     return guard(v, (F.size(_arr(v)) <= n)
@@ -718,7 +997,7 @@ class ColumnPlanCompiler:
                 parts.append(extra_items)
 
         if node.contains is not None:
-            sub = self._sub(node.contains, dets, each, hof=True)
+            sub, _ = self._sub(node.contains, dets, each, hof=True)
             parts.append(lambda v, sub=sub: guard(
                 v, _nn(F.exists(_arr(v), lambda x: sub(x)))))
 
@@ -759,7 +1038,7 @@ class ColumnPlanCompiler:
 
     # -- objects -----------------------------------------------------------------
 
-    def _object_keywords(self, node: SubSchema, dets: list):
+    def _object_keywords(self, node: SubSchema, dets: list, sites: list):
         parts = []
         needs_map = (node.required or node.properties_children
                      or node.pattern_properties
@@ -780,31 +1059,43 @@ class ColumnPlanCompiler:
         if node.min_properties is not None:
             n = node.min_properties
             parts.append(lambda v, n=n: guard(v, _nn(F.size(_mp(v)) >= n)))
+            sites.append(((_OBJECT, 0), _site(parts[-1], "array_min_properties",
+                                              {"min": n})))
         if node.max_properties is not None:
             n = node.max_properties
             parts.append(lambda v, n=n: guard(v, _nn(F.size(_mp(v)) <= n)))
+            sites.append(((_OBJECT, 1), _site(parts[-1], "array_max_properties",
+                                              {"max": n})))
 
         for req in node.required:
             parts.append(lambda v, req=req: guard(
                 v, F.element_at(_mp(v), F.lit(req)).isNotNull()))
+            sites.append(((_OBJECT, 2), _site(parts[-1], "required",
+                                              {"property": req})))
 
         for child in node.properties_children:
             def at(v, key=child.property):
                 return F.element_at(_mp(v), F.lit(key))
 
-            sub = self._sub(child, dets, lambda d, at=at: _det_at(at, d))
+            sub, rows = self._sub(child, dets, lambda d, at=at: _det_at(at, d))
 
             def prop(v, at=at, sub=sub):
-                val = at(v)
+                val = _applied(at, v)
                 return guard(v, val.isNull() | _nn(sub(val)))
 
             parts.append(prop)
+
+            def child_rows(v, ctx, at=at, rows=rows, key=child.property):
+                val = _applied(at, v)
+                return F.when(val.isNotNull(), rows(val, ctx + (key,)))
+
+            sites.append(((_CHILD,), child_rows if rows is not None else None))
 
         jps = []
         for pat, (rx, child) in node.pattern_properties.items():
             jp = _java_pattern(pat)
             jps.append(jp)
-            sub = self._sub(child, dets, lambda d, jp=jp: _det_keys(
+            sub, _ = self._sub(child, dets, lambda d, jp=jp: _det_keys(
                 lambda k: k.rlike(jp), d), hof=True)
 
             def pat_props(v, jp=jp, sub=sub):
@@ -814,6 +1105,7 @@ class ColumnPlanCompiler:
                     lambda k: ~k.rlike(jp) | _nn(sub(F.element_at(mp, k))))))
 
             parts.append(pat_props)
+            sites.append(_NO_SITE)
 
         if node.additional_properties is not None:
             declared = tuple(c.property for c in node.properties_children)
@@ -831,9 +1123,10 @@ class ColumnPlanCompiler:
             elif node.additional_properties is True:
                 ap_sub = "any"
             else:
-                ap_sub = self._sub(node.additional_properties, dets,
-                                   lambda d: _det_keys(lambda k: ~covered(k), d),
-                                   hof=True)
+                ap_sub, _ = self._sub(node.additional_properties, dets,
+                                      lambda d: _det_keys(lambda k: ~covered(k), d),
+                                      hof=True)
+                sites.append(_NO_SITE)
 
             if ap_sub != "any":
                 def addl(v, ap_sub=ap_sub):
@@ -846,14 +1139,28 @@ class ColumnPlanCompiler:
 
                 parts.append(addl)
 
+            if ap_sub is None:
+                def extra_rows(v, ctx):
+                    # one row per extra key, in the variant's (sorted) key
+                    # order: see violations_inexact
+                    mp = _mp(v)
+                    return F.transform(
+                        F.filter(F.map_keys(mp), lambda k: ~covered(k)),
+                        lambda k: _violation("additional_property_not_allowed",
+                                             ctx, F.element_at(mp, k),
+                                             {"property": k}))
+
+                sites.append(((_OBJECT, 3), extra_rows))
+
         if node.property_names is not None:
             # a key is validated as a string instance: the key cast to
             # variant, inside the forall over the keys
             def keys(v):
                 return F.map_keys(_mp(v))
 
+            sites.append(_NO_SITE)
             try:
-                sub = self._sub(node.property_names, dets, lambda d: _det_exists(
+                sub, _ = self._sub(node.property_names, dets, lambda d: _det_exists(
                     keys, lambda k: d(k.cast("variant"))), hof=True)
             except UnsupportedSchema as e:
                 if "exceeds" in str(e):
@@ -867,9 +1174,11 @@ class ColumnPlanCompiler:
 
         return parts
 
-    def _format_check(self, node: SubSchema, dets: list):
+    def _format_check(self, node: SubSchema, dets: list, sites: list):
         name = node.format
         pred, is_sql, is_custom = format_column_pred(name, self.compiled.formats)
+        if not is_sql:
+            sites.append(_NO_SITE)  # a Python checker, not a SQL model
         if self._hof_depth > 0 and not is_sql:
             # a Python UDF can't run inside a HOF lambda: go hybrid — rows
             # whose value actually occupies this position (a string for
@@ -891,6 +1200,8 @@ class ColumnPlanCompiler:
             s = F.try_variant_get(v, "$", "string")
             return ~_is_string(v) | _nn(pred(s))
 
+        if is_sql:
+            sites.append(((_COMMON, 2), _site(check, "format", {"format": name})))
         return check
 
 

@@ -5,7 +5,8 @@ Compile once on the driver, validate set-at-a-time over DataFrames:
 * pass 1 (hot path): pure-SQL VARIANT predicate DAG -> ``valid`` bit,
   whole-stage codegen, no Python in the loop;
 * pass 2 (lazy): violation rows elaborated by the Arrow-batched interpreter
-  UDF only for failing documents;
+  UDF only for failing documents (a checkpointed bucket builds them in
+  SQL where that is exact: :meth:`SparkValidator._validate_json_sql`);
 * fallback: schemas outside the Column subset run entirely on the
   interpreter UDF (same verdicts, exact semantics).
 
@@ -33,8 +34,11 @@ from typing import Callable, NamedTuple
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..core.compiler import Draft, SchemaCompiler
-from .columns import ColumnPlanCompiler, UnsupportedSchema
-from .udf import make_verdict_udf, make_violations_udf
+from ..core.errors import _FIELD_RX, MESSAGES
+from .columns import (ColumnPlanCompiler, UnsupportedSchema, shared_predicates,
+                      violations_inexact)
+from .udf import (_PARSE_FAILED, VIOLATION_SCHEMA, make_verdict_udf,
+                  make_violations_udf)
 
 __all__ = ["SparkValidator", "MultiSchemaValidator"]
 
@@ -46,12 +50,19 @@ class _Expressions(NamedTuple):
     ``deep`` (the frontier reach detector, hybrid plans only) read the
     ``__gjs_v`` variant. ``verdict`` fills only the `valid` field;
     ``verdict_full`` also fills `violations` and exists only on the
-    interpreter path; ``violations`` is the pass-2 elaboration UDF."""
+    interpreter path; ``violations`` is the pass-2 elaboration UDF.
+    ``rows`` builds the violations of an invalid row in SQL from
+    ``__gjs_v`` (``udf._PARSE_FAILED`` for a NULL one); it exists when
+    every site of the schema emits its rows and no template uses a ``|``
+    helper, and ``messages`` is the ``MESSAGES`` its messages were
+    rendered from."""
     valid: Column | None
     deep: Column | None
     verdict: Callable[..., Column]
     verdict_full: Callable[..., Column] | None
     violations: Callable[..., Column]
+    rows: Column | None
+    messages: dict
 
 
 def _barrier(df: DataFrame, name: str, expr: Column) -> DataFrame:
@@ -73,11 +84,23 @@ def _case(pairs: list, otherwise: Column | None = None) -> Column:
     return expr if otherwise is None else expr.otherwise(otherwise)
 
 
+def _rows_literal(rows: list[dict]) -> Column:
+    """Fixed violation rows (``udf._PARSE_FAILED``) as a Column."""
+    return F.array(*[F.struct(
+        F.lit(r["field"]).alias("field"), F.lit(r["keyword"]).alias("keyword"),
+        F.lit(r["message"]).alias("message"),
+        F.lit(r["value"]).cast("string").alias("value"),
+        F.create_map().cast("map<string,string>").alias("details"))
+        for r in rows])
+
+
 def _dispatch(df: DataFrame, doc_col: str, branches: list,
               valid_col: str, violations_col: str | None = None,
-              otherwise: Column | None = None) -> DataFrame:
+              otherwise: Column | None = None, sql: bool = False) -> DataFrame:
     """Append ``valid_col`` (+ ``violations_col``) for the branch whose
-    condition holds on each row; ``otherwise`` decides the rest."""
+    condition holds on each row; ``otherwise`` decides the rest. ``sql``:
+    the lone branch builds `violations` in SQL (its ``rows``), not in the
+    pass-2 UDF."""
     doc = F.col(doc_col)
     lone_cond, lone = branches[0] if len(branches) == 1 else (True, None)
     if lone_cond is None and lone.valid is None:
@@ -122,9 +145,19 @@ def _dispatch(df: DataFrame, doc_col: str, branches: list,
         # mask the payload for valid rows: Arrow then ships nulls
         # instead of document bodies for the (majority) happy path
         bit = F.col("__gjs_valid")
-        df = df.withColumn(violations_col, _case(
-            [(c, x.violations(F.when(~bit, _case([(c, doc)])), bit))
-             for c, x in branches]))
+        if sql:
+            # valid rows get no rows; an invalid row's rows are SQL
+            # expressions evaluated only behind the bit, no Python node
+            if lone_cond is not None or lone.rows is None or lone.deep is not None:
+                raise ValueError("SQL violations need one branch whose "
+                                 "column plan emits rows and has no frontier")
+            violations = (F.when(bit, F.array().cast(VIOLATION_SCHEMA))
+                          .otherwise(lone.rows))
+        else:
+            violations = _case(
+                [(c, x.violations(F.when(~bit, _case([(c, doc)])), bit))
+                 for c, x in branches])
+        df = df.withColumn(violations_col, violations)
         df = df.drop("__gjs_valid")
     return df.drop("__gjs_v")
 
@@ -164,7 +197,9 @@ class SparkValidator:
         self.compiled = self.compiler.compile(schema)
         self.column_plan = None
         self.frontier_plan = None
+        self.violations_plan = None
         self.unsupported_reason = None
+        self._sql_input = None  # (input, doc_col, frame, inexact Column)
         if not force_udf:
             # depth-3 unroll first; ref-dense schemas (meta-schema style)
             # whose unrolled plan explodes past the node cap retry at
@@ -176,6 +211,8 @@ class SparkValidator:
                     # non-None for depth-unrolled cyclic $refs: rows nesting
                     # past the unroll are re-verdicted by the interpreter
                     self.frontier_plan = cc.frontier_plan
+                    # non-None when every site emits its violation rows
+                    self.violations_plan = cc.violations_plan
                     self.unsupported_reason = None
                     break
                 except UnsupportedSchema as e:
@@ -193,13 +230,26 @@ class SparkValidator:
         # no SparkSession, and F.col needs one
         var = F.col("__gjs_v")
         plan = self.column_plan is not None
+        # the SQL messages are rendered now, from the templates as they
+        # stand; a '|' helper is a Python function, so no SQL rows
+        messages = dict(MESSAGES)
+        helpers = any("|" in field for t in messages.values()
+                      for field in _FIELD_RX.findall(t))
+        rows = None
+        with shared_predicates():  # the rows reuse the valid bit's predicates
+            valid = self.column_plan(var) if plan else None
+            if self.violations_plan is not None and not helpers:
+                rows = (F.when(var.isNull(), _rows_literal(_PARSE_FAILED))
+                        .otherwise(self.violations_plan(var))
+                        .cast(VIOLATION_SCHEMA))
         return _Expressions(
-            valid=self.column_plan(var) if plan else None,
+            valid=valid,
             deep=(self.frontier_plan(var) if self.frontier_plan is not None
                   else None),
             verdict=make_verdict_udf(self.compiled, with_violations=False),
             verdict_full=None if plan else make_verdict_udf(self.compiled),
-            violations=make_violations_udf(self.compiled))
+            violations=make_violations_udf(self.compiled),
+            rows=rows, messages=messages)
 
     # -- public API -----------------------------------------------------------
 
@@ -221,6 +271,35 @@ class SparkValidator:
         """Validate a JSON-string column; appends `valid` (+ `violations`)."""
         return _dispatch(df, doc_col, [(None, self._exprs)], valid_col,
                          violations_col)
+
+    def _sql_violations_ready(self) -> bool:
+        """True when :meth:`_validate_json_sql` may run: the schema's
+        violation rows exist in SQL, rendered from the current
+        ``MESSAGES`` (a ``set_locale`` since then makes it False)."""
+        x = self._exprs
+        return x.rows is not None and x.messages == MESSAGES
+
+    def _validate_json_sql(self, df: DataFrame, doc_col: str):
+        """:meth:`validate_json` with `violations` built in SQL (no Python
+        node in the plan), and the Column that flags its rows whose
+        violations may differ from the interpreter's
+        (``columns.violations_inexact``); a caller that cannot re-run
+        those rows uses :meth:`validate_json`.
+
+        The pair for the last input is kept: a caller filters the same
+        frame again (every expression of the SQL path is deterministic,
+        so a filter above it is pushed down to the scan) instead of
+        resolving the Column DAG once more."""
+        if not self._sql_violations_ready():
+            raise ValueError("no SQL violations for this schema and locale")
+        memo = self._sql_input
+        if memo is None or memo[0] is not df or memo[1] != doc_col:
+            memo = self._sql_input = (
+                df, doc_col,
+                _dispatch(df, doc_col, [(None, self._exprs)], "valid",
+                          "violations", sql=True),
+                violations_inexact("violations", doc_col))
+        return memo[2:]
 
     def validate_variant(self, df: DataFrame, variant_col: str,
                          valid_col: str = "valid") -> DataFrame:

@@ -7,6 +7,11 @@ dialect corners) and (b) as pass 2 of the two-pass design: elaborating
 full violation rows only for documents the SQL pass flagged invalid
 (SURVEY.md §4 'two-pass error elaboration').
 
+A checkpointed bucket job builds those rows in SQL instead where that is
+exact (spark/columns.py, plans/checkpointed.py); ``_violation_rows`` is
+the reference its parity tests compare against, and this UDF re-writes
+any bucket holding a row the SQL path may render differently.
+
 The compiled SubSchema graph is pickled into the UDF closure once on the
 driver and shipped to Python workers; all transfer is Arrow batches.
 """

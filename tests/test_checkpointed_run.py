@@ -39,6 +39,9 @@ def test_checkpoint_resume_and_lineage(spark, tmp_path):
         lineage = json.load(open(os.path.join(bdir, "_lineage.json")))
         assert lineage["n_docs"] == lineage["n_valid"] + lineage["n_invalid"]
         assert lineage["engine_path"] == "column_plan"
+        # every failing value of the corpus is a string: exact SQL rows
+        assert lineage["violations_path"] == "sql"
+        assert lineage["n_inexact"] == 0
         assert lineage["wall_sec"] > 0
 
     # resume: nothing re-runs
@@ -119,10 +122,29 @@ def test_null_bucket_is_validated(spark, tmp_path):
     s = run.run(df)
     assert s["buckets_total"] == 2 and s["buckets_run"] == 2
     assert s["docs"] == 120
-    lineage = json.load(open(os.path.join(out, "bucket=None", "_lineage.json")))
+    null_dir = os.path.join(out, "bucket=__HIVE_DEFAULT_PARTITION__")
+    lineage = json.load(open(os.path.join(null_dir, "_lineage.json")))
     assert lineage["n_docs"] == 108 and lineage["n_invalid"] == 108
-    assert spark.read.parquet(os.path.join(out, "bucket=None")).count() == 108
+    assert spark.read.parquet(null_dir).count() == 108
     assert run.run(df)["skipped"] == ["None", "a"]
+
+
+def test_null_bucket_and_string_none_bucket_are_separate(spark, tmp_path):
+    """The NULL bucket and the string bucket "None" write separate
+    directories, rows and lineage; a resume finds both done."""
+    rows = [(f"https://x.com/{i}", None if i % 3 else "None", '{"url": "a"}')
+            for i in range(90)]
+    df = spark.createDataFrame(rows, "url string, warc_bucket string, doc string")
+    out = str(tmp_path / "verdicts")
+    run = CheckpointedValidationRun(SparkValidator(FLAGSHIP_SCHEMA), out)
+    assert run.run(df)["buckets_run"] == 2
+    for name, bucket, n in (("__HIVE_DEFAULT_PARTITION__", None, 60),
+                            ("None", "None", 30)):
+        d = os.path.join(out, f"bucket={name}")
+        lineage = json.load(open(os.path.join(d, "_lineage.json")))
+        assert lineage["bucket"] == bucket and lineage["n_docs"] == n
+        assert spark.read.parquet(d).count() == n
+    assert run.run(df)["buckets_run"] == 0
 
 
 def test_two_buckets_in_flight(spark, tmp_path):
@@ -219,8 +241,8 @@ def test_bucket_jobs_carry_caller_properties(spark, tmp_path):
         ejobs = {int(k) for k in e.jobs().keys().mkString(",").split(",") if k}
         nodes = sql.planGraph(e.executionId()).allNodes()
         names = [nodes.apply(k).name() for k in range(nodes.size())]
-        if not ejobs & jobs or not any("EvalPython" in n for n in names):
-            continue
+        if not ejobs & jobs or "CollectMetrics" not in names:
+            continue  # not a bucket's write
         assert ejobs <= jobs
         values = sql.executionMetrics(e.executionId())
         scan = next(nodes.apply(k) for k, n in enumerate(names)

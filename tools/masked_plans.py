@@ -8,10 +8,12 @@ Plan parity of a change: run this file from a copy of the parent commit
 and from the change (copy the file into the parent's ``tools/`` if it is
 not there yet), then ``diff`` the two JSON files. Each call site is built
 on a small generated web-pages corpus on ``local[2]``; plans are taken
-before execution, so nothing but the driver-side planning runs. The one
-exception is the ``CheckpointedValidationRun.run_bucket`` site: its input
-is the corpus written to a temporary directory partitioned by
-``warc_bucket``, so its plan shows the bucket's partition filter.
+before execution, so nothing but the driver-side planning runs. The
+exception is the two ``CheckpointedValidationRun.bucket_query`` sites
+(the query ``run_bucket`` writes, with violations built in SQL and, for
+``checkpointed_run_bucket_udf``, by the interpreter UDF): their input is
+the corpus written to a temporary directory partitioned by
+``warc_bucket``, so their plans show the bucket's partition filter.
 """
 
 from __future__ import annotations
@@ -60,12 +62,12 @@ def _plan(df) -> str:
 
 def call_sites(spark, tmp: str) -> dict:
     from pyspark.sql import functions as F
-    from pyspark.sql.observation import Observation
 
     from gojsonschema_spark.ops.pipeline import PipelineConfig, preprocess_corpus
     from gojsonschema_spark.ops.webpages import (FLAGSHIP_SCHEMA,
                                                  generate_webpages, url_host,
                                                  webpage_doc_column)
+    from gojsonschema_spark.plans.checkpointed import CheckpointedValidationRun
     from gojsonschema_spark.spark.engine import MultiSchemaValidator, SparkValidator
     from workloads import _PIPELINE
 
@@ -88,15 +90,7 @@ def call_sites(spark, tmp: str) -> dict:
     bucketed = spark.read.parquet(f"{tmp}/pages").select(
         "url", "warc_bucket", webpage_doc_column().alias("doc"))
     day = min(r[0] for r in bucketed.select("warc_bucket").distinct().collect())
-
-    def run_bucket_query():
-        # CheckpointedValidationRun.run_bucket's query over one non-null bucket
-        one = bucketed.filter(F.col("warc_bucket") == F.lit(day))
-        return (v.validate_json(one, "doc")
-                .observe(Observation(f"validate-{day}"),
-                         F.count(F.lit(1)).alias("n_docs"),
-                         F.sum(F.col("valid").cast("long")).alias("n_valid"))
-                .select("url", "valid", "violations"))
+    run = CheckpointedValidationRun(v, f"{tmp}/verdicts")
 
     sites = {
         "flagship_validate_json": lambda: v.validate_json(docs, "doc"),
@@ -107,7 +101,9 @@ def call_sites(spark, tmp: str) -> dict:
         "multischema_dispatch": lambda: mv.validate_json(kinds, "doc", "kind"),
         "preprocess_corpus": lambda: preprocess_corpus(
             staged, PipelineConfig(**_PIPELINE)),
-        "checkpointed_run_bucket": run_bucket_query,
+        "checkpointed_run_bucket": lambda: run.bucket_query(bucketed, day, True)[0],
+        "checkpointed_run_bucket_udf":
+            lambda: run.bucket_query(bucketed, day, False)[0],
     }
     for name, schema in HYBRID_SCHEMAS.items():
         hv = SparkValidator(schema)
