@@ -37,21 +37,22 @@ The checkpoint is the parquet ``_SUCCESS`` marker AND the lineage file:
 a bucket missing either is re-run. A killed run resumes by rerunning:
 one scan lists the bucket values, and finished buckets are skipped.
 
-:meth:`CheckpointedValidationRun.run` runs one Spark job per bucket, at
-most two in flight. A bucket job is mostly fixed cost (driver-side
-DataFrame build and planning, then a short task, whose Python worker on
-the UDF path adds a mostly fixed per-task cost), so one job at a time
-leaves the executors idle most of a run. Two jobs in flight hide one
-bucket's driver work behind the other's execution; every further one
-holds more JVM memory, and on the UDF path another Python worker (see
-``_IN_FLIGHT``). Buckets start in
-``bucket_values`` order; after a failure no further bucket starts, the
-one in flight finishes, and the first error propagates.
+:meth:`CheckpointedValidationRun.run` runs one Spark job per bucket,
+several in flight. A bucket job is mostly fixed driver cost (DataFrame
+build, optimization and planning, then a short task), so one job at a
+time leaves the executors idle most of a run; jobs in flight hide each
+bucket's driver work behind the other buckets' execution. Each job needs
+driver CPU and at least one task slot, so jobs beyond either only queue:
+the run keeps ``max(2, min(task slots, driver CPUs))`` in flight (see
+``_in_flight``). Buckets start in ``bucket_values`` order; after a
+failure no further bucket starts, the jobs in flight finish, and the
+first error propagates.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import time
 from collections import deque
 from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
@@ -64,35 +65,59 @@ from ..spark.engine import SparkValidator
 
 __all__ = ["CheckpointedValidationRun"]
 
-# Bucket jobs in flight. Two are enough to overlap one bucket's driver
-# work with another's execution; each further job holds more JVM working
-# set, and on the UDF path one more Python worker (~120 MB; a bucket on
-# the SQL path holds none). On a 4-core host, with the UDF, two gave
-# 1.35x the docs/s of one at +10% peak RSS; three gave 1.85x at +28%.
-_IN_FLIGHT = 2
+# Fewest bucket jobs in flight: even a 1-core driver overlaps one
+# bucket's planning with another's task.
+_MIN_IN_FLIGHT = 2
 
 
-def _fs_and_path(spark: SparkSession, path_str: str):
-    """Hadoop FileSystem + Path for any supported scheme (local, hdfs://,
-    s3a://, dbfs:/...) — driver-local os.path only works for local dirs."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(path_str)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, path
+def _in_flight(slots: int, cpus: int) -> int:
+    """Bucket jobs to keep in flight, given the cluster's task slots and
+    the driver's CPUs.
+
+    A bucket job costs driver CPU (build, optimize, plan, serialize its
+    task) and at least one task slot; jobs beyond the driver's CPUs queue
+    for the driver, jobs beyond the slots queue for executors (400 slots
+    and a 16-CPU driver: 16). On the UDF path, each job in flight holds
+    one Python worker: at most as many as one full-width UDF job starts
+    on those slots."""
+    return max(_MIN_IN_FLIGHT, min(slots, cpus))
 
 
-def _fs_exists(spark: SparkSession, path_str: str) -> bool:
-    fs, path = _fs_and_path(spark, path_str)
-    return bool(fs.exists(path))
-
-
-def _fs_write_text(spark: SparkSession, path_str: str, text: str) -> None:
-    fs, path = _fs_and_path(spark, path_str)
-    out = fs.create(path, True)
+def _driver_cpus() -> int:
+    """CPUs this process may run on (its affinity, where the platform
+    has one)."""
     try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
+        return len(os.sched_getaffinity(0))
+    except AttributeError:
+        return os.cpu_count() or 1
+
+
+class _OutputFiles:
+    """The Hadoop FileSystem of one directory tree, resolved once (any
+    scheme: local, hdfs://, s3a://, dbfs:/...; driver-local os.path only
+    works for local dirs). Resolving it costs 8 py4j round trips and
+    each ``exists`` 2, so a resume resolves it once, not once per
+    marker."""
+
+    def __init__(self, spark: SparkSession, root: str):
+        self._path = spark._jvm.org.apache.hadoop.fs.Path
+        self._fs = self._path(root).getFileSystem(
+            spark._jsc.hadoopConfiguration())
+
+    def exists(self, path_str: str) -> bool:
+        return bool(self._fs.exists(self._path(path_str)))
+
+    def write_text(self, path_str: str, text: str) -> None:
+        out = self._fs.create(self._path(path_str), True)
+        try:
+            out.write(bytearray(text.encode("utf-8")))
+        finally:
+            out.close()
+
+
+def _bucket_label(value):
+    """A bucket value as the run reports it: null for the NULL bucket."""
+    return None if value is None else str(value)
 
 
 class CheckpointedValidationRun:
@@ -117,9 +142,12 @@ class CheckpointedValidationRun:
         ``_lineage.json`` exist: the lineage is written after the data, so
         a run killed between the two re-runs the bucket."""
         spark = spark or SparkSession.getActiveSession()
+        return self._done(_OutputFiles(spark, self.output_dir), value)
+
+    def _done(self, files: _OutputFiles, value) -> bool:
         target = self._bucket_dir(value)
-        return (_fs_exists(spark, f"{target}/_SUCCESS")
-                and _fs_exists(spark, f"{target}/_lineage.json"))
+        return (files.exists(f"{target}/_SUCCESS")
+                and files.exists(f"{target}/_lineage.json"))
 
     def pending_buckets(self, df: DataFrame) -> list:
         """Bucket values of ``df`` not yet done, in ``orderBy`` order.
@@ -129,37 +157,41 @@ class CheckpointedValidationRun:
         value of the scan for :meth:`run`."""
         values = [r[0] for r in df.select(self.bucket_col).distinct().collect()]
         self.bucket_values = sorted(values, key=lambda v: (v is not None, v))
-        return [v for v in self.bucket_values
-                if not self.is_done(v, df.sparkSession)]
+        files = _OutputFiles(df.sparkSession, self.output_dir)
+        return [v for v in self.bucket_values if not self._done(files, v)]
 
     # -- execution --------------------------------------------------------------
 
     def run(self, df: DataFrame) -> dict:
-        """Validate every pending bucket, at most ``_IN_FLIGHT`` at a
-        time; returns a run summary."""
+        """Validate every pending bucket, ``_in_flight`` of them at a time
+        (from the task slots and the driver's CPUs); returns a run summary.
+        ``skipped`` lists the buckets already done, as their lineage
+        names them (None for the NULL bucket)."""
         queue = deque(self.pending_buckets(df))
         pending = set(queue)
         summary = {"buckets_total": len(self.bucket_values), "buckets_run": 0,
                    "docs": 0, "valid": 0,
-                   "skipped": [str(v) for v in self.bucket_values
+                   "skipped": [_bucket_label(v) for v in self.bucket_values
                                if v not in pending]}
-        # built here once, not raced by two threads
+        # built here once, not raced by the job threads
         if self.validator._sql_violations_ready():
             self.validator._validate_json_sql(df, self.doc_col)
-        with ThreadPoolExecutor(_IN_FLIGHT) as pool:
+        n = _in_flight(df.sparkSession.sparkContext.defaultParallelism,
+                       _driver_cpus())
+        with ThreadPoolExecutor(n) as pool:
             running = set()
             while queue or running:
-                while queue and len(running) < _IN_FLIGHT:
+                while queue and len(running) < n:
                     # wrapped per job: each job gets its own copy of the
                     # caller's local properties (job group, description,
                     # tags), so one job's SQL execution id never leaks
-                    # into the other's jobs
+                    # into another's jobs
                     job = inheritable_thread_target(df.sparkSession)(self.run_bucket)
                     running.add(pool.submit(job, df, queue.popleft()))
                 done, running = wait(running, return_when=FIRST_COMPLETED)
                 for future in done:
                     # a failure starts no further bucket; leaving the
-                    # pool waits for the one in flight, then it raises
+                    # pool waits for the jobs in flight, then it raises
                     m = future.result()
                     summary["buckets_run"] += 1
                     summary["docs"] += m["n_docs"]
@@ -213,7 +245,7 @@ class CheckpointedValidationRun:
         n_valid = obs.get["n_valid"] or 0
         spark = df.sparkSession
         lineage = {
-            "bucket": None if value is None else str(value),
+            "bucket": _bucket_label(value),
             "n_docs": n_docs,
             "n_valid": int(n_valid),
             "n_invalid": n_docs - int(n_valid),
@@ -225,6 +257,6 @@ class CheckpointedValidationRun:
             "app_id": spark.sparkContext.applicationId,
             "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
-        _fs_write_text(spark, f"{target}/_lineage.json",
-                       json.dumps(lineage, indent=1))
+        _OutputFiles(spark, self.output_dir).write_text(
+            f"{target}/_lineage.json", json.dumps(lineage, indent=1))
         return lineage

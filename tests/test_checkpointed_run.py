@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from gojsonschema_spark.ops.webpages import (FLAGSHIP_SCHEMA,
                                              generate_webpages,
                                              webpage_doc_column)
+from gojsonschema_spark.plans import checkpointed
 from gojsonschema_spark.plans.checkpointed import CheckpointedValidationRun
 from gojsonschema_spark.spark.engine import SparkValidator
 
@@ -67,6 +68,23 @@ def _buckets(spark, n=150, k=3):
     df = pages.select("url", "warc_bucket", webpage_doc_column().alias("doc"))
     return df.withColumn("warc_bucket",
                          (F.dayofmonth(F.col("warc_bucket")) % k).cast("string"))
+
+
+def _n_in_flight(spark) -> int:
+    return checkpointed._in_flight(spark.sparkContext.defaultParallelism,
+                                   checkpointed._driver_cpus())
+
+
+def _numbered_buckets(spark, k, per_bucket=25):
+    """``k`` buckets of ``per_bucket`` rows each, named ``b000``, ``b001``...
+    (so that they sort in number order); about half of each bucket's documents
+    are invalid."""
+    valid = json.dumps({"url": "https://x.com/", "warc_ts": "2024-06-01T00:00:00Z",
+                        "text": "a", "lang": "en"})
+    rows = [(f"https://x.com/{i}", f"b{i % k:03d}",
+             '{"url": "https://x.com/"}' if i // k % 2 else valid)
+            for i in range(k * per_bucket)]
+    return spark.createDataFrame(rows, "url string, warc_bucket string, doc string")
 
 
 def test_resume_over_done_output_is_one_job(spark, tmp_path):
@@ -126,7 +144,7 @@ def test_null_bucket_is_validated(spark, tmp_path):
     lineage = json.load(open(os.path.join(null_dir, "_lineage.json")))
     assert lineage["n_docs"] == 108 and lineage["n_invalid"] == 108
     assert spark.read.parquet(null_dir).count() == 108
-    assert run.run(df)["skipped"] == ["None", "a"]
+    assert run.run(df)["skipped"] == [None, "a"]
 
 
 def test_null_bucket_and_string_none_bucket_are_separate(spark, tmp_path):
@@ -144,42 +162,83 @@ def test_null_bucket_and_string_none_bucket_are_separate(spark, tmp_path):
         lineage = json.load(open(os.path.join(d, "_lineage.json")))
         assert lineage["bucket"] == bucket and lineage["n_docs"] == n
         assert spark.read.parquet(d).count() == n
-    assert run.run(df)["buckets_run"] == 0
+    s = run.run(df)
+    assert s["buckets_run"] == 0 and s["skipped"] == [None, "None"]
 
 
-def test_two_buckets_in_flight(spark, tmp_path):
-    """Two bucket jobs run at once, never more: each call waits on a
-    two-party barrier, which a run of one bucket at a time never passes."""
-    df = _buckets(spark, k=4)
+def test_pending_buckets_resolves_filesystem_once(spark, tmp_path, monkeypatch):
+    """The done checks of every bucket value share one FileSystem: each
+    resolution costs py4j round trips, and a resume checks two markers
+    per bucket."""
+    df = _numbered_buckets(spark, k=6)
+    out = tmp_path / "verdicts"
+    for b in ("b000", "b002", "b004"):
+        (out / f"bucket={b}").mkdir(parents=True)
+        for name in ("_SUCCESS", "_lineage.json"):
+            (out / f"bucket={b}" / name).touch()
+    run = CheckpointedValidationRun(SparkValidator(FLAGSHIP_SCHEMA), str(out))
+    resolved = []
+
+    class Counted(checkpointed._OutputFiles):
+        def __init__(self, *args):
+            resolved.append(args)
+            super().__init__(*args)
+
+    monkeypatch.setattr(checkpointed, "_OutputFiles", Counted)
+    assert run.pending_buckets(df) == ["b001", "b003", "b005"]
+    assert len(resolved) == 1
+
+
+def test_in_flight_rule():
+    """Bucket jobs in flight: the task slots or the driver's CPUs,
+    whichever is fewer, and never fewer than two."""
+    assert checkpointed._in_flight(1, 1) == 2
+    assert checkpointed._in_flight(4, 4) == 4
+    assert checkpointed._in_flight(400, 16) == 16
+    assert checkpointed._in_flight(8, 32) == 8
+    assert checkpointed._driver_cpus() >= 1
+
+
+def test_n_buckets_in_flight_never_more(spark, tmp_path):
+    """The run keeps N bucket jobs in flight, never more, over N + 2
+    buckets: the first N calls wait on an N-party barrier, which a run
+    with fewer in flight never passes; the last two start only as others
+    finish."""
+    n = _n_in_flight(spark)
+    df = _numbered_buckets(spark, k=n + 2)
     run = CheckpointedValidationRun(SparkValidator(FLAGSHIP_SCHEMA),
                                     str(tmp_path / "verdicts"))
-    barrier = threading.Barrier(2, timeout=60)
+    barrier = threading.Barrier(n, timeout=60)
     lock = threading.Lock()
-    live, peak = [0], [0]
+    started, live, peak = [0], [0], [0]
     run_bucket = run.run_bucket
 
-    def paired(df, value):
+    def gathered(df, value):
         with lock:
+            started[0] += 1
+            first = started[0] <= n
             live[0] += 1
             peak[0] = max(peak[0], live[0])
         try:
-            barrier.wait()
+            if first:
+                barrier.wait()
             return run_bucket(df, value)
         finally:
             with lock:
                 live[0] -= 1
 
-    run.run_bucket = paired
+    run.run_bucket = gathered
     s = run.run(df)
-    assert s["buckets_run"] == 4 and s["docs"] == 150
-    assert peak[0] == 2
+    assert s["buckets_run"] == n + 2 and s["docs"] == 25 * (n + 2)
+    assert peak[0] == n
 
 
 def test_failed_bucket_starts_no_further_bucket(spark, tmp_path):
-    """The first bucket error propagates once the bucket in flight with
-    it has finished; no later bucket starts, the failed bucket has no
+    """The first bucket error propagates once the buckets in flight with
+    it have finished; no later bucket starts, the failed bucket has no
     lineage, and the resume runs the failed and unstarted buckets."""
-    df = _buckets(spark, k=4)
+    n = _n_in_flight(spark)
+    df = _numbered_buckets(spark, k=n + 2)
     out = str(tmp_path / "verdicts")
     run = CheckpointedValidationRun(SparkValidator(FLAGSHIP_SCHEMA), out)
     started = []
@@ -187,22 +246,25 @@ def test_failed_bucket_starts_no_further_bucket(spark, tmp_path):
 
     def failing(df, value):
         started.append(value)
-        if value == "1":
-            raise RuntimeError("bucket 1 failed")
+        if value == "b001":
+            raise RuntimeError("bucket b001 failed")
         return run_bucket(df, value)
 
     run.run_bucket = failing
-    with pytest.raises(RuntimeError, match="bucket 1 failed"):
+    with pytest.raises(RuntimeError, match="bucket b001 failed"):
         run.run(df)
-    assert sorted(started) == ["0", "1"]
-    for name in ("_SUCCESS", "_lineage.json"):
-        assert os.path.exists(os.path.join(out, "bucket=0", name))
-    assert not os.path.exists(os.path.join(out, "bucket=1", "_lineage.json"))
+    first = [f"b{i:03d}" for i in range(n)]
+    assert sorted(started) == first
+    finished = [b for b in first if b != "b001"]
+    for b in finished:
+        for name in ("_SUCCESS", "_lineage.json"):
+            assert os.path.exists(os.path.join(out, f"bucket={b}", name))
+    assert not os.path.exists(os.path.join(out, "bucket=b001", "_lineage.json"))
 
     run.run_bucket = run_bucket
     s = run.run(df)
-    assert s["buckets_run"] == 3 and s["skipped"] == ["0"]
-    assert spark.read.parquet(out).count() == 150
+    assert s["buckets_run"] == 3 and s["skipped"] == finished
+    assert spark.read.parquet(out).count() == 25 * (n + 2)
 
 
 def test_bucket_jobs_carry_caller_properties(spark, tmp_path):
