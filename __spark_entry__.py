@@ -584,9 +584,9 @@ def q_validate_variant(spark, sf_dir):
 
 
 def q_sessionize_events(spark, sf_dir):
-    """Batch-mode sessionization (same gap rule as the stateful streaming
-    operator spark/streaming.py sessionize_stream — equivalence pytest-
-    gated in tests/test_streaming.py).
+    """Batch sessionization (spark/streaming.py sessionize_batch: a gap
+    of more than 1800 s starts a new session; its boundary cases are
+    pinned in tests/test_streaming.py).
 
     Driver-row rendering: session bounds as TZ-free ISO strings
     (date_format over TIMESTAMP_NTZ needs no session-timezone hop) and

@@ -223,7 +223,6 @@ def _consume_atom(s: str, i: int, dot: bool) -> tuple[str, int]:
 
 
 def _consume_quoted(s: str, i: int) -> tuple[str, int]:
-    assert s[i] == '"'
     j = i + 1
     out = []
     while j < len(s):

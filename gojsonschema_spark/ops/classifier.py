@@ -53,12 +53,8 @@ __all__ = [
     "score_quality_native",
     "score_quality",
     "margin_column",
-    "train_multiclass_classifier",
-    "multiclass_weights_table",
     "score_multiclass_native",
-    "multiclass_scorer",
     "hashed_tfidf_sparse",
-    "tfidf_dense",
     "save_classifier",
     "load_classifier",
 ]
@@ -323,165 +319,6 @@ def score_quality(df: DataFrame, model: dict, key_col: str,
                         (F.lit(1.0) + F.exp(-F.col("margin")))))
 
 
-def _class_index(classes: list, label_col: str) -> Column:
-    """Label -> class index as a when-chain (C is small by contract)."""
-    expr = None
-    for i, c in enumerate(classes):
-        cond = F.col(label_col) == F.lit(c)
-        expr = F.when(cond, i) if expr is None else expr.when(cond, i)
-    return expr.otherwise(F.lit(-1))
-
-
-def train_multiclass_classifier(
-        df: DataFrame, label_col: str, classes: list | None = None,
-        text_col: str = "text", dim: int = 1 << 16, n_iters: int = 20,
-        lr: float = 1.0, l2: float = 0.0, lowercase: bool = True,
-        cache: bool = True) -> dict:
-    """Multinomial (softmax) logistic regression over hashed
-    bag-of-words — the trainable language-ID / domain-ID stage.
-
-    Same scale shape as :func:`train_quality_classifier`: featurization
-    map-side, per-iteration shuffle carries SPARSE (fid*C + c, partial)
-    gradient pairs plus bias/loss/count pseudo-rows, the driver holds
-    the (dim, C) weight matrix (guarded: dim*C <= 2^22, ~32 MB) and
-    ships it back in the next closure. ``classes`` is the label
-    vocabulary in index order (inferred sorted-distinct when None,
-    guarded <= 64); unknown labels raise.
-
-    Returns ``{"W": C lists of dim floats, "bias": list[C],
-    "classes": [...], "losses": [...], "dim": dim}``.
-    """
-    import numpy as np
-
-    _check_dim(dim)
-    if classes is None:
-        seen = [r[0] for r in df.select(label_col).distinct().limit(65)
-                .collect()]
-        if any(c is None for c in seen):
-            raise ValueError(f"label column {label_col!r} contains NULL")
-        classes = sorted(seen)
-    classes = list(classes)
-    C = len(classes)
-    if not 2 <= C <= 64:
-        raise ValueError(f"need 2..64 classes, got {C}")
-    if dim * C > MAX_DIM:
-        raise ValueError(f"dim*C must be <= {MAX_DIM}, got {dim * C}")
-
-    feat = df.select(
-        hashed_feature_ids(text_col, dim, lowercase).alias("fids"),
-        _class_index(classes, label_col).alias("y"))
-    if cache:
-        feat = feat.persist()
-    try:
-        bad = feat.filter(F.col("y") < 0).limit(1).count()
-        if bad:
-            raise ValueError(
-                f"{label_col!r} contains labels outside classes={classes}")
-
-        W = np.zeros((dim, C), dtype=np.float64)
-        bias = np.zeros(C, dtype=np.float64)
-        losses: list[float] = []
-        # pseudo-fids: bias_c = -(c+1); loss = -(C+1); count = -(C+2)
-        LOSS_ID, COUNT_ID = -(C + 1), -(C + 2)
-        for _ in range(n_iters):
-            W_it, b_it = W, bias
-
-            def partials(batches: Iterator) -> Iterator:
-                import numpy as np
-                import pandas as pd
-                acc: dict = {}
-                G_loc = None  # dense (dim, C) gradient, lazily allocated
-                loss = 0.0
-                n = 0
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    lists = [np.asarray(v, dtype=np.int64)
-                             for v in pdf["fids"]]
-                    lens = np.fromiter((len(v) for v in lists),
-                                       dtype=np.int64, count=len(lists))
-                    flat = (np.concatenate(lists) if lens.sum()
-                            else np.empty(0, dtype=np.int64))
-                    docix = np.repeat(np.arange(len(lists)), lens)
-                    m = np.zeros((len(lists), C), dtype=np.float64)
-                    if flat.size:
-                        np.add.at(m, docix, W_it[flat])
-                    m += b_it
-                    m -= m.max(axis=1, keepdims=True)  # stable softmax
-                    e = np.exp(m)
-                    p = e / e.sum(axis=1, keepdims=True)
-                    y = pdf["y"].to_numpy(dtype=np.int64)
-                    rows = np.arange(len(lists))
-                    loss -= np.log(np.maximum(p[rows, y], 1e-300)).sum()
-                    r = p
-                    r[rows, y] -= 1.0
-                    if flat.size:
-                        # softmax residuals are DENSE across classes, so
-                        # accumulate into a dense (dim, C) array (bounded
-                        # to 32 MB by the dim*C guard) instead of a
-                        # Python dict over |unique_fids| x C entries
-                        if G_loc is None:
-                            G_loc = np.zeros((dim, C), dtype=np.float64)
-                        np.add.at(G_loc, flat, r[docix])
-                    gb = r.sum(axis=0)
-                    for c in range(C):
-                        acc[-(c + 1)] = acc.get(-(c + 1), 0.0) + gb[c]
-                    n += len(lists)
-                acc[LOSS_ID] = acc.get(LOSS_ID, 0.0) + loss
-                acc[COUNT_ID] = acc.get(COUNT_ID, 0.0) + float(n)
-                if G_loc is not None:
-                    fids_nz, cs_nz = np.nonzero(G_loc)
-                    ids = fids_nz * C + cs_nz
-                    vals = G_loc[fids_nz, cs_nz]
-                else:
-                    ids = np.empty(0, dtype=np.int64)
-                    vals = np.empty(0, dtype=np.float64)
-                pseudo_ids = np.fromiter(acc.keys(), dtype=np.int64,
-                                         count=len(acc))
-                pseudo_vals = np.fromiter(acc.values(), dtype=np.float64,
-                                          count=len(acc))
-                yield pd.DataFrame(
-                    {"fid": np.concatenate([ids, pseudo_ids]),
-                     "g": np.concatenate([vals, pseudo_vals])})
-
-            rows = (feat.mapInPandas(partials, _GRAD_SCHEMA)
-                    .groupBy("fid").agg(F.sum("g").alias("g"))
-                    .collect())
-            sums = {r.fid: r.g for r in rows}
-            n = sums.pop(COUNT_ID, 0.0)
-            if n == 0:
-                raise ValueError("empty training corpus")
-            losses.append(sums.pop(LOSS_ID, 0.0) / n)
-            gb = np.array([sums.pop(-(c + 1), 0.0) for c in range(C)])
-            G = np.zeros((dim, C), dtype=np.float64)
-            if sums:
-                ids = np.fromiter(sums.keys(), dtype=np.int64,
-                                  count=len(sums))
-                G[ids // C, ids % C] = np.fromiter(
-                    sums.values(), dtype=np.float64, count=len(sums))
-            G /= n
-            if l2:
-                G += l2 * W
-            W = W - lr * G
-            bias = bias - lr * gb / n
-        return {"W": [W[:, c].tolist() for c in range(C)],
-                "bias": bias.tolist(), "classes": classes,
-                "losses": losses, "dim": dim, "lowercase": lowercase}
-    finally:
-        if cache:
-            feat.unpersist()
-
-
-def multiclass_weights_table(spark, model: dict,
-                             drop_zero: bool = True) -> DataFrame:
-    """(fid, c, w) DataFrame for the native multiclass scoring join."""
-    rows = []
-    for c, wc in enumerate(model["W"]):
-        rows += [(i, c, wi) for i, wi in enumerate(wc)
-                 if not (drop_zero and wi == 0.0)]
-    return spark.createDataFrame(rows, "fid long, c int, w double")
-
-
 def score_multiclass_native(df: DataFrame, weights: DataFrame,
                             dim: int, key_col: str, classes: list,
                             text_col: str = "text",
@@ -518,47 +355,6 @@ def score_multiclass_native(df: DataFrame, weights: DataFrame,
             .withColumnRenamed("key", key_col))
 
 
-def multiclass_scorer(model: dict):
-    """Bridge a trained multiclass model into
-    :func:`~gojsonschema_spark.ops.text.language_id`'s ``scorer=``
-    injection point: returns a ``pandas.Series[str] ->
-    pandas.Series[str]`` callable (runs inside an Arrow UDF).
-
-    Featurization reproduces :func:`hashed_feature_ids` in Python
-    (``int(md5(token)[:8], 16) % dim`` over lowered,
-    ASCII-whitespace-split tokens) — identical for ASCII text; exotic
-    Unicode case/space edge cases may differ from the JVM path, which
-    is why the native join is the oracled one."""
-    import hashlib
-    import re
-
-    import numpy as np
-
-    W = np.array(model["W"], dtype=np.float64).T  # (dim, C)
-    bias = np.asarray(model["bias"], dtype=np.float64)
-    classes = np.asarray(model["classes"], dtype=object)
-    dim = model["dim"]
-    lower = model.get("lowercase", True)
-    ws = re.compile(r"[ \t\n\x0b\f\r]+")
-
-    def score(texts):
-        import pandas as pd
-        out = []
-        for t in texts:
-            m = bias.copy()
-            if t:
-                for tok in ws.split(t.lower() if lower else t):
-                    if tok:
-                        fid = int(hashlib.md5(
-                            tok.encode("utf-8")).hexdigest()[:8],
-                            16) % dim
-                        m += W[fid]
-            out.append(classes[int(np.argmax(m))])
-        return pd.Series(out)
-
-    return score
-
-
 def hashed_tfidf_sparse(df: DataFrame, dim: int, key_col: str,
                         text_col: str = "text",
                         lowercase: bool = True,
@@ -566,9 +362,8 @@ def hashed_tfidf_sparse(df: DataFrame, dim: int, key_col: str,
                         single_scan: bool = True) -> DataFrame:
     """Sparse hashed TF-IDF: ``(key, fid, tf, w)`` rows with
     ``w = round(tf * (ln((N+1)/(df+1)) + 1), round_to)`` (the
-    smooth-idf convention) — the text-to-vector bridge that feeds the
-    similarity stack (ANN, SemDeDup, k-means) without an external
-    embedding model.
+    smooth-idf convention) — a text-to-vector form that needs no
+    external embedding model.
 
     Scale shape: tf is one explode + map-side-combined groupBy
     (key, fid); the document-frequency table is bounded by ``dim``
@@ -609,89 +404,33 @@ def hashed_tfidf_sparse(df: DataFrame, dim: int, key_col: str,
                     .alias("w")))
 
 
-def tfidf_dense(sparse: DataFrame, dim: int, key_col: str,
-                l2_normalize: bool = True) -> DataFrame:
-    """Assemble :func:`hashed_tfidf_sparse` rows into dense
-    ``array<double>`` vectors (``embedding``) for the ANN/clustering
-    ops. One groupBy(key) whose shuffle carries each doc's nonzero
-    entries; densification is a native map lookup over [0, dim).
-    Intended for moderate dims (<= 2^12-2^14) — at larger dims keep
-    the sparse form. L2 normalization makes dot products cosine."""
-    _check_dim(dim)
-    m = F.map_from_entries(
-        F.collect_list(F.struct(F.col("fid"), F.col("w"))))
-    dense = (sparse.groupBy(key_col)
-             .agg(m.alias("m"))
-             .select(key_col,
-                     F.transform(F.sequence(F.lit(0), F.lit(dim - 1)),
-                                 lambda i: F.coalesce(
-                                     F.element_at("m", i.cast("long")),
-                                     F.lit(0.0))).alias("embedding")))
-    if l2_normalize:
-        nrm = F.sqrt(F.aggregate(
-            "embedding", F.lit(0.0), lambda a, x: a + x * x))
-        # Generate barrier: CollapseProject would inline the norm
-        # aggregate into the transform lambda below — re-evaluated per
-        # ELEMENT, O(dim^2) interpreted evals per row. explode(array())
-        # pins it to an attribute computed once per row (the
-        # engine.violations_table pattern).
-        dense = dense.select(key_col, "embedding",
-                             F.explode(F.array(nrm)).alias("__nrm"))
-        dense = dense.select(
-            key_col,
-            F.transform("embedding",
-                        lambda x: F.when(F.col("__nrm") > 0,
-                                         x / F.col("__nrm"))
-                        .otherwise(F.lit(0.0))).alias("embedding"))
-    return dense
-
-
 def save_classifier(spark, model: dict, path: str) -> None:
-    """Persist a trained model (binary or multiclass) for day-2 reuse:
-    nonzero weights as parquet (splittable, schema'd) plus a one-row
-    meta table (bias(es), classes, dim, losses as JSON). Mirrors the
-    BackoffLM convention — train once on the reference corpus, score
-    every subsequent crawl from the store."""
+    """Persist a trained binary model for day-2 reuse: nonzero weights
+    as parquet (splittable, schema'd) plus a one-row meta table (bias,
+    dim, losses as JSON). Mirrors the BackoffLM convention — train once
+    on the reference corpus, score every subsequent crawl from the
+    store."""
     import json
 
-    if "W" in model:  # multiclass
-        rows = [(int(f), int(c), float(w))
-                for c, wc in enumerate(model["W"])
-                for f, w in enumerate(wc) if w != 0.0]
-        spark.createDataFrame(rows or [(0, 0, 0.0)],
-                              "fid long, c int, w double") \
-            .write.mode("overwrite").parquet(f"{path}/weights")
-    else:
-        rows = [(int(f), float(w))
-                for f, w in enumerate(model["w"]) if w != 0.0]
-        spark.createDataFrame(rows or [(0, 0.0)],
-                              "fid long, w double") \
-            .write.mode("overwrite").parquet(f"{path}/weights")
-    meta = {k: v for k, v in model.items() if k not in ("w", "W")}
+    rows = [(int(f), float(w))
+            for f, w in enumerate(model["w"]) if w != 0.0]
+    spark.createDataFrame(rows or [(0, 0.0)], "fid long, w double") \
+        .write.mode("overwrite").parquet(f"{path}/weights")
+    meta = {k: v for k, v in model.items() if k != "w"}
     spark.createDataFrame([(json.dumps(meta),)], "meta string") \
         .write.mode("overwrite").parquet(f"{path}/meta")
 
 
 def load_classifier(spark, path: str) -> dict:
     """Inverse of :func:`save_classifier`; returns the model dict
-    (dense weight list(s) rebuilt from the sparse store)."""
+    (the dense weight list rebuilt from the sparse store)."""
     import json
 
     meta = json.loads(
         spark.read.parquet(f"{path}/meta").collect()[0].meta)
-    dim = meta["dim"]
-    w = spark.read.parquet(f"{path}/weights")
-    if "classes" in meta:  # multiclass
-        C = len(meta["classes"])
-        W = [[0.0] * dim for _ in range(C)]
-        for r in w.collect():
-            if r.w != 0.0:
-                W[r.c][r.fid] = r.w
-        meta["W"] = W
-    else:
-        dense = [0.0] * dim
-        for r in w.collect():
-            if r.w != 0.0:
-                dense[r.fid] = r.w
-        meta["w"] = dense
+    dense = [0.0] * meta["dim"]
+    for r in spark.read.parquet(f"{path}/weights").collect():
+        if r.w != 0.0:
+            dense[r.fid] = r.w
+    meta["w"] = dense
     return meta

@@ -1,4 +1,4 @@
-"""REAL pure-stdlib media codecs for the multimodal operators.
+"""REAL pure-stdlib media codecs.
 
 The container has no PIL/libav, but PNG (RFC 2083: zlib + per-scanline
 filters), WAV (RIFF PCM, stdlib ``wave``) and Y4M video (YUV4MPEG2 —
@@ -6,19 +6,20 @@ uncompressed planar frames behind a plain-text header) need nothing
 beyond zlib/struct/wave + numpy — so these are actual decoders, not
 stubs: a user can extract real image statistics, resize a real PNG,
 compute real audio features, or sample real video frames without
-injecting anything. They plug into ops/multimodal.py's ``decoder=`` /
-``resizer=`` / ``sampler=`` hooks (whose defaults remain the fast
-deterministic stubs) via :func:`png_feature_decoder`,
-:func:`png_resizer`, :func:`wav_feature_decoder`,
-:func:`y4m_frame_sampler`.
+injecting anything. :func:`png_feature_decoder` and
+:func:`wav_feature_decoder` plug into ops/multimodal.py's ``decoder=``
+hook (whose default remains the fast deterministic stub);
+:func:`png_resizer` and :func:`y4m_frame_sampler` are plain
+``bytes -> bytes`` / ``bytes -> frames`` functions.
 
 Scope (documented, raises beyond it): PNG bit depth 8, color types
 0/2/4/6 (grey, RGB, grey+alpha, RGBA), non-interlaced — the shapes a
 web-crawl thumbnail pipeline actually processes; WAV 8/16-bit integer
 PCM; Y4M 420/422/444/mono colourspaces (luma plane read, chroma
 skipped; compressed codecs like h264 remain injection points).
-Executors import only stdlib + numpy; payloads decode row-batch at
-a time inside mapInPandas, never on the driver.
+Executors import only stdlib + numpy; through ``extract_features``
+payloads decode row-batch at a time inside mapInPandas, never on the
+driver.
 """
 
 from __future__ import annotations
@@ -196,7 +197,7 @@ def png_feature_decoder(payload: bytes) -> list:
 
 
 def png_resizer(payload: bytes, width: int, height: int) -> bytes:
-    """Real resize for multimodal.resize_images(resizer=...): decode,
+    """Real resize of a PNG payload to ``width`` x ``height``: decode,
     nearest-neighbor resample (pure numpy fancy indexing), re-encode."""
     img = decode_png(payload)
     h, w = img.shape[:2]
@@ -264,9 +265,8 @@ def wav_feature_decoder(payload: bytes) -> list:
 # header ("YUV4MPEG2 W<w> H<h> F<num>:<den> ... \n") followed by
 # uncompressed frames, each "FRAME...\n" + raw planar YUV bytes. It is
 # the interchange format of ffmpeg/x264 pipelines, so a real pipeline
-# can transcode crawl video to Y4M out-of-band and run THIS sampler
-# distributed; compressed codecs (h264 etc.) remain injection points on
-# multimodal.sample_frames(sampler=).
+# can transcode crawl video to Y4M out-of-band and run THIS sampler;
+# compressed codecs (h264 etc.) are not decoded here.
 
 _Y4M_PLANES = {          # colourspace -> chroma plane size factor
     "420": 0.25, "420jpeg": 0.25, "420mpeg2": 0.25, "420paldv": 0.25,
@@ -338,11 +338,10 @@ def encode_y4m(frames, fps: tuple[int, int] = (30, 1)) -> bytes:
 
 
 def y4m_frame_sampler(payload: bytes, every_ms: int):
-    """Real frame sampler for multimodal.sample_frames(sampler=...):
-    decodes the Y4M stream and emits (index, PNG-encoded luma frame,
+    """Real frame sampler of a Y4M payload: decodes the Y4M stream and emits (index, PNG-encoded luma frame,
     timestamp_ms) every ``every_ms`` of stream time (always including
-    frame 0) — sampled video frames flow straight into the PNG
-    feature/resize operators."""
+    frame 0) — sampled video frames feed :func:`png_feature_decoder`
+    and :func:`png_resizer` unchanged."""
     frames, (num, den) = decode_y4m(payload)
     if num <= 0 or den <= 0:
         raise ValueError("bad Y4M frame rate")

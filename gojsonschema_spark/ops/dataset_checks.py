@@ -207,8 +207,7 @@ def categorical_drift(df_p: DataFrame, df_q: DataFrame, col: str,
     monitors stay comparable); JS joins FULL OUTER with null-as-zero, so
     new or vanished categories contribute rather than silently dropping
     out. Each side reduces to |categories| rows in one scan before the
-    join — the join is broadcastable and never scales with the data.
-    :func:`streaming.windowed_drift` is the live twin."""
+    join — the join is broadcastable and never scales with the data."""
     if metric not in ("kl", "psi", "js"):
         raise ValueError("metric must be kl|psi|js")
     dist_p = _cat_dist(df_p, col, "p")

@@ -24,7 +24,7 @@ from .text import normalize_text, tokenize
 __all__ = ["exact_duplicates", "exact_dedup_keep_canonical", "shingles",
            "minhash_signatures", "band_buckets",
            "minhash_lsh_pairs", "simhash", "ngram_jaccard_pairs",
-           "embedding_near_dups", "lsh_embedding_near_dups",
+           "embedding_near_dups",
            "duplicate_paragraphs", "contamination_check",
            "duplicate_clusters", "dedup_keep_canonical",
            "boilerplate_lines", "strip_boilerplate"]
@@ -268,7 +268,7 @@ def embedding_near_dups(df: DataFrame, threshold: float = 0.99,
     """Embedding-cosine near-duplicate pairs, EXACT: self-join on
     key_a < key_b with the cosine computed as JVM higher-order functions.
     O(n^2) — the exactness baseline / verifier for a bounded candidate
-    set; the 100 TB path is :func:`lsh_embedding_near_dups`, which
+    set; incremental.embedding_dedup_incremental is the scale path, which
     confines the pair generation to hyperplane buckets."""
     a = df.select(F.col(key_col).alias("a"),
                   F.col(vec_col).cast("array<double>").alias("va"))
@@ -283,41 +283,6 @@ def embedding_near_dups(df: DataFrame, threshold: float = 0.99,
         F.explode(F.array(F.round(_cosine(F.col("va"), F.col("vb")),
                                   round_to))).alias("cosine"))
     return scored.filter(F.col("cosine") >= threshold)
-
-
-def lsh_embedding_near_dups(df: DataFrame, planes: list[list[float]],
-                            threshold: float = 0.99,
-                            vec_col: str = "embedding",
-                            key_col: str = "vec_id",
-                            round_to: int = 6,
-                            max_bucket: int = 5000) -> DataFrame:
-    """Scale path: hyperplane-LSH bucketing -> per-bucket pair generation
-    -> exact cosine verify. The self-join shuffles on the signature, so
-    the cross-product only materializes within a bucket (near-duplicate
-    vectors agree on every sign bit with high probability); degenerate
-    buckets are dropped at ``max_bucket`` like minhash_lsh_pairs'. Recall
-    vs the exact op is gated in tests/test_ops.py."""
-    from .similarity import hyperplane_signature
-
-    signed = df.select(
-        F.col(key_col).alias("k"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-        F.explode(F.array(hyperplane_signature(F.col(vec_col), planes)))
-         .alias("sig"))
-    # deny-list anti-join (r4): broadcasting the ALLOW-list of ok
-    # signatures is unbounded (up to |distinct sigs|); the OVERSIZED set
-    # is tiny by construction
-    oversized = (signed.groupBy("sig").agg(F.count(F.lit(1)).alias("n"))
-                 .filter(F.col("n") > max_bucket).select("sig"))
-    signed = signed.join(F.broadcast(oversized), "sig", "left_anti")
-    a = signed.select("sig", F.col("k").alias("a"), F.col("v").alias("va"))
-    b = signed.select("sig", F.col("k").alias("b"), F.col("v").alias("vb"))
-    pairs = a.join(b, ["sig"]).filter(F.col("a") < F.col("b"))
-    scored = pairs.select(
-        "a", "b",
-        F.explode(F.array(F.round(_cosine(F.col("va"), F.col("vb")),
-                                  round_to))).alias("cosine"))
-    return scored.filter(F.col("cosine") >= threshold).dropDuplicates(["a", "b"])
 
 
 def duplicate_paragraphs(df: DataFrame, text_col: str = "text",

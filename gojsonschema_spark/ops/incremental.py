@@ -14,11 +14,11 @@ Three store granularities, matching the single-corpus operators:
   ~0.5 KB/doc at 64 hashes. Bucket ids are pure hashes of the signature
   (dedup.band_buckets), so a store persisted last month buckets
   IDENTICALLY to today's crawl — no co-training, no global state.
-* **simhash store** — one 64-bit sketch per document (8 bytes/doc);
-  Hamming-distance near-dup membership via the Manku pigeonhole block
-  join (:func:`simhash_dedup_incremental`).
+* **embedding store** — vectors keyed like the crawl; cosine near-dup
+  membership via shared random-hyperplane signatures
+  (:func:`embedding_dedup_incremental`).
 
-Both ops return the SURVIVING new rows (DataFrame in, DataFrame out,
+The ops return the SURVIVING new rows (DataFrame in, DataFrame out,
 lazy); the caller appends the survivors' fingerprints/signatures to the
 store for run N+1 (``fingerprint_store(survivors)`` /
 ``minhash_signatures(survivors)`` unioned onto the persisted table).
@@ -32,12 +32,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .dedup import band_buckets, minhash_signatures, simhash
+from .dedup import band_buckets, minhash_signatures
 from .text import normalize_text
 
 __all__ = ["fingerprint_store", "exact_dedup_incremental",
            "signature_store", "minhash_dedup_incremental",
-           "simhash_store", "simhash_dedup_incremental",
            "embedding_dedup_incremental", "crawl_diff",
            "crawl_diff_summary"]
 
@@ -246,8 +245,8 @@ def embedding_dedup_incremental(new_df: DataFrame, store_df: DataFrame,
     ``threshold`` against any stored vector or any smaller-keyed new
     vector.
 
-    Scale shape mirrors dedup.lsh_embedding_near_dups: both sides sign
-    with the SAME hyperplanes (signatures are pure functions of the
+    Scale shape (sign-LSH blocking): both sides sign with the SAME
+    hyperplanes (signatures are pure functions of the
     vector, so a store signed last month buckets identically — persist
     the planes with the store, similarity.random_hyperplanes(seed=...)
     regenerates them), candidates come from a signature equi-join with
@@ -286,129 +285,6 @@ def embedding_dedup_incremental(new_df: DataFrame, store_df: DataFrame,
           .filter(cos >= threshold)
           .select(F.col("b").alias("loser")).distinct())
     losers = vs_store.unionAll(nn).distinct()
-    return new_df.join(losers, new_df[key_col] == losers["loser"],
-                       "left_anti")
-
-
-def simhash_store(df: DataFrame, text_col: str = "text",
-                  key_col: str = "doc_id") -> DataFrame:
-    """Persisted SimHash store: one (k, sim) row per document — 8 bytes
-    of sketch per doc, the cheapest near-dup store of the three. Feed to
-    :func:`simhash_dedup_incremental`."""
-    return df.select(F.col(key_col).alias("k"),
-                     simhash(F.col(text_col)).alias("sim"))
-
-
-def _simhash_combo_keys(sims: DataFrame, n_blocks: int,
-                        need: int) -> DataFrame:
-    """(k, blk, val) rows — one per ``need``-sized block COMBINATION:
-    the 64-bit simhash splits into ``n_blocks`` contiguous bit blocks
-    (widths as even as 64/n allows) and each combination of ``need``
-    blocks concatenates into one join key (``blk`` = combination index,
-    ``val`` = xxhash64 of the member block values). A pair within
-    Hamming distance d = n_blocks - need differs in at most d blocks,
-    hence agrees EXACTLY on every block of at least one ``need``-subset
-    — the Manku table construction's pigeonhole. For need == 1 this
-    degenerates to plain per-block keys. Pure shifts + one hash — no
-    UDF."""
-    import itertools
-
-    bounds = []
-    base, rem = divmod(64, n_blocks)
-    lo = 0
-    for i in range(n_blocks):
-        w = base + (1 if i < rem else 0)
-        bounds.append((lo, w))
-        lo += w
-    # logical right shift then mask: width < 64, so the mask literal
-    # fits a signed long
-    vals = [F.shiftrightunsigned(F.col("sim"), lo)
-             .bitwiseAND(F.lit((1 << w) - 1))
-            for lo, w in bounds]
-    combos = list(itertools.combinations(range(n_blocks), need))
-    keys = F.array(*[
-        F.struct(
-            F.lit(ci).alias("blk"),
-            (vals[c[0]] if len(c) == 1 else
-             F.xxhash64(*[vals[j] for j in c])).alias("val"))
-        for ci, c in enumerate(combos)])
-    return (sims.select("k", F.explode(keys).alias("b"))
-            .select("k", F.col("b.blk").alias("blk"),
-                    F.col("b.val").alias("val")))
-
-
-def simhash_dedup_incremental(new_df: DataFrame, store: DataFrame,
-                              text_col: str = "text",
-                              key_col: str = "doc_id",
-                              max_hamming: int = 3,
-                              n_blocks: int | None = None,
-                              max_bucket: int = 100_000) -> DataFrame:
-    """Near-duplicate dedup of a new crawl against a persisted SimHash
-    store at Hamming distance <= ``max_hamming`` — the Manku/Jain/Sarma
-    (WWW 2007) web-dedup formulation, which Google ran at 8B pages with
-    d=3. A new document drops when some stored document's — or some
-    smaller-keyed new document's — simhash differs in at most
-    ``max_hamming`` bits.
-
-    Scale shape (pigeonhole combination join): the 64-bit sketch splits
-    into ``n_blocks`` contiguous blocks (default d+1) and every
-    combination of ``n_blocks - d`` blocks concatenates into one join
-    key; a pair within distance d differs in at most d blocks, so it
-    agrees exactly on every block of at least one combination —
-    candidates come from an equi-join on (combination, key), never an
-    all-pairs scan, and verify with one native ``bit_count(a ^ b)``.
-
-    ``n_blocks`` trades row amplification against bucket size — the
-    Manku table-count/precision knob: each side emits C(n_blocks, n-d)
-    rows per doc, and a bucket key carries ~64*(n-d)/n bits, so the
-    EXPECTED organic bucket size is n_docs / 2^bits. The d+1 default
-    (one 16-bit block per key at d=3) is right up to ~10^9 docs; at
-    10^11-10^12 use n_blocks=8 (56 combos, 40-bit keys: buckets stay
-    O(1), amplification 56x of 20-byte triples ~ 1 KB/doc — still far
-    cheaper than the text it replaces). ``max_bucket`` deny-lists
-    degenerate buckets (the all-zeros sketch of empty-ish docs) exactly
-    like the MinHash ops."""
-    new_sims = simhash_store(new_df, text_col, key_col)
-    b = n_blocks or (max_hamming + 1)
-    if b <= max_hamming:
-        raise ValueError("n_blocks must exceed max_hamming")
-    need = b - max_hamming
-    new_b = _simhash_combo_keys(new_sims, b, need)
-    old_b = _simhash_combo_keys(store, b, need)
-    oversized = (new_b.select("blk", "val")
-                 .unionAll(old_b.select("blk", "val"))
-                 .groupBy("blk", "val")
-                 .agg(F.count(F.lit(1)).alias("__n"))
-                 .filter(F.col("__n") > max_bucket)
-                 .select("blk", "val"))
-    new_b = new_b.join(F.broadcast(oversized), ["blk", "val"], "left_anti")
-    old_b = old_b.join(F.broadcast(oversized), ["blk", "val"], "left_anti")
-
-    within = F.bit_count(F.col("na.sim").bitwiseXOR(F.col("oa.sim"))) \
-        <= max_hamming
-
-    no_pairs = (new_b.select(F.col("k").alias("nk"), "blk", "val")
-                .join(old_b.select(F.col("k").alias("ok"), "blk", "val"),
-                      ["blk", "val"])
-                .select("nk", "ok").distinct())
-    vs_store = (no_pairs
-                .join(new_sims.alias("na"), no_pairs.nk == F.col("na.k"))
-                .join(store.alias("oa"), no_pairs.ok == F.col("oa.k"))
-                .filter(within)
-                .select(F.col("nk").alias("loser")).distinct())
-
-    nn_pairs = (new_b.select(F.col("k").alias("a"), "blk", "val")
-                .join(new_b.select(F.col("k").alias("b"), "blk", "val"),
-                      ["blk", "val"])
-                .filter(F.col("a") < F.col("b"))
-                .select("a", "b").distinct())
-    nn_dups = (nn_pairs
-               .join(new_sims.alias("na"), nn_pairs.a == F.col("na.k"))
-               .join(new_sims.alias("oa"), nn_pairs.b == F.col("oa.k"))
-               .filter(within)
-               .select(F.col("b").alias("loser")).distinct())
-
-    losers = vs_store.unionAll(nn_dups).distinct()
     return new_df.join(losers, new_df[key_col] == losers["loser"],
                        "left_anti")
 

@@ -77,9 +77,9 @@ def asof_join(left: DataFrame, right: DataFrame, key_col: str,
     at equal timestamps, implementing the <= tie rule) and one
     last-non-null window per key fills values forward. Exactly one
     shuffle, keyed on ``key_col``; per-key data lands on one task, so a
-    bot key with 10^9 events serializes there — pre-split hot keys by
-    time bucket first (the sessionize_skew_guarded pattern) when the key
-    histogram is skewed."""
+    bot key with 10^9 events serializes there — pre-split hot keys
+    (ops/skew.py salted_counts finds them) by time bucket first when the
+    key histogram is skewed."""
     from pyspark.sql import Window as W
 
     out_col = out_col or f"asof_{value_col}"

@@ -1,18 +1,13 @@
-"""Multimodal column plumbing: binary payloads + typed metadata.
+"""Multimodal column plumbing: feature extraction over binary payloads.
 
-Image/audio/video travel as opaque ``binary`` columns with a metadata
-struct. Decode / feature-extract / resize / frame-sample run as
-Arrow-batched ``mapInPandas`` stages.
-
-The codec step is injectable via ``decoder=`` / ``resizer=`` /
-``sampler=``. REAL pure-stdlib codecs live in ops/codecs.py — PNG
-decode/encode/resize (full RFC 2083 filter support) and WAV PCM
-decode, usable as ``extract_features(df,
-decoder=codecs.png_feature_decoder)`` / ``resize_images(df, w, h,
-resizer=codecs.png_resizer)`` with no external libraries. Defaults stay
-the deterministic md5 fakes (fast, format-agnostic — they exercise the
-plumbing for payloads the real codecs don't cover, e.g. video; inject a
-PIL/libav-backed callable for those in production)."""
+Image/audio/video travel as opaque ``binary`` columns; feature
+extraction runs as an Arrow-batched ``mapInPandas`` stage. The codec step
+is injectable via ``decoder=``; the default is a deterministic md5 fake
+(fast and format-agnostic). Real pure-stdlib decoders live in
+ops/codecs.py (``decoder=codecs.png_feature_decoder`` /
+``codecs.wav_feature_decoder``); for other formats inject a
+PIL/libav-backed callable with the same ``bytes -> list[float]``
+signature."""
 
 from __future__ import annotations
 
@@ -22,12 +17,7 @@ from collections.abc import Callable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
-__all__ = ["MEDIA_SCHEMA", "attach_media_metadata", "extract_features",
-           "resize_images", "sample_frames", "stub_decoder",
-           "stub_resizer", "stub_frame_sampler"]
-
-MEDIA_SCHEMA = ("payload binary, media_type string, width int, height int, "
-                "duration_ms int")
+__all__ = ["extract_features", "stub_decoder"]
 
 FEATURE_SCHEMA = "key string, feature array<float>, n_bytes int"
 
@@ -41,17 +31,6 @@ def stub_decoder(payload: bytes) -> list[float]:
         raise ValueError("cannot decode null payload")
     digest = hashlib.md5(payload).digest()
     return [b / 255.0 for b in digest[:8]]
-
-
-def attach_media_metadata(df: DataFrame, payload_col: str = "payload",
-                          media_type: str = "image/png") -> DataFrame:
-    from pyspark.sql import functions as F
-
-    return df.select(
-        "*",
-        F.lit(media_type).alias("media_type"),
-        F.length(F.col(payload_col)).alias("n_bytes"),
-    )
 
 
 def extract_features(df: DataFrame, key_col: str = "key",
@@ -81,86 +60,3 @@ def extract_features(df: DataFrame, key_col: str = "key",
             })
 
     return df.mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-RESIZED_SCHEMA = "key string, payload binary, width int, height int"
-FRAMES_SCHEMA = "key string, frame_idx int, frame binary, ts_ms int"
-
-
-def stub_resizer(payload: bytes, width: int, height: int) -> bytes:
-    """Deterministic fake resize: real codecs are unavailable in this
-    container — production injects a PIL/libvips-backed callable with the
-    same (payload, w, h) -> bytes signature. The fake keeps output length
-    proportional to the target area so batch-size behavior is realistic."""
-    if payload is None:
-        raise ValueError("cannot resize null payload")
-    seed = hashlib.md5(payload + f"{width}x{height}".encode()).digest()
-    reps = max(1, (width * height) // max(len(seed), 1))
-    return (seed * reps)[: width * height]
-
-
-def stub_frame_sampler(payload: bytes, every_ms: int) -> list[tuple[int, bytes, int]]:
-    """Deterministic fake video frame sampler: yields (idx, frame, ts_ms)
-    triples; production injects a libav-backed callable."""
-    if payload is None:
-        raise ValueError("cannot sample null payload")
-    n = max(1, min(8, len(payload) // 4))
-    out = []
-    for i in range(n):
-        frame = hashlib.md5(payload + bytes([i])).digest()
-        out.append((i, frame, i * every_ms))
-    return out
-
-
-def resize_images(df: DataFrame, width: int, height: int,
-                  key_col: str = "key", payload_col: str = "payload",
-                  resizer: Callable[[bytes, int, int], bytes] = stub_resizer
-                  ) -> DataFrame:
-    """Arrow-batched image resize over binary payloads (mapInPandas).
-
-    Corrupt payloads yield payload=NULL (poison-pill guard); the output
-    schema carries the target dimensions so downstream stages can verify
-    shape without decoding."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for payload in pdf[payload_col]:
-                try:
-                    payloads.append(resizer(bytes(payload), width, height))
-                except Exception:
-                    payloads.append(None)
-            yield pd.DataFrame({
-                "key": pdf[key_col].astype(str),
-                "payload": payloads,
-                "width": width,
-                "height": height,
-            })
-
-    return df.mapInPandas(run, schema=RESIZED_SCHEMA)
-
-
-def sample_frames(df: DataFrame, every_ms: int = 1000,
-                  key_col: str = "key", payload_col: str = "payload",
-                  sampler: Callable = stub_frame_sampler) -> DataFrame:
-    """Frame sampling for video payloads: one output ROW per sampled frame
-    (mapInPandas can change cardinality — no explode of a giant in-memory
-    array; frames stream out batch by batch)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keys, idxs, frames, tss = [], [], [], []
-            for key, payload in zip(pdf[key_col], pdf[payload_col]):
-                try:
-                    triples = sampler(bytes(payload), every_ms)
-                except Exception:
-                    triples = [(0, None, 0)]
-                for i, frame, ts in triples:
-                    keys.append(str(key))
-                    idxs.append(i)
-                    frames.append(frame)
-                    tss.append(ts)
-            yield pd.DataFrame({"key": keys, "frame_idx": idxs,
-                                "frame": frames, "ts_ms": tss})
-
-    return df.mapInPandas(run, schema=FRAMES_SCHEMA)

@@ -1,10 +1,11 @@
 """Similarity search over embedding columns (array<float>).
 
-Brute-force cosine top-k as the exact baseline; an LSH-bucketed variant
-(random hyperplane signs) as the scale path — at 10^12 rows the
-brute-force scan is one pass and the LSH path turns top-k into a
-bucket-local problem. Dot products run as JVM higher-order functions
-(zip_with + aggregate): no Python, fully codegen.
+Brute-force cosine top-k as the exact baseline; an IVF index (k-means
+cells, optionally persisted partitioned by cell) as the scale path — at
+10^12 rows the brute-force scan is one pass and a probe reads only the
+n_probe nearest cells. Random-hyperplane signatures serve sign-LSH
+blocking (ops/incremental.py). Dot products run as JVM higher-order
+functions (zip_with + aggregate): no Python, fully codegen.
 """
 
 from __future__ import annotations
@@ -12,10 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 __all__ = ["cosine_to_query", "brute_force_topk", "random_hyperplanes",
-           "hyperplane_signature",
-           "lsh_bucketed_topk", "ivf_train", "ivf_assign", "ivf_topk",
-           "ivf_build_index", "ivf_append_index", "ivf_probe_topk",
-           "lsh_build_index", "lsh_append_index", "lsh_probe_topk"]
+           "hyperplane_signature", "ivf_train", "ivf_assign", "ivf_topk",
+           "ivf_build_index", "ivf_probe_topk"]
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -57,16 +56,14 @@ def brute_force_topk(df: DataFrame, query_vec: list[float], k: int = 10,
 def random_hyperplanes(dim: int, n_planes: int,
                        seed: int = 0) -> list[list[float]]:
     """Seeded Gaussian random hyperplanes for sign-LSH
-    (:func:`hyperplane_signature`, dedup.lsh_embedding_near_dups,
-    lsh_build_index): standard normal entries make the collision
-    probability of two vectors 1 - theta/pi per plane (Charikar 2002),
-    so ``n_planes`` trades recall against bucket size — each extra
-    plane roughly halves the bucket population while multiplying pair
-    recall at angle theta by (1 - theta/pi). For near-dup thresholds
-    (cosine >= 0.99, theta <= 8.1 degrees) recall stays >= 0.97 at 16
-    planes (0.9955^16); the measured-recall gate lives in
-    tests/test_ops.py. Driver-side list literal: the planes ship inside
-    the plan, no join."""
+    (:func:`hyperplane_signature`, incremental.embedding_dedup_incremental):
+    standard normal entries make the collision probability of two vectors
+    1 - theta/pi per plane (Charikar 2002), so ``n_planes`` trades recall
+    against bucket size — each extra plane roughly halves the bucket
+    population while multiplying pair recall at angle theta by
+    (1 - theta/pi). For near-dup thresholds (cosine >= 0.99, theta <= 8.1
+    degrees) recall stays >= 0.97 at 16 planes (0.9955^16).
+    Driver-side list literal: the planes ship inside the plan, no join."""
     import numpy as np
 
     rng = np.random.RandomState(seed)
@@ -179,36 +176,6 @@ def ivf_build_index(df: DataFrame, centroids: list[list[float]], target: str,
     write_pages(assigned, target, bucket_col=cell_col)
 
 
-def ivf_append_index(df: DataFrame, centroids: list[list[float]],
-                     target: str, vec_col: str = "embedding",
-                     cell_col: str = "ivf_cell") -> None:
-    """Day-2 index growth: assign NEW vectors with the EXISTING
-    centroids and APPEND their partitions to the persisted index — no
-    retrain, no rewrite of prior data. Probes keep pruning correctly
-    because the partition column is a pure function of (vector,
-    centroids); persist the centroids with the index and reuse them
-    here. Re-train (ivf_train + ivf_build_index) only when the
-    appended distribution drifts enough that cell occupancy skews —
-    the standard IVF operational contract."""
-    from ..io.tables import write_pages
-    assigned = ivf_assign(df, centroids, vec_col, cell_col)
-    write_pages(assigned, target, bucket_col=cell_col, mode="append")
-
-
-def lsh_append_index(df: DataFrame, planes: list[list[float]], target: str,
-                     vec_col: str = "embedding",
-                     sig_col: str = "lsh_sig") -> None:
-    """Day-2 append for the LSH index: sign new vectors with the SAME
-    persisted hyperplanes and append — signatures are pure vector
-    functions, so old and new rows land in consistent partitions
-    (unlike IVF there is no drift concern: the planes are
-    data-independent)."""
-    from ..io.tables import write_pages
-    signed = df.withColumn(sig_col,
-                           hyperplane_signature(F.col(vec_col), planes))
-    write_pages(signed, target, bucket_col=sig_col, mode="append")
-
-
 def ivf_probe_topk(spark: SparkSession, index_source: str,
                    centroids: list[list[float]], query_vec: list[float],
                    k: int = 10, n_probe: int = 4,
@@ -223,64 +190,3 @@ def ivf_probe_topk(spark: SparkSession, index_source: str,
     probes = sorted(range(len(centroids)), key=lambda i: d[i])[:n_probe]
     cand = read_pages(spark, index_source, bucket_col=cell_col, buckets=probes)
     return brute_force_topk(cand, query_vec, k, vec_col, key_col, round_to)
-
-
-def lsh_build_index(df: DataFrame, planes: list[list[float]], target: str,
-                    vec_col: str = "embedding",
-                    sig_col: str = "lsh_sig") -> None:
-    """Persist the hyperplane-LSH index: signatures computed once at build
-    time, corpus written partitioned by signature — probes prune to one
-    partition instead of recomputing signatures over the full corpus."""
-    from ..io.tables import write_pages
-    signed = df.withColumn(sig_col,
-                           hyperplane_signature(F.col(vec_col), planes))
-    write_pages(signed, target, bucket_col=sig_col)
-
-
-def lsh_probe_topk(spark: SparkSession, index_source: str,
-                   query_vec: list[float], planes: list[list[float]],
-                   k: int = 10, vec_col: str = "embedding",
-                   key_col: str = "vec_id", sig_col: str = "lsh_sig",
-                   round_to: int = 6,
-                   multiprobe_bits: int = 0) -> DataFrame:
-    """ANN top-k against a persisted LSH index: the query signature (and,
-    with ``multiprobe_bits`` > 0, every neighbor within Hamming distance
-    ``multiprobe_bits`` — standard multiprobe to cut the miss rate)
-    selects partitions; the scan reads only those buckets. Flip sets of
-    ALL sizes 1..multiprobe_bits are probed: the nearest (fewest-flip)
-    buckets hold the most probable misses, so probing only the exactly-m
-    flips (the r3 bug) skipped the highest-recall neighbors."""
-    import itertools
-    from ..io.tables import read_pages
-    q = [float(x) for x in query_vec]
-    q_sig = sum((1 << i) for i, p in enumerate(planes)
-                if sum(a * b for a, b in zip(q, p)) >= 0)
-    sigs = {q_sig}
-    for r in range(1, min(multiprobe_bits, len(planes)) + 1):
-        for flips in itertools.combinations(range(len(planes)), r):
-            s = q_sig
-            for b in flips:
-                s ^= (1 << b)
-            sigs.add(s)
-    cand = read_pages(spark, index_source, bucket_col=sig_col,
-                      buckets=sorted(sigs))
-    return brute_force_topk(cand, query_vec, k, vec_col, key_col, round_to)
-
-
-def lsh_bucketed_topk(df: DataFrame, query_vec: list[float], planes: list[list[float]],
-                      k: int = 10, vec_col: str = "embedding",
-                      key_col: str = "vec_id", round_to: int = 6) -> DataFrame:
-    """ANN: restrict the scan to the query's hyperplane bucket, then exact
-    cosine inside it. Partition pruning follows for tables written
-    bucketed/partitioned by the signature."""
-    q_sig_row = (df.sparkSession.range(1)
-                 .select(hyperplane_signature(
-                     F.lit(query_vec).cast("array<float>"), planes).alias("s"))
-                 .collect())
-    q_sig = q_sig_row[0]["s"]
-    # signature behind a Generate barrier for the same FilterExec-CSE
-    # reason as ivf_assign
-    signed = df.select("*", F.explode(F.array(
-        hyperplane_signature(F.col(vec_col), planes))).alias("__gjs_sig"))
-    bucket = signed.filter(F.col("__gjs_sig") == F.lit(q_sig)).drop("__gjs_sig")
-    return brute_force_topk(bucket, query_vec, k, vec_col, key_col, round_to)

@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from gojsonschema_spark.ops import classifier as clf
 
@@ -111,109 +110,11 @@ def test_guards(spark):
         clf.train_quality_classifier(bad, "y", dim=64, n_iters=1)
 
 
-LANGS = {
-    "en": ["the cat sat on the mat and the dog ran",
-           "a history of trade and agriculture in the region",
-           "researchers documented the findings with care"],
-    "de": ["die katze sass auf der matte und der hund lief",
-           "eine geschichte des handels und der landwirtschaft",
-           "die forscher dokumentierten die ergebnisse"],
-    "fr": ["le chat est sur le tapis et le chien court",
-           "une histoire du commerce et de l'agriculture",
-           "les chercheurs ont documente les resultats"],
-}
-
-
-def _lang_corpus(spark, n_rep: int = 6):
-    rows, i = [], 0
-    for _ in range(n_rep):
-        for lang, texts in LANGS.items():
-            for t in texts:
-                rows.append((i, t, lang)); i += 1
-    return spark.createDataFrame(rows, "doc_id long, text string, y string")
-
-
-@pytest.fixture(scope="module")
-def mc_model(spark):
-    return clf.train_multiclass_classifier(
-        _lang_corpus(spark), "y", dim=1 << 12, n_iters=25, lr=2.0)
-
-
-def test_multiclass_separates_languages(spark, mc_model):
-    assert mc_model["classes"] == ["de", "en", "fr"]
-    df = _lang_corpus(spark, n_rep=1)
-    wtab = clf.multiclass_weights_table(spark, mc_model)
-    got = {r.doc_id: r.label for r in clf.score_multiclass_native(
-        df, wtab, mc_model["dim"], "doc_id", mc_model["classes"],
-        bias=mc_model["bias"]).collect()}
-    want = {r.doc_id: r.y for r in df.collect()}
-    assert got == want
-    assert mc_model["losses"][-1] < 0.2 * mc_model["losses"][0]
-
-
-def test_multiclass_matches_numpy_softmax(spark):
-    """Distributed softmax GD == dense numpy reference at tolerance."""
-    dim, iters, lr = 1 << 10, 6, 1.0
-    df = _lang_corpus(spark, n_rep=2)
-    classes = ["de", "en", "fr"]
-    fid_rows = [r.fids for r in df.select(
-        clf.hashed_feature_ids("text", dim).alias("fids")).collect()]
-    ys = np.array([classes.index(r.y) for r in df.collect()])
-
-    C = len(classes)
-    W = np.zeros((dim, C)); b = np.zeros(C)
-    for _ in range(iters):
-        m = np.stack([b + W[np.asarray(f, dtype=np.int64)].sum(axis=0)
-                      for f in fid_rows])
-        m -= m.max(axis=1, keepdims=True)
-        p = np.exp(m); p /= p.sum(axis=1, keepdims=True)
-        r = p; r[np.arange(len(ys)), ys] -= 1.0
-        G = np.zeros((dim, C))
-        for f, ri in zip(fid_rows, r):
-            np.add.at(G, np.asarray(f, dtype=np.int64), ri)
-        W = W - lr * G / len(ys)
-        b = b - lr * r.mean(axis=0)
-
-    got = clf.train_multiclass_classifier(df, "y", classes=classes,
-                                          dim=dim, n_iters=iters, lr=lr)
-    np.testing.assert_allclose(
-        np.array(got["W"]).T, W, rtol=1e-8, atol=1e-12)
-    np.testing.assert_allclose(got["bias"], b, rtol=1e-8, atol=1e-12)
-
-
-def test_multiclass_scorer_via_language_id(spark, mc_model):
-    """The scorer= bridge (Arrow UDF path) agrees with the native join
-    on ASCII text and plugs into ops.text.language_id."""
-    from gojsonschema_spark.ops.text import language_id
-
-    df = _lang_corpus(spark, n_rep=1)
-    got = {r.doc_id: r.lid for r in df.select(
-        "doc_id", language_id(F.col("text"),
-                              scorer=clf.multiclass_scorer(mc_model))
-        .alias("lid")).collect()}
-    want = {r.doc_id: r.y for r in df.collect()}
-    assert got == want
-
-
-def test_multiclass_guards(spark):
-    df = _lang_corpus(spark, 1)
-    with pytest.raises(ValueError, match="outside classes"):
-        clf.train_multiclass_classifier(df, "y", classes=["en", "de"],
-                                        dim=64, n_iters=1)
-    with pytest.raises(ValueError, match="classes"):
-        clf.train_multiclass_classifier(df, "y", classes=["en"],
-                                        dim=64, n_iters=1)
-    with pytest.raises(ValueError, match="dim"):
-        clf.train_multiclass_classifier(df, "y", dim=1 << 22, n_iters=1)
-
-
 def test_hashed_tfidf_matches_reference_and_feeds_ann(spark):
-    """Sparse TF-IDF == sklearn-convention numpy reference; the dense
-    assembler L2-normalizes; near-identical docs cosine-rank first."""
+    """Sparse TF-IDF == sklearn-convention numpy reference."""
     import hashlib
 
-    from gojsonschema_spark.ops.classifier import (hashed_tfidf_sparse,
-                                                   tfidf_dense)
+    from gojsonschema_spark.ops.classifier import hashed_tfidf_sparse
 
     dim = 256
     docs = [(0, "the cat sat on the mat"),
@@ -243,19 +144,10 @@ def test_hashed_tfidf_matches_reference_and_feeds_ann(spark):
     assert got == pytest.approx(want)
     assert not [k for k in got if k[0] == 3]  # empty doc: no rows
 
-    dense = {r.doc_id: np.array(r.embedding)
-             for r in tfidf_dense(sparse, dim, "doc_id").collect()}
-    for i in (0, 1, 2):
-        assert np.linalg.norm(dense[i]) == pytest.approx(1.0)
-        nz = {f for f, v in enumerate(dense[i]) if v != 0.0}
-        assert nz == set(tfs[i])
-    # cosine: doc 1 is nearest to doc 0, doc 2 far
-    assert dense[0] @ dense[1] > 0.9 > dense[0] @ dense[2]
 
-
-def test_save_load_roundtrip(spark, model, mc_model, tmp_path):
-    """Day-2 persistence: both model kinds round-trip through parquet
-    exactly (weights, bias, classes, dim) and score identically."""
+def test_save_load_roundtrip(spark, model, tmp_path):
+    """Day-2 persistence: a model round-trips through parquet exactly
+    (weights, bias, dim) and scores identically."""
     from gojsonschema_spark.ops.classifier import (load_classifier,
                                                    save_classifier)
 
@@ -264,13 +156,6 @@ def test_save_load_roundtrip(spark, model, mc_model, tmp_path):
     back = load_classifier(spark, p1)
     assert back["w"] == model["w"] and back["bias"] == model["bias"]
     assert back["dim"] == model["dim"]
-
-    p2 = str(tmp_path / "multi")
-    save_classifier(spark, mc_model, p2)
-    back2 = load_classifier(spark, p2)
-    assert back2["W"] == mc_model["W"]
-    assert back2["bias"] == mc_model["bias"]
-    assert back2["classes"] == mc_model["classes"]
 
     df = _corpus(spark, 1)
     a = {r.doc_id: r.margin for r in
@@ -296,15 +181,11 @@ def test_null_text_rows_survive_everywhere(spark):
     assert arrow[1] == pytest.approx(model["bias"])
     for k in native:
         assert native[k] == pytest.approx(arrow[k], rel=1e-9, abs=1e-12)
-    mc = clf.train_multiclass_classifier(
-        df.withColumn("y", F.col("y").cast("string")), "y",
-        dim=256, n_iters=2)
-    assert mc["classes"] == ["0", "1"]
 
 
 def test_lowercase_flag_round_trips(spark, tmp_path):
     """A case-sensitive model records lowercase=False and every
-    consumer honors it — margin_column, the scorer bridge, save/load."""
+    consumer honors it — margin_column and save/load."""
     from gojsonschema_spark.ops.classifier import (load_classifier,
                                                    save_classifier)
 
@@ -321,9 +202,3 @@ def test_lowercase_flag_round_trips(spark, tmp_path):
            clf.score_quality(df, back, "doc_id").collect()}
     labels = {r.doc_id: r.y for r in df.collect()}
     assert all((got[k] > 0.5) == (labels[k] == 1) for k in labels)
-    with pytest.raises(ValueError, match="NULL"):
-        clf.train_multiclass_classifier(
-            spark.createDataFrame([(0, "x", None), (1, "y", "a"),
-                                   (2, "z", "b")],
-                                  "doc_id long, text string, y string"),
-            "y", dim=64, n_iters=1)

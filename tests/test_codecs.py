@@ -1,10 +1,9 @@
-"""Real PNG/WAV codecs (ops/codecs.py): round-trips through every PNG
+"""Real PNG/WAV/Y4M codecs (ops/codecs.py): round-trips through every PNG
 filter type and channel count, real features through the Spark
-multimodal operators, poison-pill behavior on corrupt payloads."""
+``extract_features`` operator, poison-pill behavior on corrupt payloads."""
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from gojsonschema_spark.ops.codecs import (decode_png, decode_wav,
                                            encode_png, encode_wav,
@@ -73,11 +72,9 @@ def test_wav_roundtrip_and_features():
 
 def test_real_codecs_through_spark_multimodal(spark):
     """The mapInPandas plumbing runs the REAL codecs end to end: feature
-    extraction returns genuine image statistics, corrupt payloads
-    poison-pill to NULL, and resized payloads decode to the target
-    shape on the driver."""
-    from gojsonschema_spark.ops.multimodal import (extract_features,
-                                                   resize_images)
+    extraction returns genuine image statistics and corrupt payloads
+    poison-pill to NULL."""
+    from gojsonschema_spark.ops.multimodal import extract_features
 
     rng = np.random.RandomState(11)
     imgs = {f"k{i}": rng.randint(0, 256, size=(8, 8, 3), dtype=np.uint8)
@@ -95,13 +92,6 @@ def test_real_codecs_through_spark_multimodal(spark):
         assert got is not None and len(got) == 8
         assert abs(got[3] - f.mean()) < 1e-6        # float32 column
         assert (got[0], got[1], got[2]) == (8.0, 8.0, 3.0)
-
-    resized = {r.key: r for r in
-               resize_images(df, width=4, height=4,
-                             resizer=png_resizer).collect()}
-    assert resized["bad"].payload is None
-    out = decode_png(bytes(resized["k0"].payload))
-    assert out.shape == (4, 4, 3)
 
 
 def test_y4m_roundtrip_and_sampler():
@@ -146,37 +136,3 @@ def test_y4m_c420_layout_and_failures():
         decode_y4m(b"YUV4MPEG2 W2 H2 C999\nFRAME\n" + b"\0" * 6)
     with pytest.raises(ValueError, match="FRAME"):
         decode_y4m(b"YUV4MPEG2 W2 H2 Cmono\nXRAME\n" + b"\0" * 4)
-
-
-def test_y4m_through_spark_sample_frames(spark):
-    """Video -> sampled PNG frames -> real image features, all through
-    the distributed multimodal plumbing (one output row per frame)."""
-    from gojsonschema_spark.ops.codecs import (encode_y4m,
-                                               png_feature_decoder,
-                                               y4m_frame_sampler)
-    from gojsonschema_spark.ops.multimodal import (extract_features,
-                                                   sample_frames)
-
-    rng = np.random.RandomState(7)
-    clips = {f"v{i}": encode_y4m(
-        [rng.randint(0, 256, (4, 4), dtype=np.uint8) for _ in range(6)],
-        fps=(5, 1)) for i in range(3)}               # 200 ms/frame
-    rows = [(k, bytearray(v)) for k, v in clips.items()]
-    rows.append(("bad", bytearray(b"mp4?")))
-    df = spark.createDataFrame(rows, "key string, payload binary")
-
-    out = sample_frames(df, every_ms=400, sampler=y4m_frame_sampler)
-    got = [(r.key, r.frame_idx, r.ts_ms, r.frame is not None)
-           for r in out.orderBy("key", "frame_idx").collect()]
-    want = [(f"v{i}", idx, ts, True)
-            for i in range(3) for idx, ts in [(0, 0), (2, 400), (4, 800)]]
-    assert got == [("bad", 0, 0, False)] + want
-    # frames feed the image feature op: width=height=4, 1 channel
-    feats = extract_features(
-        out.filter(F.col("frame").isNotNull())
-           .select(F.concat_ws("#", "key", "frame_idx").alias("key"),
-                   F.col("frame").alias("payload")),
-        decoder=png_feature_decoder)
-    f = feats.collect()
-    assert len(f) == 9
-    assert all(r.feature[0] == 4.0 and r.feature[2] == 1.0 for r in f)

@@ -155,10 +155,6 @@ def test_similarity_topk(spark):
     df = spark.createDataFrame(rows)
     top = sim.brute_force_topk(df, [1.0, 0.0, 0.0, 0.0], k=2).collect()
     assert top[0].vec_id == 0 and top[0].cosine == 1.0
-    # LSH bucket variant returns the exact hit too
-    planes = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]]
-    btop = sim.lsh_bucketed_topk(df, [1.0, 0.0, 0.0, 0.0], planes, k=1).collect()
-    assert btop[0].vec_id == 0
 
 
 def test_similarity_ivf(spark):
@@ -188,48 +184,6 @@ def _scan_partitions_read(df) -> int:
     BEFORE pruning, so it cannot distinguish pruned from post-scan filters."""
     scan = df._jdf.queryExecution().executedPlan().collectLeaves().apply(0)
     return int(scan.metrics().apply("numPartitions").value())
-
-
-def test_index_append_day2(spark, tmp_path):
-    """Day-2 index growth: appending new vectors (assigned/signed with
-    the PERSISTED centroids/planes) must leave probes equal to a
-    from-scratch build over the union — and the probe still prunes to
-    the probed cells only."""
-    old = spark.createDataFrame(
-        [Row(vec_id=i, embedding=[1.0 + 0.01 * i, 0.0, 0.0, 0.0])
-         for i in range(8)] +
-        [Row(vec_id=100 + i, embedding=[0.0, 1.0 + 0.01 * i, 0.0, 0.0])
-         for i in range(8)])
-    new = spark.createDataFrame(
-        [Row(vec_id=200 + i, embedding=[1.0, 0.02 * i, 0.0, 0.0])
-         for i in range(6)])
-    cents = sim.ivf_train(old, n_centroids=2, iters=2)
-
-    idx = str(tmp_path / "ivf_idx")
-    sim.ivf_build_index(old, cents, idx)
-    sim.ivf_append_index(new, cents, idx)
-    full = str(tmp_path / "ivf_full")
-    sim.ivf_build_index(old.unionAll(new), cents, full)
-
-    q = [1.0, 0.0, 0.0, 0.0]
-    got = sim.ivf_probe_topk(spark, idx, cents, q, k=5, n_probe=1).collect()
-    want = sim.ivf_probe_topk(spark, full, cents, q, k=5, n_probe=1).collect()
-    assert [(r.vec_id, r.cosine) for r in got] == \
-        [(r.vec_id, r.cosine) for r in want]
-    # appended rows reachable through the appended partitions
-    wide = sim.ivf_probe_topk(spark, idx, cents, q, k=30, n_probe=1).collect()
-    assert {r.vec_id for r in wide} & set(range(200, 206))
-
-    planes = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]]
-    lidx = str(tmp_path / "lsh_idx")
-    sim.lsh_build_index(old, planes, lidx)
-    sim.lsh_append_index(new, planes, lidx)
-    lfull = str(tmp_path / "lsh_full")
-    sim.lsh_build_index(old.unionAll(new), planes, lfull)
-    got_l = sim.lsh_probe_topk(spark, lidx, q, planes, k=5).collect()
-    want_l = sim.lsh_probe_topk(spark, lfull, q, planes, k=5).collect()
-    assert [(r.vec_id, r.cosine) for r in got_l] == \
-        [(r.vec_id, r.cosine) for r in want_l]
 
 
 def test_ivf_persisted_index_partition_pruned(spark, tmp_path):
@@ -267,44 +221,6 @@ def test_ivf_persisted_index_partition_pruned(spark, tmp_path):
     wall = sim.brute_force_topk(df, q, k=5).collect()
     assert [(r.vec_id, r.cosine) for r in full] == \
         [(r.vec_id, r.cosine) for r in wall]
-
-
-def test_lsh_persisted_index_partition_pruned(spark, tmp_path):
-    """Hyperplane-LSH persisted index: signatures written once as a
-    partition column; the probe reads only the query-signature bucket(s)."""
-    rows = [Row(vec_id=i, embedding=[1.0 + 0.01 * i, 0.0, 0.0, 0.0])
-            for i in range(10)]
-    rows += [Row(vec_id=100 + i, embedding=[-1.0 - 0.01 * i, 0.0, 0.0, 0.0])
-             for i in range(10)]
-    df = spark.createDataFrame(rows)
-    planes = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]]
-    idx = str(tmp_path / "lsh_index")
-    sim.lsh_build_index(df, planes, idx)
-
-    q = [1.0, 0.0, 0.0, 0.0]
-    probe = sim.lsh_probe_topk(spark, idx, q, planes, k=3)
-    got = probe.collect()
-    assert all(r.vec_id < 100 for r in got)  # opposite bucket never read
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    assert "lsh_sig" in plan.split("PartitionFilters")[1].split("]")[0]
-    assert _scan_partitions_read(probe) == 1
-    # multiprobe widens to bit-flip neighbor buckets (only 2 of the 4
-    # signature values exist in this corpus: 3 and its 1-flip neighbor 2)
-    multi = sim.lsh_probe_topk(spark, idx, q, planes, k=3, multiprobe_bits=1)
-    multi.collect()
-    assert _scan_partitions_read(multi) == 2
-    # r4 fix: flip sets of ALL sizes 1..m. bits=2 must still probe the
-    # 1-flip neighbor (sig 2, where the vec_id>=100 bucket lives) — the
-    # r3 code probed only exactly-2-flip sets and would read 1 partition
-    # here, silently LOWER recall than bits=1
-    ids1 = {r.vec_id for r in sim.lsh_probe_topk(
-        spark, idx, q, planes, k=40, multiprobe_bits=1).collect()}
-    multi2 = sim.lsh_probe_topk(spark, idx, q, planes, k=40, multiprobe_bits=2)
-    ids2 = {r.vec_id for r in multi2.collect()}
-    assert _scan_partitions_read(multi2) == 2
-    assert ids1 <= ids2
-    assert any(v >= 100 for v in ids2)
 
 
 def test_multimodal_features(spark):
@@ -360,26 +276,6 @@ def test_tables_adapter_parquet_roundtrip(spark, tmp_path):
     assert after.filter(F.col("warc_bucket") == "2024-06-01").count() == len(rows)
 
 
-def test_multimodal_resize_and_frames(spark):
-    df = spark.createDataFrame(
-        [("a", bytearray(b"image-bytes-aaaa")), ("b", bytearray(b"vid-bbbb"))],
-        ["key", "payload"])
-    resized = mm.resize_images(df, 4, 3).collect()
-    by_key = {r.key: r for r in resized}
-    assert len(bytes(by_key["a"].payload)) == 12  # w*h fake payload
-    assert (by_key["a"].width, by_key["a"].height) == (4, 3)
-    # determinism
-    again = {r.key: bytes(r.payload) for r in mm.resize_images(df, 4, 3).collect()}
-    assert again == {r.key: bytes(r.payload) for r in resized}
-
-    frames = mm.sample_frames(df, every_ms=500).collect()
-    a_frames = [r for r in frames if r.key == "a"]
-    assert len(a_frames) >= 2  # cardinality change: >1 row per input
-    assert [r.frame_idx for r in sorted(a_frames, key=lambda r: r.frame_idx)] \
-        == list(range(len(a_frames)))
-    assert all(r.ts_ms == r.frame_idx * 500 for r in a_frames)
-
-
 def test_skew_salting(spark):
     from gojsonschema_spark.ops import skew
 
@@ -420,10 +316,8 @@ def test_skew_salting(spark):
 
 
 def test_embedding_near_dups_exact_and_lsh(spark):
-    """Embedding-cosine near-dup: exact self-join finds exactly the
-    planted scalar-multiple duplicates; the LSH-bucketed scale path has
-    recall 1.0 on them (a positive scalar multiple preserves every
-    hyperplane sign, so a near-dup pair always shares its bucket)."""
+    """Embedding-cosine near-dup: the exact self-join finds exactly the
+    planted scalar-multiple duplicates."""
     import random
     rnd = random.Random(11)
     base = [[rnd.gauss(0, 1) for _ in range(8)] for _ in range(40)]
@@ -438,52 +332,13 @@ def test_embedding_near_dups_exact_and_lsh(spark):
     assert got == want
     assert all(abs(r.cosine - 1.0) < 1e-5 for r in exact.collect())
 
-    planes = [[rnd.gauss(0, 1) for _ in range(8)] for _ in range(6)]
-    lsh = dd.lsh_embedding_near_dups(df, planes, threshold=0.99)
-    got_lsh = {(r.a, r.b) for r in lsh.collect()}
-    assert got_lsh == want  # recall 1.0 by construction, no false positives
-    # two shuffles (bucket groupBy sizes + pair join), never a global
-    # cross product: the join key is the signature
-    plan = lsh._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
 
 def test_random_hyperplanes_recall(spark):
-    """Seeded hyperplane generator: deterministic per seed, and measured
-    recall of the LSH near-dup path vs the exact op is high at few
-    planes and monotone non-increasing as planes grow (each plane
-    splits buckets further)."""
-    import random
-
+    """Seeded hyperplane generator: deterministic per seed."""
     from gojsonschema_spark.ops.similarity import random_hyperplanes
 
     assert random_hyperplanes(8, 4, seed=3) == random_hyperplanes(8, 4, seed=3)
     assert random_hyperplanes(8, 4, seed=3) != random_hyperplanes(8, 4, seed=4)
-
-    rnd = random.Random(23)
-    base = [[rnd.gauss(0, 1) for _ in range(16)] for _ in range(60)]
-    rows = [Row(vec_id=i, embedding=v) for i, v in enumerate(base)]
-    # planted near-dups: small perturbation keeps cosine >= ~0.995
-    rows += [Row(vec_id=1000 + i,
-                 embedding=[x + rnd.gauss(0, 0.02) for x in v])
-             for i, v in enumerate(base) if i % 3 == 0]
-    df = spark.createDataFrame(rows)
-
-    truth = {(r.a, r.b) for r in
-             dd.embedding_near_dups(df, threshold=0.99).collect()}
-    assert truth  # the planted pairs survive the exact op
-
-    def recall(n_planes):
-        planes = random_hyperplanes(16, n_planes, seed=5)
-        got = {(r.a, r.b) for r in dd.lsh_embedding_near_dups(
-            df, planes, threshold=0.99).collect()}
-        assert got <= truth  # verify stage kills false positives
-        return len(got & truth) / len(truth)
-
-    r4, r12 = recall(4), recall(12)
-    assert r4 >= 0.9
-    assert r4 >= r12
 
 
 def test_language_id_scorer_injection(spark):
@@ -1389,66 +1244,6 @@ def test_embedding_dedup_incremental(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_simhash_dedup_incremental(spark):
-    """Manku-style Hamming block join vs a persisted simhash store:
-    results must equal the brute-force all-pairs reference (pigeonhole:
-    any pair within d bits agrees exactly on one of d+1 blocks, so the
-    block equi-join loses no candidate), with the planted exact copy
-    dropped and an unrelated doc kept."""
-    from gojsonschema_spark.ops.incremental import (simhash_dedup_incremental,
-                                                    simhash_store)
-
-    base = ("the quick brown fox jumps over the lazy dog while the "
-            "river bank erodes slowly under heavy spring rain today")
-    old = spark.createDataFrame(
-        [(1, base),
-         (2, "an entirely different report about database join strategies "
-             "and shuffle partition sizing for large clusters")],
-        ["doc_id", "text"])
-    store = simhash_store(old)
-
-    new = spark.createDataFrame(
-        [(10, base),                                   # exact copy
-         (11, base.replace("lazy", "sleepy")),          # near copy
-         (12, "unrelated musings on sourdough hydration ratios and "
-              "oven spring with a dutch oven preheat"),
-         (13, "unrelated musings on sourdough hydration ratios and "
-              "oven spring with a dutch oven preheat"),  # within-batch dup
-         (14, "completely fresh subject matter nine planets orbit data")],
-        ["doc_id", "text"])
-    d = 3
-    out = sorted(r.doc_id for r in
-                 simhash_dedup_incremental(new, store,
-                                           max_hamming=d).collect())
-
-    # brute-force reference over the actual sketches
-    old_sims = [r.sim for r in store.collect()]
-    new_sims = {r.k: r.sim for r in simhash_store(new).collect()}
-
-    def ham(a, b):
-        return bin((a ^ b) & 0xFFFFFFFFFFFFFFFF).count("1")
-
-    losers = {k for k, s in new_sims.items()
-              if any(ham(s, o) <= d for o in old_sims)
-              or any(ham(s, new_sims[j]) <= d for j in new_sims if j < k)}
-    assert out == sorted(set(new_sims) - losers)
-    assert 10 in losers and 13 in losers          # exact + within-batch
-    assert 14 in set(out)                          # fresh doc survives
-    plan = simhash_dedup_incremental(new, store, max_hamming=d) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-
-    # the generalized Manku blocking (n_blocks > d+1: combination keys,
-    # the 10^12-doc bucket-size knob) must find the SAME pairs — the
-    # pigeonhole guarantees no candidate is lost at any block count
-    out8 = sorted(r.doc_id for r in
-                  simhash_dedup_incremental(new, store, max_hamming=d,
-                                            n_blocks=8).collect())
-    assert out8 == out
-    with pytest.raises(ValueError, match="n_blocks"):
-        simhash_dedup_incremental(new, store, max_hamming=3, n_blocks=3)
 
 
 def test_preprocess_corpus_incremental_store(spark):
