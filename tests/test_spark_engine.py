@@ -4,15 +4,20 @@ plus end-to-end behaviors of the two-pass design and the UDF fallback."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from gojsonschema_spark.core.jsonvalue import dump_lexical
-from gojsonschema_spark.core.suite import load_cases
+from gojsonschema_spark.core.suite import SUITE_ROOT, load_cases
 from gojsonschema_spark.spark.engine import SparkValidator
 
 pytestmark = pytest.mark.spark
+
+needs_suite = pytest.mark.skipif(
+    not os.path.isdir(SUITE_ROOT),
+    reason=f"JSON-Schema-Test-Suite not found at {SUITE_ROOT}")
 
 
 def _column_plan_corpus():
@@ -46,6 +51,7 @@ def _column_plan_corpus():
     return corpus
 
 
+@needs_suite
 def test_column_plan_differential_vs_suite(spark):
     """Every column-plan-supported suite schema must reproduce the golden
     verdicts on Spark — one batched job per chunk of schemas."""
@@ -81,6 +87,7 @@ def test_column_plan_differential_vs_suite(spark):
     assert not mismatches, f"{len(mismatches)} mismatches:\n" + "\n".join(mismatches[:40])
 
 
+@needs_suite
 def test_hybrid_schemas_end_to_end_vs_golden(spark):
     """Every suite schema that compiles to a HYBRID plan (frontier
     detector present) must reproduce the golden verdicts through the full

@@ -9,11 +9,16 @@ reference's TestSuite walk skips.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
-from gojsonschema_spark.core.suite import (load_cases, reference_expected,
-                                           run_case_group)
+from gojsonschema_spark.core.suite import (SUITE_ROOT, load_cases,
+                                           reference_expected, run_case_group)
 
+if not os.path.isdir(SUITE_ROOT):
+    pytest.skip(f"JSON-Schema-Test-Suite not found at {SUITE_ROOT}",
+                allow_module_level=True)
 
 
 def _groups():
